@@ -11,6 +11,7 @@ duplicate-preserving list of (name, value) byte pairs — never a map
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import lru_cache
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -37,6 +38,32 @@ RECORD_SCHEMA = T.StructType(
         T.StructField("body", T.BinaryType(), True),
     ]
 )
+
+
+@lru_cache(maxsize=None)
+def arrow_record_schema():
+    """``RECORD_SCHEMA`` as a ``pyarrow.Schema`` with the same
+    nullability and the ``list<element: struct<name, value>>`` header
+    layout Spark's parquet writer produces, so a record file written on
+    the driver is indistinguishable from one a Spark job wrote (the
+    Spark row metadata rides along for schema-less Spark readers)."""
+    import pyarrow as pa
+
+    header = pa.struct(
+        [pa.field("name", pa.binary(), False), pa.field("value", pa.binary(), False)]
+    )
+    return pa.schema(
+        [
+            pa.field("basin", pa.string(), False),
+            pa.field("stream", pa.string(), False),
+            pa.field("seq_num", pa.int64(), False),
+            pa.field("timestamp", pa.int64(), False),
+            pa.field("headers", pa.list_(pa.field("element", header, True)), False),
+            pa.field("body", pa.binary(), True),
+        ],
+        metadata={"org.apache.spark.sql.parquet.row.metadata": RECORD_SCHEMA.json()},
+    )
+
 
 # hard caps (common/src/caps.rs:8-16, common/src/stream.rs:213-268)
 MAX_BATCH_RECORDS = 1000

@@ -6,10 +6,12 @@ Architecture (vs the reference):
 - The reference serializes all per-stream work in a dedicated actor
   (``lite/src/backend/streamer.rs``). Here the per-stream hot state
   (tail, fencing token, trim point, running max timestamp) is a small
-  driver-side dict — the actor's memoized slot — while every data
-  movement is a DataFrame: appends write parquet (the durability
-  boundary, like a SlateDB WriteBatch commit), reads are pushed-down
-  parquet scans.
+  driver-side dict — the actor's memoized slot. A unary append writes
+  one parquet file from the driver (the durability boundary, like a
+  SlateDB WriteBatch commit) and live followers are served from an
+  in-memory broadcast of the latest batches, so the unary serve path
+  runs no Spark job; every other data movement is a DataFrame: bulk
+  appends are a Spark write, reads are pushed-down parquet scans.
 - API appends (≤1000 records / ≤1 MiB, ``common/src/caps.rs``) are
   sequenced under the single-writer discipline exactly like the actor;
   the distributed scale path is :meth:`bulk_append`, which sequences
@@ -30,10 +32,10 @@ import re
 import threading
 import time
 from collections import defaultdict
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Row, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from s2_spark.catalog import Catalog
@@ -50,6 +52,8 @@ from s2_spark.model import (
     Record,
     RECORD_SCHEMA,
     SeqNumMismatch,
+    arrow_record_schema,
+    metered_size_bytes,
     metered_size_col,
 )
 
@@ -173,6 +177,17 @@ class SessionEvent:
     last_event_id: Optional[LastEventId] = None  # batch events only
 
 
+# the Row shapes a storage read's collect() returns: the follow
+# broadcast hands followers the same objects
+_HeaderRow = Row("name", "value")
+_RecordRow = Row(*RECORD_SCHEMA.names)
+_BucketedRecordRow = Row(*RECORD_SCHEMA.names, "bucket")
+
+#: unary batches a live follower may lag and still be served from the
+#: in-memory follow broadcast (lite/src/backend/mod.rs:27)
+FOLLOWER_MAX_LAG = 25
+
+
 @dataclass
 class _StreamState:
     """The streamer actor's hot state (streamer.rs:55, core.rs:101-161)."""
@@ -181,6 +196,13 @@ class _StreamState:
     last_ts: int = 0
     fencing_token: str = ""
     trim_point: int = 0
+    # the follow broadcast (read.rs:183-240, streamer.rs:571-611): the
+    # Rows of the last FOLLOWER_MAX_LAG unary batches, one tuple per
+    # batch, replaced whole under the meta lock. Valid only while its
+    # last record is tail_seq - 1; a tail advanced any other way
+    # (bulk_append) leaves it stale, and a recovered or evicted state
+    # starts without one
+    follow: tuple = field(default=(), compare=False, repr=False)
 
 
 class StreamStore:
@@ -1071,46 +1093,96 @@ class StreamStore:
                 # clamp to seq+1 — a trim may trim its own record;
                 # regressions ignored (streamer.rs:369-389)
                 new_trim = max(new_trim, min(requested, seq + 1))
-            rows.append((basin, stream, seq, ts, rec.headers, rec.body))
+            rows.append(
+                _RecordRow(
+                    basin,
+                    stream,
+                    seq,
+                    ts,
+                    [_HeaderRow(bytes(n), bytes(v)) for n, v in rec.headers],
+                    bytes(rec.body),
+                )
+            )
             seq += 1
 
-        # durable commit — one parquet write per append batch
-        df = self._local_records_df(rows)
-        if self.bucket_count:
-            df = df.withColumn(
-                "bucket", F.lit(self._bucket_of(basin, stream)).cast("int")
-            )
-        self._staged_append_write(
-            df.coalesce(1), ["bucket"] if self.bucket_count else None
-        )
+        # durable commit — one parquet file per append batch
+        bkt = self._bucket_of(basin, stream) if self.bucket_count else None
+        self._staged_commit(lambda stage: self._write_batch_file(stage, rows, bkt))
         self._data_seen = True
         self._invalidate_records()
 
+        if bkt is not None:
+            # the follow broadcast serves what a storage read returns,
+            # and a bucketed read carries the inferred partition column
+            rows = [_BucketedRecordRow(*r, bkt) for r in rows]
         ack = AppendAck(
             start_seq=st.tail_seq,
             end_seq=seq,
             tail_seq=seq,
-            start_ts=rows[0][3],
-            end_ts=rows[-1][3],
+            start_ts=rows[0].timestamp,
+            end_ts=rows[-1].timestamp,
         )
         # advance the four state fields as ONE atomic step under the
         # meta lock: readers snapshot (tail, trim) as a pair
         # (:meth:`_st_snapshot`), and an unsynchronized reader between
         # the tail and trim assignments would observe a state no
         # sequential execution produces (the torn-read class the
-        # round-12 soak caught on the read path)
+        # round-12 soak caught on the read path). The follow broadcast
+        # is fed in the same step, restarting when a tail advance it
+        # never saw (bulk_append) left it stale
         with self._meta_mu:
+            kept = st.follow
+            if kept and kept[-1][-1].seq_num + 1 != st.tail_seq:
+                kept = ()
+            st.follow = (*kept, tuple(rows))[-FOLLOWER_MAX_LAG:]
             st.tail_seq = seq
             st.last_ts = last_ts
             st.fencing_token = new_token
             st.trim_point = new_trim
         return ack
 
+    def _write_batch_file(self, stage: str, rows: list, bucket: int | None) -> None:
+        """Write one unary batch as a single parquet file under
+        ``stage`` (in its ``bucket=N`` subdirectory in the bucketed
+        layout) with pyarrow on the driver: no Spark job, and a file a
+        Spark write of the same rows would produce column for column
+        (:func:`~s2_spark.model.arrow_record_schema`, snappy)."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        schema = arrow_record_schema()
+        table = pa.Table.from_arrays(
+            [pa.array(col, type=f.type) for col, f in zip(zip(*rows), schema)],
+            schema=schema,
+        )
+        rel = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+        if bucket is not None:
+            rel = os.path.join(f"bucket={bucket}", rel)
+        path = self._mf_backend.spark_path(os.path.join(stage, rel))
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        pq.write_table(table, path, compression="snappy")
+
     def _staged_append_write(
         self, df: DataFrame, partition_cols, timings: dict | None = None
     ) -> None:
-        """Land an append batch's parquet into ``base_dir`` via a
+        """Land a bulk batch's parquet into ``base_dir``: the Spark
+        write of :meth:`_staged_commit`."""
+        writer = df.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        self._staged_commit(
+            lambda stage: writer.parquet(self._mf_backend.spark_path(stage)),
+            timings,
+        )
+
+    def _staged_commit(self, write, timings: dict | None = None) -> None:
+        """Commit an append batch's parquet into ``base_dir`` via a
         PRIVATE staging dir + rename, never Hadoop's shared committer.
+        ``write(stage)`` produces the part files under ``stage`` — a
+        Spark job for :meth:`bulk_append`, one driver-side pyarrow file
+        for a unary append (:meth:`_write_batch_file`).
 
         ``mode("append").parquet(base_dir)`` stages every concurrent
         job under the SAME ``{base_dir}/_temporary/0`` root, and one
@@ -1119,21 +1191,21 @@ class StreamStore:
         design, streamer.rs's actor-per-stream discipline) could fail
         each other's durable commit with FileNotFoundException (found
         live by the multi-stream linearizability soak, r12). Here each
-        job writes to its own ``_stage-{pid}-{uuid}`` dir beside the
-        data (underscore prefix → invisible to every listing, Spark's
-        and ours), then the produced part files are renamed into
-        place — rename is atomic per file, staging roots are never
-        shared (safe across processes too, not just threads), and the
-        single-append path stays single-file (coalesce(1)) so its
-        commit is one atomic rename, exactly the old visibility
-        contract. Bulk batches rename multiple files; a crash mid-move
-        leaves a durable per-FILE subset — the same unknown-outcome
-        envelope the committer gave (its job commit was also a
-        file-by-file move) and what crash recovery already models. For
-        batches whose per-stream rows fit one sequencing chunk (the
-        overwhelmingly common case) that subset is a per-stream seq
-        prefix; a >SEQ_CHUNK_WIDTH single-stream batch can in
-        principle land a later chunk's file without an earlier one's
+        batch is written to its own ``_stage-{pid}-{uuid}`` dir beside
+        the data (underscore prefix → invisible to every listing,
+        Spark's and ours), then the produced part files are renamed
+        into place — rename is atomic per file, staging roots are never
+        shared (safe across processes too, not just threads), and a
+        unary batch is one file, so its commit is one atomic rename and
+        no reader ever sees it partly written. Bulk batches rename
+        multiple files; a crash mid-move leaves a durable per-FILE
+        subset — the same unknown-outcome envelope the committer gave
+        (its job commit was also a file-by-file move) and what crash
+        recovery already models. For batches whose per-stream rows fit
+        one sequencing chunk (the overwhelmingly common case) that
+        subset is a per-stream seq prefix; a >SEQ_CHUNK_WIDTH
+        single-stream batch can in principle land a later chunk's file
+        without an earlier one's
         (tests/test_sim.py::test_sim_staged_append_kill_point pins the
         prefix envelope at sim scale). Manifest mode closes this
         structurally: the batch is invisible until its single
@@ -1151,20 +1223,17 @@ class StreamStore:
         stage = os.path.join(
             self.base_dir, f"_stage-{os.getpid()}-{uuid.uuid4().hex}"
         )
-        writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
         renamed: list[str] = []
         _t = time.perf_counter
         try:
-            # Spark writes the stage THROUGH the backend location
+            # the stage is written THROUGH the backend location
             # (executors PUT part files directly against the bucket on
             # an object store); the finalize loop then lands each part
             # on its final key — an atomic rename locally, a
             # server-side COPY+DELETE on an object store (atomicity is
             # not needed there: visibility is the manifest publish)
             _t0 = _t()
-            writer.parquet(bk.spark_path(stage))
+            write(stage)
             if timings is not None:
                 timings["parquet_sec"] = round(_t() - _t0, 3)
             _t0 = _t()
@@ -1182,25 +1251,6 @@ class StreamStore:
                 timings["publish_sec"] = round(_t() - _t0, 3)
         finally:
             bk.remove_tree(stage)
-
-    def _local_records_df(self, rows: list[tuple]) -> DataFrame:
-        """Sequenced record rows as a DataFrame, via an Arrow-backed
-        local relation: the driver converts the batch to Arrow record
-        batches and ships a LocalRelation — no Python workers at
-        execution, and far less per-append plan-analysis cost than the
-        two alternatives. Measured on a 10-record append write
-        (local[8], p50 of 10 reps): Arrow/pandas 115 ms, inline
-        struct-literal plan 376 ms (analysis of a fresh literal tree
-        per append), ``createDataFrame(list)`` 1181 ms (scans a Python
-        RDD, spinning Python workers per append). The ack path IS this
-        write, so the conversion choice is the ack latency floor."""
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            rows,
-            columns=["basin", "stream", "seq_num", "timestamp", "headers", "body"],
-        )
-        return self.spark.createDataFrame(pdf, RECORD_SCHEMA)
 
     # default per-stream sequencing chunk (in order-col units): with a
     # dense order column this is records/chunk — 4096 × 8 KiB records
@@ -1841,10 +1891,14 @@ class StreamStore:
           383-386); pass a scalar ``heartbeat_s`` for a fixed cadence,
           or ``rng`` (e.g. ``random.Random(seed)``) for a
           deterministic randomized one;
-        - a follower can always fall back to catch-up from storage (the
-          broadcast-lag path, read.rs:219-223, FOLLOWER_MAX_LAG=25 in
-          lite/src/backend/mod.rs:27, is inherent here: every batch
-          reads storage, so a lagged session simply catches up);
+        - a caught-up follower is served from the in-memory follow
+          broadcast: the Rows of the stream's last ``FOLLOWER_MAX_LAG``
+          (25, lite/src/backend/mod.rs:27) unary batches, kept by the
+          append that committed them (:meth:`_follow_batch`) — no Spark
+          job. A follower further behind, or one whose range the
+          broadcast no longer covers (a ``bulk_append``, a recovered or
+          evicted stream state), catches up with a storage read: the
+          broadcast-lag path, read.rs:219-223;
         - ``wait_s=None`` means no follow: the session ends at the tail.
 
         Resume: each batch event carries a :class:`LastEventId`
@@ -1944,8 +1998,6 @@ class StreamStore:
             return max(total - done, 0)
 
         def metered(row) -> int:
-            from s2_spark.model import metered_size_bytes
-
             return metered_size_bytes(row.headers, row.body)
 
         wait_deadline: float | None = None
@@ -1961,13 +2013,15 @@ class StreamStore:
                     bytes=rem_bytes,
                     until=limit.until,
                 )
-                rows = self.read(
-                    basin,
-                    stream,
-                    ReadStart(seq_num=start_seq, clamp=True),
-                    batch_limit,
-                    audit=False,  # the session op was logged at open
-                ).collect()
+                rows = self._follow_batch(basin, stream, start_seq, batch_limit)
+                if rows is None:
+                    rows = self.read(
+                        basin,
+                        stream,
+                        ReadStart(seq_num=start_seq, clamp=True),
+                        batch_limit,
+                        audit=False,  # the session op was logged at open
+                    ).collect()
                 if not rows:
                     # until/bytes bound cut everything that remains
                     return
@@ -2000,6 +2054,47 @@ class StreamStore:
                     yield SessionEvent("heartbeat", (), tail)
                 slp(min(poll_s, max(wait_deadline - now, 0)))
 
+    def _follow_batch(
+        self, basin: str, stream: str, start_seq: int, limit: ReadLimit
+    ) -> list | None:
+        """The follow broadcast's answer to the session read
+        ``read(basin, stream, ReadStart(start_seq, clamp=True), limit)
+        .collect()``: the same rows, from the stream's in-memory tail
+        batches, when they cover ``[max(start_seq, trim), tail)`` of
+        one ``(tail, trim)`` snapshot; ``None`` when they do not (the
+        caller reads storage). ``count``, ``bytes`` and ``until``
+        apply as in :meth:`read`: ``until`` filters, the bytes budget
+        keeps the records whose running metered total fits it (none if
+        the first is over), and ``count`` caps the result."""
+        st = self._st(basin, stream)
+        with self._meta_mu:
+            tail, trim, batches = st.tail_seq, st.trim_point, st.follow
+        lo = max(start_seq, trim)
+        if (
+            not batches
+            or batches[-1][-1].seq_num + 1 != tail
+            or batches[0][0].seq_num > lo
+        ):
+            return None
+        rows: list = []
+        total = 0
+        for batch in batches:
+            if batch[-1].seq_num < lo:
+                continue
+            for r in batch:
+                if limit.count is not None and len(rows) >= limit.count:
+                    return rows
+                if r.seq_num < lo:
+                    continue
+                if limit.until is not None and r.timestamp >= limit.until:
+                    continue
+                if limit.bytes is not None:
+                    total += metered_size_bytes(r.headers, r.body)
+                    if total > limit.bytes:
+                        return rows
+                rows.append(r)
+        return rows
+
     def compact(self, files_per_partition_hint: int | None = None) -> None:
         """Rewrite storage clustered by (basin, stream, seq_num) — the
         OPTIMIZE/compaction analogue of SlateDB's background compaction.
@@ -2019,7 +2114,7 @@ class StreamStore:
 
         self._rewrite_replanned(build)
 
-    def _rewrite_replanned(self, build, attempts: int = 3) -> None:
+    def _rewrite_replanned(self, build, attempts: int = 8) -> None:
         """Run ``self._rewrite(build())``, re-planning on
         :class:`~s2_spark.manifest.PublishConflict`: the conflict means
         a racing rewrite in ANOTHER process delisted files this plan
@@ -2027,7 +2122,13 @@ class StreamStore:
         so the correct response — per the CAS protocol — is to rebuild
         the plan from the fresh generation and try again. Appends that
         landed meanwhile are picked up by the rebuilt listing; bounded
-        attempts keep a pathological rewrite storm loud."""
+        attempts keep a pathological rewrite storm loud. Each re-plan
+        folds the log fresh, so every later conflict is a rewrite
+        another writer committed meanwhile: a burst of N racing
+        rewrites costs at most N + 1 attempts. The bound covers a
+        writer compacting back to back between millisecond unary
+        appends (tests/test_sim.py::test_sim_manifest_two_store_churn
+        races four)."""
         from s2_spark.manifest import PublishConflict
 
         for attempt in range(attempts):
