@@ -59,68 +59,6 @@ def _family(name: str) -> str:
     return m.group(1) if m else name
 
 
-# Queries that entered round 3 without driver evidence. Entries
-# registered AFTER this snapshot must not displace them in the scoring
-# prefix — the round-2 verdict's top priority is clearing this backlog,
-# so newly added queries queue behind it (and get scored with any
-# leftover budget this round, or next round).
-_R03_BACKLOG = frozenset({
-    "f5_map_struct", "f18_array_advanced", "j11_asof_generalized",
-    "sc3_range_scan_seq", "pf3_in_case", "set1_union_all",
-    "sl3_multi_col_sort", "st3_tail_offset", "str3_session_window",
-    "tpch6_revenue_delta", "w1_row_number", "f19_math_extra",
-    "sc4_range_scan_ts", "set2_intersect", "st4_clamp",
-    "str4_watermark_survivors", "tpch10_returned_items", "w2_rank",
-    "set3_except", "st5_trim_visibility", "str5_stateful_dedup",
-    "tpch4_order_priority", "w3_lag_regress", "st6_retention_cutoff",
-    "str6_command_fold", "tpch12_shipmode_classes", "w4_running_max",
-    "st7_append_ack", "str7_stream_static_join", "tpch14_promo_ratio",
-    "w5_cumulative_bytes", "tpch18_large_orders", "w6_ntile",
-    "tpch7_volume_shipping", "w7_max_by", "tpch8_market_share",
-    "tpch13_customer_distribution", "tpch15_top_supplier",
-    "tpch17_small_quantity", "tpch19_discounted_revenue",
-    "tpch22_global_sales_opportunity",
-})
-
-
-# Queries whose implementation changed AFTER their latest driver proof,
-# so their prior hash-matches predate the current code and they re-enter
-# the scoring prefix ahead of untouched proven entries until a fresh
-# proof lands.
-#
-# Round 15: empty — every change that round was store-protocol
-# (structural resurrection guard, data-plane backend seam, sandbox
-# object store, cross-process soak) or bench-harness (interleaved
-# s2bench legs, per-section loadavg gates); no registry query plan or
-# oracle changed, so nothing's proof predates its code. The scoring
-# prefix therefore falls straight through to the aged tail, which
-# fronts the 15 remaining r10 proofs (ag10, ag16-ag21, x51-x53,
-# x55-x59) then the r11 cohort — exactly the VERDICT r14 task-5
-# rotation (done = nothing older than r11 after this round).
-#
-# (Round 14 rescored x68/x79/x82 — contamination window re-plan — and
-# f3/f19 — total-order oracle fix; all five re-proved in r14.)
-#
-# Round 16 re-planned eight queries (all proven oracle-identical at
-# sf0.001/0.01/0.1 in-session, but their latest DRIVER proofs predate
-# the new plans): f13's two-pass rank percentiles, the x62/x66/x71/
-# x74/x75 single-evaluation barriers, and the x9/x16 pair-keyed
-# distinct in lsh_candidate_pairs. The session-level durability knob
-# (checkpoint.barrier) is plan-identical in default local mode —
-# pinned by tests/test_checkpoint.py — so its other callers keep
-# their proofs.
-_R16_RESCORE: frozenset[str] = frozenset({
-    "f13_percentiles",
-    "x9_minhash_neardup",
-    "x16_ngram_jaccard_neardup",
-    "x62_heaps_vocab_growth",
-    "x66_pmi_collocations",
-    "x71_source_drift_matrix",
-    "x74_conversion_funnel",
-    "x75_retention_cohorts",
-})
-
-
 def _prioritized(names: list[str]) -> list[str]:
     """Order queries so the driver's per-round scoring budget lands on
     the entries that need evidence.
@@ -157,24 +95,14 @@ def _prioritized(names: list[str]) -> list[str]:
                     rr.append(b.pop(0))
         return rr
 
-    backlog = [n for n in fresh if n in _R03_BACKLOG]
-    newer = [n for n in fresh if n not in _R03_BACKLOG]
-    rescore = [n for n in proven if n in _R16_RESCORE]
-    stable = [n for n in proven if n not in _R16_RESCORE]
-    # age the stable tail: oldest proof round first, families
+    # age the proven tail: oldest proof round first, families
     # round-robined within each round so one big old family can't
     # monopolize the refresh budget
     by_round: dict[int, list[str]] = {}
-    for n in stable:
+    for n in proven:
         by_round.setdefault(proof_round.get(n, 0), []).append(n)
     aged = [n for rnd in sorted(by_round) for n in _round_robin(by_round[rnd])]
-    return (
-        failed
-        + _round_robin(backlog)
-        + _round_robin(newer)
-        + rescore
-        + aged
-    )
+    return failed + _round_robin(fresh) + aged
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -45,6 +45,12 @@ def get_spark(
         # fixtures write TIMESTAMP(NANOS) which Spark's vectorized reader
         # rejects; read as i64 nanos and normalize in tables.t()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # generated-class cache (a static, JVM-wide conf). Spark keeps 100
+        # entries; one round of the batch benchmark (12 headline queries,
+        # two bulk appends, a streaming mirror) needs about 260 distinct
+        # classes, so at 100 the LRU evicts every class before its plan
+        # runs again and each repeat re-runs Janino and the JIT on it.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1290,8 +1290,11 @@ class StreamStore:
         counter). Non-numeric order columns fall back to one chunk per
         stream (the pre-chunk plan).
 
-        Each stream's resolved timestamping config rides the same
-        broadcast join (streamer.rs:1121-1149 matrix): ``arrival``
+        Each stream's resolved timestamping config and the call's
+        arrival time ride the same per-chunk offsets rows, so the write
+        plan has one broadcast join and no per-call primitive literal
+        (its generated code is compiled once and reused by every later
+        call; streamer.rs:1121-1149 matrix): ``arrival``
         overrides client timestamps, ``client-require`` rejects a batch
         with missing timestamps, ``timestamping_uncapped`` skips the
         min(client, arrival) cap. With ``validate`` (default), record
@@ -1388,15 +1391,10 @@ class StreamStore:
         # register every touched stream (auto-create semantics, A23) and
         # resolve each one's effective config for the join below
         keys = list(per_stream)
-        cfg_rows = []
         cfg_by_key = {}
         for b, s in keys:
             self.catalog.ensure_stream_for(b, s, "append")
-            cfg = self.catalog.resolve_config(b, s)
-            cfg_by_key[(b, s)] = cfg
-            cfg_rows.append(
-                (b, s, cfg.timestamping_mode, bool(cfg.timestamping_uncapped))
-            )
+            cfg_by_key[(b, s)] = self.catalog.resolve_config(b, s)
         for k, v in per_stream.items():
             cfg = cfg_by_key[k]
             if cfg.timestamping_mode == "client-require" and v["n_null_ts"]:
@@ -1437,56 +1435,66 @@ class StreamStore:
 
             # phase 2 of the prefix, in driver math: each chunk's starting
             # seq (tail + earlier chunks' counts) and timestamp floor
-            # (max of last_ts and earlier chunks' ts0 maxima)
+            # (max of last_ts and earlier chunks' ts0 maxima). Each row
+            # also carries its stream's timestamping config and the
+            # call's arrival, so the write plan holds no per-call
+            # primitive literal: Spark inlines a long literal into the
+            # generated Java, which would make every call compile fresh
+            # classes; rows of a relation are data, not source.
             off_rows = []
             running: dict[tuple[str, str], tuple[int, int]] = {}
             for r in cstats:
                 k = (r["basin"], r["stream"])
+                cfg = cfg_by_key[k]
                 if k not in running:
                     st = self._st(*k)
                     running[k] = (st.tail_seq, st.last_ts)
                 seq_off, ts_floor = running[k]
-                off_rows.append((k[0], k[1], r["_chunk"], seq_off, ts_floor))
+                off_rows.append((
+                    k[0], k[1], r["_chunk"], seq_off, ts_floor,
+                    cfg.timestamping_mode, bool(cfg.timestamping_uncapped), arrival,
+                ))
                 running[k] = (
                     seq_off + r["n"],
-                    max(ts_floor, _chunk_ts_max(r, cfg_by_key[k])),
+                    max(ts_floor, _chunk_ts_max(r, cfg)),
                 )
             offsets = _lit_rows_df(
                 self.spark,
-                off_rows or [("", "", 0, 0, 0)],
+                off_rows or [("", "", 0, 0, 0, "client-prefer", False, arrival)],
                 [("basin", "string"), ("stream", "string"), ("_chunk", "long"),
-                 ("seq_off", "long"), ("ts_floor", "long")],
-            )
-            cfgs = _lit_rows_df(
-                self.spark,
-                cfg_rows or [("", "", "client-prefer", False)],
-                [("basin", "string"), ("stream", "string"),
-                 ("ts_mode", "string"), ("ts_uncapped", "boolean")],
+                 ("seq_off", "long"), ("ts_floor", "long"),
+                 ("ts_mode", "string"), ("ts_uncapped", "boolean"),
+                 ("arrival", "long")],
             )
             w = W.partitionBy("basin", "stream", "_chunk").orderBy(order_col)
             wmax = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-            client = F.coalesce("timestamp", F.lit(arrival))
+            arr = F.col("arrival")
+            client = F.coalesce("timestamp", arr)
             ts0 = (
-                F.when(F.col("ts_mode") == "arrival", F.lit(arrival))
+                F.when(F.col("ts_mode") == "arrival", arr)
                 .when(F.col("ts_uncapped"), client)
-                .otherwise(F.least(client, F.lit(arrival)))
+                .otherwise(F.least(client, arr))
             )
+            # one broadcast join, then the whole sequencing projection in
+            # one select (a withColumn chain re-analyses the plan per step)
             out = (
                 df.withColumn("_chunk", chunk_col)
                 .join(F.broadcast(offsets), ["basin", "stream", "_chunk"], "left")
-                .join(F.broadcast(cfgs), ["basin", "stream"], "left")
-                .withColumn("seq_off", F.coalesce("seq_off", F.lit(0)))
-                .withColumn("ts_floor", F.coalesce("ts_floor", F.lit(0)))
-                .withColumn("seq_num", F.row_number().over(w) - 1 + F.col("seq_off"))
-                .withColumn("ts0", ts0)
-                .withColumn(
-                    "timestamp", F.greatest(F.max("ts0").over(wmax), F.col("ts_floor"))
+                .select(
+                    "basin",
+                    "stream",
+                    (F.row_number().over(w) - 1 + F.coalesce("seq_off", F.lit(0)))
+                    .alias("seq_num"),
+                    F.greatest(
+                        F.max(ts0).over(wmax), F.coalesce("ts_floor", F.lit(0))
+                    ).alias("timestamp"),
+                    "headers",
+                    "body",
                 )
-                .select("basin", "stream", "seq_num", "timestamp", "headers", "body")
             )
             if timings is not None:
                 # driver-side setup between admission and write: catalog
-                # resolution, state recovery, literal-frame + plan build
+                # resolution, state recovery, offsets frame + plan build
                 timings["plan_sec"] = round(time.perf_counter() - _t0, 3)
             _t0 = time.perf_counter()
             if self.bucket_count:

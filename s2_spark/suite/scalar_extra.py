@@ -145,13 +145,16 @@ def f13(spark, sf_dir):
     # pos = q*(n-1); lo/hi = floor/ceil; result = lowerKey when hi==lo
     # or the keys are equal, else (hi-pos)*lowerKey + (pos-lo)*higherKey
     # — proven bit-identical to F.percentile on the fixtures and the
-    # DuckDB oracle hash at sf0.001/0.01/0.1.
+    # DuckDB oracle hash at sf0.001/0.01/0.1. NULL prices are kept as
+    # one (flag, NULL) row with c = 0: it covers no rank, so it never
+    # feeds a percentile, but a flag whose prices are all NULL still
+    # yields its row with NULL results, as F.percentile and DuckDB do.
     from pyspark.sql import Window
 
-    li = t(spark, sf_dir, "lineitem").filter(F.col("l_extendedprice").isNotNull())
+    li = t(spark, sf_dir, "lineitem")
     vc = li.groupBy(
         "l_returnflag", F.col("l_extendedprice").alias("v")
-    ).agg(F.count("*").alias("c"))
+    ).agg(F.count("l_extendedprice").alias("c"))
     wcum = (
         Window.partitionBy("l_returnflag")
         .orderBy("v")

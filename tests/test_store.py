@@ -424,6 +424,20 @@ def test_bulk_append_honors_timestamping_config(store, spark):
     assert ts_of("unc") == 999_999  # uncapped keeps the future ts
     assert ts_of(STREAM) == 5000  # capped at arrival
     assert store._st(BASIN, "unc").last_ts == 999_999
+    # a later bulk takes the NEW arrival: arrival is data of each call,
+    # never a value kept from the first call's plan or broadcast
+    store.clock.ms = 9000
+    rows = [
+        (BASIN, "arr", 456, [], b"d", 0),
+        (BASIN, "unc", 1_000_500, [], b"e", 0),
+        (BASIN, STREAM, 999_999, [], b"f", 0),
+        (BASIN, STREAM, None, [], b"g", 1),
+    ]
+    store.bulk_append(spark.createDataFrame(rows, _BULK_SCHEMA))
+    ts_all = lambda s: [r.timestamp for r in store.read(BASIN, s).collect()]  # noqa: E731
+    assert ts_all("arr") == [5000, 9000]
+    assert ts_all("unc") == [999_999, 1_000_500]
+    assert ts_all(STREAM) == [5000, 9000, 9000]
 
 
 def test_bulk_append_client_require_rejects_missing_ts(store, spark):

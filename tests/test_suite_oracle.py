@@ -123,3 +123,36 @@ def test_x79_catches_reformatted_leakage_x68_misses(spark, tmp_path):
     }
     assert verbatim.get("test", 0) == 0, verbatim
     assert normalized.get("test", 0) == 1, normalized
+
+
+def test_f13_keeps_a_flag_whose_prices_are_all_null(spark, tmp_path):
+    """``quantile_cont`` and ``F.percentile`` keep a group whose values
+    are all NULL, with NULL results; the rank plan of f13 must not drop
+    it by filtering NULL prices before grouping. Synthetic fixture
+    because the driver's lineitem has no NULL price."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        ("A", 1.0), ("A", 2.0), ("A", 4.0), ("A", None),
+        ("N", None), ("N", None),
+        ("R", 7.5),
+    ]
+    table = pa.table(
+        {
+            "l_returnflag": pa.array([r[0] for r in rows]),
+            "l_extendedprice": pa.array([r[1] for r in rows], pa.float64()),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "lineitem.parquet"))
+
+    q = QUERIES["f13_percentiles"]
+    df = q.spark(spark, str(tmp_path))
+    got = {r["l_returnflag"]: r for r in df.collect()}
+    assert sorted(got) == ["A", "N", "R"]
+    assert all(got["N"][c] is None for c in ("p50", "p90", "mn", "mx"))
+    con = duck_connect(str(tmp_path))
+    try:
+        compare(df, con, q.oracle)
+    finally:
+        con.close()
