@@ -9,7 +9,7 @@ Layout:
     registry   — declared-query registry (Spark callable + DuckDB oracle SQL)
     suite/     — SURVEY.md §2.B query inventory, one module per family
     store      — batch data plane (append/read/check_tail/trim/fence/list)
-    manifest   — manifest-MVCC generation log (StreamStore(manifest=True))
+    manifest   — manifest-MVCC generation log: the store's visibility
     catalog    — basins/streams metadata + 3-layer config resolution
     streaming/ — Structured Streaming source/sink/live-tail/stateful ops
     functions/ — extension operators (dedup, similarity, text, multimodal)

@@ -1,8 +1,8 @@
 """Manifest-MVCC visibility log for :class:`s2_spark.store.StreamStore`.
 
-With ``StreamStore(..., manifest=True)`` record visibility is defined
-by a monotonically numbered generation log under ``<base>/_manifest``
-instead of the data directory's listing. Each generation file
+A :class:`~s2_spark.store.StreamStore`'s record visibility is defined
+by a monotonically numbered generation log under ``<base>/_manifest``,
+never by the data directory's listing. Each generation file
 ``gen-%012d.json`` holds ``{"gen": N, "add": [relpaths], "remove":
 [relpaths], "ts_ms": publish-time}`` and every
 :data:`CHECKPOINT_EVERY`-th generation also embeds ``"files"`` — the
@@ -14,15 +14,13 @@ generation number — a hard-linked O_EXCL create locally, a
 conditional PUT (``If-None-Match: *``) on an object store — which is
 the whole point of the layout: an append or compaction commits by
 publishing a generation, never by renaming data files out from under
-readers. Consequences, relative to the rename-swap protocol
-(store._swap_in):
+readers. Consequences:
 
-- no swap window exists — a reader's file list is immutable once
-  captured, and files a later generation delists stay on disk until
-  :meth:`StreamStore.vacuum` removes them past a grace horizon, so an
-  in-flight batch plan pinned to an older generation keeps executing
-  (no ``FileNotFoundException`` mid-job, no ``compaction_paused()``
-  coordination, no listing latch);
+- a reader's file list is immutable once captured, and files a later
+  generation delists stay on disk until :meth:`StreamStore.vacuum`
+  removes them past a grace horizon, so an in-flight batch plan pinned
+  to an older generation keeps executing (no
+  ``FileNotFoundException`` mid-job, no pause around compaction);
 - crash atomicity is free — a crash anywhere before the publish
   leaves only orphaned (invisible) data files for vacuum to sweep; a
   crash after it leaves a fully committed generation. There is no

@@ -213,7 +213,6 @@ class StreamStore:
         catalog: Catalog | None = None,
         clock=None,
         bucket_count: int = 0,
-        manifest: bool = True,
         manifest_backend=None,
     ):
         """``bucket_count > 0`` enables the partitioned physical layout:
@@ -226,23 +225,18 @@ class StreamStore:
         both the driver-side and distributed paths compute the same
         bucket.
 
-        ``manifest`` (the DEFAULT since r14) defines visibility by the
-        manifest-MVCC generation log (:mod:`s2_spark.manifest`) instead
-        of directory listings: appends and compactions commit by
-        atomically publishing a generation (multi-writer-safe via the
-        CAS publish loop), compaction needs no rename-over-readers
-        swap (and therefore no ``compaction_paused()`` coordination),
+        Visibility is defined by the manifest-MVCC generation log
+        (:mod:`s2_spark.manifest`), never by a directory listing:
+        appends and compactions commit by atomically publishing a
+        generation (multi-writer-safe via the CAS publish loop), a
+        compaction's consumed files stay on disk for in-flight readers,
         and delisted files are garbage-collected by :meth:`vacuum`.
-        ``manifest=False`` keeps the legacy listing layout (simpler on
-        a plain POSIX directory you never share; the bootstrap
-        migration source). Opening an existing listing-layout
-        directory with the default migrates it in place (a one-time
-        checkpoint publish; no records are rewritten or lost). A
-        directory that already carries a generation log reopens in
-        manifest mode regardless of the flag — the on-disk log, not
-        the constructor argument, is authoritative once created
-        (a listing-mode reopen over a compacted manifest store would
-        see delisted duplicates).
+        Opening a directory of record files that has no generation log
+        yet (written by a store that predates the log) adopts it in
+        place: one checkpoint publish, no record rewritten or lost. A
+        directory that such a store left mid-compaction-swap (a
+        ``<base>.compact`` or ``<base>.trash`` sibling) is refused,
+        since its file set is partial.
 
         ``manifest_backend`` swaps the WHOLE store's storage
         (:class:`s2_spark.manifest.LocalBackend` by default): since
@@ -273,24 +267,22 @@ class StreamStore:
                 f"(marker {_mf.EXTERNAL_BACKEND_MARKER!r}); pass the "
                 f"matching manifest_backend to open it"
             )
-        self.manifest = bool(manifest) or _mf.is_manifest_store(
-            base_dir, self._mf_backend
-        )
-        if not self.manifest and not getattr(
-            self._mf_backend, "is_local", False
-        ) and manifest_backend is not None:
-            # the listing layout defines visibility by the LOCAL
-            # directory tree — over an object-store backend the two
-            # planes would silently diverge (appends land in the
-            # bucket, reads list the empty local dir)
-            raise RuntimeError(
-                "a non-local manifest_backend requires manifest mode "
-                "(listing visibility cannot span an object store)"
-            )
-        if (
-            manifest_backend is not None
-            and self.manifest
-            and not getattr(manifest_backend, "is_local", False)
+        adopt = not _mf.is_manifest_store(base_dir, self._mf_backend)
+        if adopt:
+            for sibling in (".compact", ".trash"):
+                if os.path.exists(base_dir.rstrip("/") + sibling):
+                    # a listing-layout store crashed mid-swap: its
+                    # consumed files sit in .trash and its compacted
+                    # files in .compact, so adopting the directory would
+                    # silently drop acked records
+                    raise RuntimeError(
+                        f"store {base_dir!r} has no generation log and a "
+                        f"{sibling!r} sibling left by an interrupted "
+                        f"compaction swap; its file set is partial, "
+                        f"refusing to adopt it"
+                    )
+        if manifest_backend is not None and not getattr(
+            manifest_backend, "is_local", False
         ):
             # breadcrumb for path-only readers (streaming footer
             # scanner) and backend-less reopens: the visibility log is
@@ -299,7 +291,7 @@ class StreamStore:
             # and the marker would permanently lock out backend-less
             # reopens (ADVICE r14)
             _mf.mark_external_backend(base_dir)
-        # manifest-mode cache: current (generation, visible relpaths).
+        # cache of the current (generation, visible relpaths).
         # Guarded by _manifest_mu; gen None = not yet folded from disk
         self._manifest_mu = threading.Lock()
         self._mf_gen: int | None = None
@@ -331,23 +323,11 @@ class StreamStore:
         # stream commit one at a time; different streams proceed in
         # parallel
         self._locks: dict[tuple[str, str], threading.Lock] = defaultdict(threading.Lock)
-        # physical-rewrite latch: compaction / retention swaps take it,
-        # and compaction_paused() exposes it so batch jobs can pin a
-        # stable input snapshot against the swap window (RLock: the
-        # retention path may run under a caller's pause)
+        # physical-rewrite latch: compaction, retention and vacuum
+        # serialize on it within this process
         self._rewrite_mu = threading.RLock()
-        # swap latch: held across the swap's driver-side rename phases
-        # and by records_df's listing creation, so no listing can START
-        # inside the consumed-out/compacted-not-yet-in window (a
-        # listing there silently misses records below an acked tail).
-        # Strictly leaf under _rewrite_mu; never held across Spark jobs
-        self._swap_mu = threading.RLock()
         os.makedirs(base_dir, exist_ok=True)
-        # a crash mid-compaction must not surface as an empty store:
-        # finish (or discard) any interrupted _rewrite swap before the
-        # first storage probe below reads base_dir
-        self._swap_recover()
-        if self.manifest and not _mf.is_manifest_store(base_dir, self._mf_backend):
+        if adopt:
             if not getattr(self._mf_backend, "data_is_local", False) and any(
                 rel.endswith(".parquet")
                 for rel, _mt in _mf.LOCAL.walk_files(base_dir)
@@ -365,8 +345,8 @@ class StreamStore:
                     f"migrate with the local backend before pointing it "
                     f"at a bucket"
                 )
-            # migrating an existing listing-mode directory: the flag
-            # alone must never make existing records invisible
+            # adopting an existing listing-layout directory: opening it
+            # must never make existing records invisible
             self._manifest_bootstrap()
         # Hot state is recovered LAZILY, per touched stream: a store
         # opened over existing data probes storage on a stream's first
@@ -375,15 +355,15 @@ class StreamStore:
         # actor-cache shape with its 60 s dormancy eviction
         # (streamer.rs:55) rather than an eager all-streams scan.
         self._data_seen = False
-        # listing/manifest snapshot cache, keyed by the bucket hint
-        # (None = the full table; manifest single-stream reads add one
-        # pruned snapshot per touched bucket). One epoch fences all.
+        # snapshot cache, keyed by the bucket hint (None = the full
+        # table; single-stream reads add one pruned snapshot per
+        # touched bucket). One epoch fences all.
         self._records_cache: dict[int | None, DataFrame] = {}
-        # epoch fencing for the listing cache: bumped by every
-        # invalidation so a reader that started LISTING before a
+        # epoch fencing for the snapshot cache: bumped by every
+        # invalidation so a reader that started FOLDING before a
         # concurrent append cannot cache its pre-append snapshot after
         # the append's invalidation ran (the lost-invalidation race —
-        # every later read would silently serve a listing missing the
+        # every later read would silently serve a snapshot missing the
         # acked records; found by the round-11 linearizability soak)
         self._records_epoch = 0
         self._records_mu = threading.Lock()
@@ -395,9 +375,9 @@ class StreamStore:
         # refreshed to live SQL views on the first append (see
         # attach_views)
         self._stale_view_prefixes: set[str] = set()
-        # prefixes with live record-derived views attached; manifest
-        # mode re-attaches these on every write-side invalidation (the
-        # views snapshot one generation's file list)
+        # prefixes with live record-derived views attached; every
+        # write-side invalidation re-attaches these (the views snapshot
+        # one generation's file list)
         self._attached_view_prefixes: set[str] = set()
         # ops audit meta-stream: one row per served read / session /
         # control op — the input the read-side metric sets aggregate
@@ -465,28 +445,16 @@ class StreamStore:
         return n
 
     def _has_data(self) -> bool:
-        """True once any record file exists. Cached after the first hit:
-        every append path calls this, and a directory walk per append is
-        O(files) — the flag only ever flips False→True (deleting every
-        record later just means reads see an empty DataFrame, which the
-        schema-pinned ``records_df`` read handles). Manifest mode asks
-        the generation log instead of the directory (orphaned unpublished
-        files must not count as data)."""
-        if self._data_seen:
-            return True
-        if self.manifest:
-            if self._manifest_current()[1]:
-                self._data_seen = True
-                return True
-            return False
-        for _, dirs, fs in os.walk(self.base_dir):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-            if any(f.endswith(".parquet") and not f.startswith(("_", ".")) for f in fs):
-                self._data_seen = True
-                return True
-        return False
+        """True once any record file is visible in the generation log
+        (orphaned unpublished files must not count as data). Sticky:
+        the flag only ever flips False→True (deleting every record
+        later just means reads see an empty DataFrame, which the
+        schema-pinned ``records_df`` read handles)."""
+        if not self._data_seen and self._manifest_current()[1]:
+            self._data_seen = True
+        return self._data_seen
 
-    # --- manifest-MVCC visibility (manifest=True) -----------------------
+    # --- manifest-MVCC visibility -----------------------------------------
 
     def _manifest_current(self, refresh: bool = False) -> tuple[int, frozenset]:
         """Current (generation, visible relpath set), folding the log on
@@ -533,8 +501,8 @@ class StreamStore:
         return gen
 
     def _manifest_publish(self, add=(), remove=(), require_visible=False) -> int:
-        """Publish generation N+1 — THE commit point for manifest-mode
-        appends and compactions. One atomic create-if-absent through
+        """Publish generation N+1 — THE commit point for appends and
+        compactions. One atomic create-if-absent through
         the publish backend (:func:`s2_spark.manifest.publish` CAS
         loop); data files named by ``add`` become visible and
         ``remove`` files invisible in the same instant, for every
@@ -574,7 +542,7 @@ class StreamStore:
         log_entry_grace_ms: int = 3_600_000,
         stage_grace_ms: int | None = None,
     ) -> int:
-        """Manifest-mode garbage collection, driven by the generation
+        """Garbage collection, driven by the generation
         LOG: the ``remove`` entries name every delisted file together
         with its delist time (the publishing generation's ``ts_ms``),
         so the hot path deletes from the log — no directory walk, no
@@ -614,8 +582,6 @@ class StreamStore:
         outright while that pid is alive on this host. Runs under
         the rewrite latch so it never races a compaction's own
         staging."""
-        if not self.manifest:
-            raise RuntimeError("vacuum() requires manifest mode")
         from s2_spark import manifest as _mf
 
         # FRESH fold, never the write-through cache: on a shared
@@ -734,8 +700,6 @@ class StreamStore:
                 df = store.read(basin, stream)
                 ...  # hours-long plan; vacuum cannot pull its files
         """
-        if not self.manifest:
-            raise RuntimeError("reader_lease() requires manifest mode")
         from contextlib import contextmanager
 
         from s2_spark import manifest as _mf
@@ -760,10 +724,10 @@ class StreamStore:
         return _lease()
 
     def _manifest_bootstrap(self) -> None:
-        """First manifest-mode open over a directory with existing
-        listing-mode data: publish generation 1 as a checkpoint of the
-        current data files, migrating visibility into the log (the
-        flag alone must never make existing records invisible)."""
+        """First open of a directory with no generation log: publish
+        generation 1 as a checkpoint of the existing data files, moving
+        visibility into the log (adopting a listing-layout directory
+        must never make its records invisible)."""
         existing = [
             rel
             for rel, _mt in self._mf_backend.walk_files(self.base_dir)
@@ -782,29 +746,25 @@ class StreamStore:
         In bucketed layout the partition column rides along so stream
         filters prune directories.
 
-        ``bucket`` (manifest mode only) prunes the EXPLICIT file list
-        to one ``bucket=N`` subtree before the reader is built: a
-        directory listing prunes partitions for free at planning, but
-        a manifest read names every visible file up front, and
-        building a relation over thousands of paths to then read one
-        bucket measurably taxes single-stream reads (2M-record
-        experiment: 3.2 s -> sub-second pre-compaction). Listing mode
-        ignores the hint — partition pruning already does this.
+        ``bucket`` prunes the EXPLICIT file list to one ``bucket=N``
+        subtree before the reader is built: a read names every visible
+        file up front, and building a relation over thousands of paths
+        to then read one bucket measurably taxes single-stream reads
+        (2M-record experiment: 3.2 s -> sub-second pre-compaction).
 
-        The DataFrame (and with it the parquet file listing, which Spark
-        snapshots at read time) is cached between writes: the store is
-        the only writer of its directory, so every append/compaction
-        invalidates it (:meth:`_invalidate_records`) and read-heavy
+        The file list is an immutable snapshot of one generation: no
+        write moves a file a plan has captured (delisted files outlive
+        in-flight plans until :meth:`vacuum`). The DataFrame is cached
+        between writes: every append/compaction of this store
+        invalidates it (:meth:`_invalidate_records`), so read-heavy
         paths — follow sessions polling for new batches above all —
-        skip a full directory re-listing per call. The cache is keyed
-        by the bucket hint (one snapshot per touched bucket, all
-        fenced by the same epoch)."""
-        if not self.manifest:
-            bucket = None  # directory pruning covers listing mode
+        skip a rebuild per call. The cache is keyed by the bucket hint
+        (one snapshot per touched bucket, all fenced by the same
+        epoch)."""
         cached = self._records_cache.get(bucket)
         if cached is not None:
             return cached
-        epoch = self._records_epoch  # BEFORE the listing starts
+        epoch = self._records_epoch  # BEFORE the fold starts
         if self.bucket_count:
             from pyspark.sql import types as T
 
@@ -817,75 +777,43 @@ class StreamStore:
             # schema includes the bucket column in bucketed layout, so
             # an empty-store maintenance rewrite can still partitionBy
             return self.spark.createDataFrame([], schema)
-        if self.manifest:
-            # manifest mode: the generation log, not the directory,
-            # defines visibility. The file list is an immutable
-            # snapshot of one generation — no swap window exists to
-            # latch against (delisted files outlive in-flight plans
-            # until vacuum), which is the entire point of the layout.
-            # basePath keeps the bucket=N partition-column inference
-            # identical to the directory read.
-            _, visible = self._manifest_current()
-            if bucket is not None:
-                prefix = f"bucket={bucket}{os.sep}"
-                visible = frozenset(
-                    rel for rel in visible if rel.startswith(prefix)
-                )
-            if not visible:
-                return self.spark.createDataFrame([], schema)
-            # spark_path maps each visible file to the location Spark
-            # reads it from — identity locally, the object location
-            # (s3a-style URL) on an object-store backend
-            bk = self._mf_backend
-            paths = [
-                bk.spark_path(os.path.join(self.base_dir, rel))
-                for rel in sorted(visible)
-            ]
-            df = (
-                self.spark.read.option(
-                    "basePath", bk.spark_path(self.base_dir)
-                )
-                .schema(schema)
-                .parquet(*paths)
-            )
-            with self._records_mu:
-                if self._records_epoch == epoch:
-                    self._records_cache[bucket] = df
-            return df
-        # listing under the swap latch: the compaction swap's rename
-        # window (consumed files out, compacted files not yet in) is
-        # the one state in which a directory listing silently MISSES
-        # records below an acked tail — the epoch fence keeps such a
-        # listing out of the cache, but the racing caller would still
-        # use it. The latch covers only driver-side renames
-        # (microseconds), never a Spark job; plans listed BEFORE a
-        # swap fail loudly (FileNotFound on the trashed file) rather
-        # than silently, which compaction_paused() exists to manage.
-        with self._swap_mu:
-            if self.bucket_count:
-                df = self.spark.read.schema(schema).parquet(self.base_dir)
-            else:
-                df = self.spark.read.schema(RECORD_SCHEMA).parquet(self.base_dir)
-        # cache only if no writer invalidated while we listed: a df
-        # whose listing raced an append is still fine for THIS caller
-        # (its read is concurrent with that append and may linearize
-        # first) but must never become the served snapshot for reads
-        # that start after the append acked
+        _, visible = self._manifest_current()
+        if bucket is not None:
+            prefix = f"bucket={bucket}{os.sep}"
+            visible = frozenset(rel for rel in visible if rel.startswith(prefix))
+        if not visible:
+            return self.spark.createDataFrame([], schema)
+        # spark_path maps each visible file to the location Spark reads
+        # it from — identity locally, the object location (s3a-style
+        # URL) on an object-store backend. basePath keeps the bucket=N
+        # partition-column inference of a directory read.
+        bk = self._mf_backend
+        paths = [
+            bk.spark_path(os.path.join(self.base_dir, rel)) for rel in sorted(visible)
+        ]
+        df = (
+            self.spark.read.option("basePath", bk.spark_path(self.base_dir))
+            .schema(schema)
+            .parquet(*paths)
+        )
+        # cache only if no writer invalidated while we folded: a df
+        # that raced an append is still fine for THIS caller (its read
+        # is concurrent with that append and may linearize first) but
+        # must never become the served snapshot for reads that start
+        # after the append acked
         with self._records_mu:
             if self._records_epoch == epoch:
-                self._records_cache[None] = df
+                self._records_cache[bucket] = df
         return df
 
     def _invalidate_records(self) -> None:
         with self._records_mu:
             self._records_epoch += 1
             self._records_cache = {}
-        # manifest-mode SQL views snapshot one generation's file list
-        # (a raw path view would double-count delisted files), so each
-        # write-side invalidation re-attaches them — this store object
-        # is the directory's only writer, so the refresh keeps them
-        # exactly as live as the listing layout's path views
-        if self.manifest and self._attached_view_prefixes:
+        # the SQL views snapshot one generation's file list (a raw path
+        # view would double-count delisted files), so each write-side
+        # invalidation re-attaches them
+        if self._attached_view_prefixes:
             for prefix in list(self._attached_view_prefixes):
                 self.attach_views(prefix)
 
@@ -1178,45 +1106,28 @@ class StreamStore:
         )
 
     def _staged_commit(self, write, timings: dict | None = None) -> None:
-        """Commit an append batch's parquet into ``base_dir`` via a
-        PRIVATE staging dir + rename, never Hadoop's shared committer.
-        ``write(stage)`` produces the part files under ``stage`` — a
-        Spark job for :meth:`bulk_append`, one driver-side pyarrow file
-        for a unary append (:meth:`_write_batch_file`).
+        """Commit an append batch: stage its parquet in a PRIVATE dir,
+        move the part files into ``base_dir``, then publish ONE
+        generation that adds them. ``write(stage)`` produces the part
+        files under ``stage`` — a Spark job for :meth:`bulk_append`,
+        one driver-side pyarrow file for a unary append
+        (:meth:`_write_batch_file`).
 
-        ``mode("append").parquet(base_dir)`` stages every concurrent
-        job under the SAME ``{base_dir}/_temporary/0`` root, and one
-        job's commit/cleanup deletes that root recursively — so two
-        appends to DIFFERENT streams (serialized only per-stream by
-        design, streamer.rs's actor-per-stream discipline) could fail
-        each other's durable commit with FileNotFoundException (found
-        live by the multi-stream linearizability soak, r12). Here each
-        batch is written to its own ``_stage-{pid}-{uuid}`` dir beside
-        the data (underscore prefix → invisible to every listing,
-        Spark's and ours), then the produced part files are renamed
-        into place — rename is atomic per file, staging roots are never
-        shared (safe across processes too, not just threads), and a
-        unary batch is one file, so its commit is one atomic rename and
-        no reader ever sees it partly written. Bulk batches rename
-        multiple files; a crash mid-move leaves a durable per-FILE
-        subset — the same unknown-outcome envelope the committer gave
-        (its job commit was also a file-by-file move) and what crash
-        recovery already models. For batches whose per-stream rows fit
-        one sequencing chunk (the overwhelmingly common case) that
-        subset is a per-stream seq prefix; a >SEQ_CHUNK_WIDTH
-        single-stream batch can in principle land a later chunk's file
-        without an earlier one's
-        (tests/test_sim.py::test_sim_staged_append_kill_point pins the
-        prefix envelope at sim scale). Manifest mode closes this
-        structurally: the batch is invisible until its single
-        generation publish, so the commit is all-or-nothing.
+        Each batch stages under its own ``_stage-{pid}-{uuid}`` dir
+        beside the data (underscore prefix → invisible to every
+        listing), never Hadoop's shared committer root: with
+        ``mode("append").parquet(base_dir)`` every concurrent job
+        stages under the SAME ``{base_dir}/_temporary/0``, and one
+        job's commit/cleanup deletes it recursively — so two appends
+        to DIFFERENT streams (serialized only per-stream by design,
+        streamer.rs's actor-per-stream discipline) could fail each
+        other's durable commit (found live by the multi-stream
+        linearizability soak, r12).
 
-        In manifest mode the renamed files become visible only at the
-        generation publish that follows the rename loop, so the batch
-        commits ATOMICALLY: a crash anywhere before the publish leaves
-        orphaned (invisible) files for vacuum — a strictly smaller
-        unknown-outcome envelope than the listing layout's durable
-        prefix."""
+        The moved files become visible only at the generation publish
+        that follows the move loop, so the batch commits ATOMICALLY: a
+        crash anywhere before the publish leaves orphaned (invisible)
+        files for :meth:`vacuum`, a crash after it the whole batch."""
         import uuid
 
         bk = self._mf_backend
@@ -1229,9 +1140,9 @@ class StreamStore:
             # the stage is written THROUGH the backend location
             # (executors PUT part files directly against the bucket on
             # an object store); the finalize loop then lands each part
-            # on its final key — an atomic rename locally, a
-            # server-side COPY+DELETE on an object store (atomicity is
-            # not needed there: visibility is the manifest publish)
+            # on its final key — a rename locally, a server-side
+            # COPY+DELETE on an object store (neither needs to be
+            # atomic: visibility is the generation publish)
             _t0 = _t()
             write(stage)
             if timings is not None:
@@ -1245,7 +1156,7 @@ class StreamStore:
                     os.path.join(self.base_dir, rel),
                 )
                 renamed.append(rel)
-            if self.manifest and renamed:
+            if renamed:
                 self._manifest_publish(add=renamed)
             if timings is not None:
                 timings["publish_sec"] = round(_t() - _t0, 3)
@@ -1667,10 +1578,10 @@ class StreamStore:
 
         if self.bucket_count:
             # partition pruning: one bucket dir per stream key. The
-            # bucket hint additionally prunes a manifest store's
-            # explicit file list down to that subtree before the
-            # relation is even built; the filter remains for the
-            # listing layout (directory pruning) and row-group stats
+            # bucket hint prunes the explicit file list down to that
+            # subtree before the relation is even built; the filter
+            # keeps the pruning visible in the plan as a partition
+            # filter
             bkt = self._bucket_of(basin, stream)
             df = self.records_df(bucket=bkt).filter(F.col("bucket") == bkt)
         else:
@@ -1737,26 +1648,20 @@ class StreamStore:
         - ``{prefix}streams`` / ``{prefix}basins`` — catalog metadata
         - ``{prefix}tails``   — check_tail per stream
 
-        Once the store holds data, the record-derived views are **live**
-        SQL definitions over the storage path: every query re-resolves
-        the file listing and re-derives trim points and tails, so
-        appends/trims/fences after ``attach_views()`` show up without
-        re-attaching. Attached while the store is still empty, they
+        Once the store holds data, the record-derived views are **live**:
+        ``{prefix}records`` is built from :meth:`records_df` (the
+        CURRENT generation's explicit file list; a raw ``parquet.`path```
+        view would double-count every record a compaction delisted but
+        vacuum has not yet deleted), and the store re-attaches it on
+        every write-side invalidation, while trim points and tails are
+        re-derived per query — so appends/trims/fences through this
+        store after ``attach_views()`` show up without re-attaching.
+        Attached while the store is still empty, they
         start as empty placeholders and are automatically upgraded to
         the live definitions by the first append (the store remembers
         the prefix). Catalog views are snapshots of driver metadata;
         with a durable catalog they can be re-attached after config
         changes.
-
-        MANIFEST mode cannot use a raw ``parquet.`path``` view — after
-        a compaction (before vacuum) the directory holds both the
-        originals and the compacted copies, and only the generation
-        log says which are visible, so a path view would double-count
-        every record. There the records view is built from
-        :meth:`records_df` (the CURRENT generation's explicit file
-        list) and the store re-attaches it on every write-side
-        invalidation — same observable liveness, since this store
-        object is the directory's only writer.
         """
         if not self._has_data():
             empty = self.spark.createDataFrame([], RECORD_SCHEMA)
@@ -1769,18 +1674,10 @@ class StreamStore:
         else:
             self._stale_view_prefixes.discard(prefix)
             self._attached_view_prefixes.add(prefix)
-            p = self.base_dir
             is_cmd = "(size(headers) = 1 AND length(headers[0].name) = 0)"
-            if self.manifest:
-                self.records_df().select(
-                    "basin", "stream", "seq_num", "timestamp", "headers", "body"
-                ).createOrReplaceTempView(f"{prefix}records")
-            else:
-                self.spark.sql(
-                    f"CREATE OR REPLACE TEMP VIEW {prefix}records AS "
-                    f"SELECT basin, stream, seq_num, timestamp, headers, body "
-                    f"FROM parquet.`{p}`"
-                )
+            self.records_df().select(
+                "basin", "stream", "seq_num", "timestamp", "headers", "body"
+            ).createOrReplaceTempView(f"{prefix}records")
             # final trim point per stream, re-derived per query: max over
             # trim commands of min(payload, own seq+1) (streamer.rs:369-389)
             self.spark.sql(
@@ -2111,7 +2008,6 @@ class StreamStore:
         disjoint, so range reads prune precisely."""
 
         def build() -> DataFrame:
-            self._swap_recover()  # before capturing the df's file listing
             df = self.records_df()
             n = files_per_partition_hint or max(
                 1, self.spark.sparkContext.defaultParallelism // 4
@@ -2148,57 +2044,9 @@ class StreamStore:
                     raise
                 self.manifest_refresh()
 
-    def compaction_paused(self):
-        """Context manager that blocks physical rewrites (compaction,
-        retention/trim maintenance) for its duration.
-
-        Spark DataFrames snapshot a parquet FILE listing at analysis
-        time and evaluate lazily, so a batch job whose input is a
-        store read can hit the compaction swap window: the rename-out
-        phase moves a listed file into ``.trash`` mid-task →
-        FileNotFoundException (found live by the compaction-during-CC
-        soak scenario, r12 — the streaming source survives this via
-        per-micro-batch explicit listings + shortfall retries, but a
-        generic batch plan cannot transparently re-plan). Long
-        analytics over a live store should pin their input under this
-        pause — materialize ONE stable snapshot (e.g.
-        ``df.localCheckpoint()`` / ``df.checkpoint()``) inside the
-        block, then run the long computation on the snapshot outside
-        it, keeping the pause to a single evaluation rather than the
-        whole job. Rewrites queue behind the pause (same lock the
-        rewrite paths take); appends are unaffected. At object-store
-        scale the structural answer is a manifest-MVCC layout
-        (readers pin a manifest generation; compaction publishes a
-        new one and old files outlive in-flight readers) — the
-        rename-swap protocol here trades that for a much simpler
-        crash story, disclosed in SCALE.md."""
-        return self._rewrite_mu
-
-    def _rewrite(self, df: DataFrame) -> None:
-        """Swap the record data for ``df``'s output, PRESERVING the
-        store's metadata directories: ``_meta`` (the durable catalog)
-        and ``_audit`` (legacy audit parquet) live under base_dir, so a
-        whole-directory rmtree would destroy control-plane durability —
-        a compaction must never un-create every basin and stream. Only
-        non-underscore entries (the data files / bucket dirs) are
-        replaced.
-
-        **Crash atomicity.** Old entries are renamed into
-        ``<base>.trash`` (never deleted in place) and the new entries
-        renamed in only afterwards; a ``_SWAP`` marker inside
-        ``<base>.compact`` records that the trash phase completed. A
-        crash at ANY point leaves a state ``_swap_recover`` (run at
-        store open and before the next rewrite) can finish or discard:
-        no window exists where base_dir silently holds no data while
-        ``.compact`` has everything — the failure mode the old
-        delete-then-rename order allowed."""
-        with self._rewrite_mu:
-            self._rewrite_locked(df)
-
     def _consumed_files(self, df: DataFrame) -> list[str]:
         """Store-relative paths of the data files ``df``'s pinned
-        listing snapshot reads — the exact set a rewrite's swap (or a
-        manifest publish's ``remove``) replaces.
+        file list reads — the exact set a rewrite's publish ``remove``s.
 
         Both sides are normalized through ``urlparse`` + ``unquote`` +
         ``realpath`` (ADVICE r12): ``inputFiles()`` URIs can be
@@ -2239,62 +2087,24 @@ class StreamStore:
             )
         return consumed
 
-    def _rewrite_locked(self, df: DataFrame) -> None:
-        if self.manifest:
-            self._rewrite_locked_manifest(df)
-            return
-        self._swap_recover()  # finish/clear any interrupted prior swap
-        tmp = self.base_dir.rstrip("/") + ".compact"
-        # The swap must replace exactly the files this rewrite READ —
-        # never whatever happens to be in base_dir at swap time.
-        # Appends commit concurrently with a long rewrite job (they
-        # don't, and must not, wait on the rewrite latch), so a file
-        # landed after ``df``'s listing snapshot holds ACKED records
-        # the compacted output does not contain; the old rename-
-        # everything phase 2 moved such files to the trash and deleted
-        # them with it (acked-data loss, reproduced live in round 12:
-        # 12 acked appends racing 3 compactions lost 11 records).
-        # ``inputFiles()`` is the listing snapshot pinned in the plan.
-        consumed = self._consumed_files(df)
-        writer = df.write.mode("overwrite")
-        if self.bucket_count:
-            writer = writer.partitionBy("bucket")
-        writer.parquet(tmp)
-        # manifest BEFORE the completion marker: any state in which the
-        # trash phase may run (or resume) must be able to name exactly
-        # the consumed files
-        with open(os.path.join(tmp, "_CONSUMED"), "w") as f:
-            f.write("\n".join(consumed))
-        # the store's OWN completion marker. Spark's _SUCCESS is
-        # committer-controlled (mapreduce.fileoutputcommitter.
-        # marksuccessfuljobs=false is a common cluster tuning that
-        # suppresses it), so recovery must not key on it: a completed
-        # rewrite without _SUCCESS would be misread as died-mid-write
-        # and discarded WHILE phase-3 renames already moved new entries
-        # in — mixed old+new data. _COMPLETE is written by us, after
-        # the write returns, unconditionally.
-        with open(os.path.join(tmp, "_COMPLETE"), "w"):
-            pass
-        self._swap_in(tmp)
-        self._invalidate_records()
+    def _rewrite(self, df: DataFrame) -> None:
+        """Replace the files ``df`` reads with its output: stage the
+        output, move its part files into the data layout under fresh
+        (UUID) names, then COMMIT by publishing one generation that
+        adds them and removes exactly the files the rewrite consumed.
+        Metadata directories (``_meta``, ``_audit``, ``_manifest``)
+        are never consumed, so a rewrite leaves the control plane
+        alone.
 
-    def _rewrite_locked_manifest(self, df: DataFrame) -> None:
-        """Manifest-mode rewrite: stage the compacted output, rename
-        its part files into the data layout under fresh (UUID) names,
-        then COMMIT by publishing one manifest generation that adds
-        them and removes exactly the files the rewrite consumed.
-
-        There is no swap: consumed files stay on disk (in-flight
-        readers pinned to older generations keep reading them) until
-        :meth:`vacuum`, and the publish is the single atomic commit
-        point — a crash anywhere before it leaves only orphaned
-        invisible files, a crash after it a fully committed rewrite.
-        Concurrent appends publish their own generations in between;
-        their files are not in the consumed set and survive untouched,
-        which is the acked-data-loss guarantee the listing layout
-        needed the ``_CONSUMED``/trash machinery for. A concurrent
-        REWRITE (another process compacting the same directory) is
-        detected at the publish: ``require_visible=True`` raises
+        Consumed files stay on disk (in-flight readers pinned to older
+        generations keep reading them) until :meth:`vacuum`, and the
+        publish is the single atomic commit point — a crash anywhere
+        before it leaves only orphaned invisible files, a crash after
+        it a fully committed rewrite. Concurrent appends publish their
+        own generations in between; their files are not in the
+        consumed set and survive untouched. A concurrent REWRITE
+        (another process compacting the same directory) is detected at
+        the publish: ``require_visible=True`` raises
         :class:`~s2_spark.manifest.PublishConflict` if any consumed
         file was already delisted by the racing rewrite, and this
         rewrite's never-published output files are deleted before the
@@ -2305,215 +2115,47 @@ class StreamStore:
         from s2_spark.manifest import PublishConflict
 
         bk = self._mf_backend
-        consumed = self._consumed_files(df)
-        stage = os.path.join(
-            self.base_dir, f"_compact-stage-{os.getpid()}-{uuid.uuid4().hex}"
-        )
-        writer = df.write.mode("overwrite")
-        if self.bucket_count:
-            writer = writer.partitionBy("bucket")
-        added: list[str] = []
-        try:
-            writer.parquet(bk.spark_path(stage))
-            for rel, _mt in bk.walk_files(stage):
-                if not rel.endswith(".parquet"):
-                    continue
-                dst = os.path.join(self.base_dir, rel)
-                if bk.exists(dst):
-                    # UUID part names make this structurally
-                    # impossible; clobbering a live file silently
-                    # would be acked-data loss, so fail loudly (a
-                    # RuntimeError, not assert — python -O must not
-                    # strip the guard)
-                    raise RuntimeError(
-                        f"compacted part name collides with a live "
-                        f"file: {dst}"
-                    )
-                bk.finalize_data(os.path.join(stage, rel), dst)
-                added.append(rel)
-            try:
-                self._manifest_publish(
-                    add=added, remove=consumed, require_visible=True
-                )
-            except PublishConflict:
-                # never published → invisible to every reader: safe to
-                # delete the staged-in files rather than leave them as
-                # vacuum-aged orphans
-                for rel in added:
-                    bk.delete(os.path.join(self.base_dir, rel))
-                raise
-        finally:
-            bk.remove_tree(stage)
-        self._invalidate_records()
-
-    def _swap_in(self, tmp: str, resume: bool = False) -> None:
-        """Phase 2+3 of the compaction swap. Phase 2: rename the
-        rewrite's CONSUMED files (the ``_CONSUMED`` manifest — the
-        input listing snapshot) into ``<base>.trash``, then touch
-        ``_SWAP`` in the compact dir (the phase boundary a recovery can
-        observe). Files NOT in the manifest — append batches that
-        landed after the rewrite's listing — are never touched: they
-        hold acked records the compacted output does not contain.
-        Phase 3: rename the compact data files into base_dir — safe to
-        repeat, compacted part-file names never collide with phase-2
-        leftovers because phase 2 ran to completion first. Deleting
-        the compact dir commits; the trash is then garbage.
-
-        A pre-manifest ``.compact`` dir (older store version crashed
-        mid-swap) falls back to the whole-directory phase 2 — correct
-        for that era's swaps, which were only ever produced without
-        concurrent appends in flight."""
-        import shutil
-
-        trash = self.base_dir.rstrip("/") + ".trash"
-        swap_marker = os.path.join(tmp, "_SWAP")
-        manifest = os.path.join(tmp, "_CONSUMED")
-        # both rename phases under the swap latch: no records_df
-        # listing may start while consumed files are out and compacted
-        # files not yet in (it would silently miss acked records).
-        # Driver-side renames only — the latch is held microseconds
-        with self._swap_mu:
-            if not (resume and os.path.exists(swap_marker)):
-                os.makedirs(trash, exist_ok=True)
-                if os.path.exists(manifest):
-                    with open(manifest) as f:
-                        consumed = [ln for ln in f.read().splitlines() if ln]
-                    for rel in consumed:
-                        src = os.path.join(self.base_dir, rel)
-                        if not os.path.exists(src):
-                            continue  # already moved by an interrupted run
-                        dst = os.path.join(trash, rel)
-                        os.makedirs(os.path.dirname(dst), exist_ok=True)
-                        os.rename(src, dst)
-                else:  # legacy swap dir: whole-entry semantics
-                    for entry in os.listdir(self.base_dir):
-                        if entry.startswith(("_", ".")):
-                            continue  # _meta/_audit/hidden metadata survive
-                        os.rename(
-                            os.path.join(self.base_dir, entry),
-                            os.path.join(trash, entry),
-                        )
-                with open(swap_marker, "w"):
-                    pass
-            for root, _dirs, files in os.walk(tmp):
-                for f in files:
-                    if f.startswith(("_", ".")):
-                        continue  # _COMPLETE/_SWAP/_CONSUMED/_SUCCESS markers
-                    rel = os.path.relpath(root, tmp)
-                    dest_dir = (
-                        self.base_dir
-                        if rel == "."
-                        else os.path.join(self.base_dir, rel)
-                    )
-                    os.makedirs(dest_dir, exist_ok=True)
-                    dst = os.path.join(dest_dir, f)
-                    # phase 2 already ran to completion, so the only
-                    # way dst exists is a name collision between the
-                    # compacted output and a post-listing staged-append
-                    # file — structurally impossible today (UUID part
-                    # names) and silently clobbering an acked append
-                    # would be data loss, so fail loudly if it ever is
-                    # (RuntimeError, not assert: python -O strips
-                    # asserts and os.rename would silently clobber)
-                    if os.path.exists(dst):
-                        raise RuntimeError(
-                            f"swap phase-3 collision with a live file: {dst}"
-                        )
-                    os.rename(os.path.join(root, f), dst)
-        # trash FIRST: the completion markers must outlive the trash,
-        # else a crash mid-rmtree(tmp) could strand an old-data trash
-        # that a later recovery (seeing no marker) would wrongly
-        # restore over the committed swap. Outside the latch: trash and
-        # tmp are SIBLINGS of base_dir, invisible to its listings
-        shutil.rmtree(trash, ignore_errors=True)
-        # markers come off in a DEFINED order before the tmp rmtree
-        # (whose own deletion order is arbitrary): _COMPLETE first,
-        # then _SWAP, then _CONSUMED. A crash mid-sequence therefore
-        # leaves either a resumable marker state ({_SWAP,_CONSUMED} →
-        # phase 2 skipped, phase 3 re-walk moves nothing) or a
-        # marker-less dir (discarded; trash is already gone) — never
-        # the ADVICE-r12 state where _COMPLETE alone survives and
-        # recovery re-runs the DESTRUCTIVE legacy whole-dir phase 2
-        # over the committed swap plus any post-swap appends.
-        for marker in ("_COMPLETE", "_SWAP", "_CONSUMED"):
-            try:
-                os.remove(os.path.join(tmp, marker))
-            except FileNotFoundError:
-                pass
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    def _swap_recover(self) -> None:
-        """Complete or discard an interrupted compaction swap. A
-        ``.compact`` dir with the store's own ``_COMPLETE`` marker
-        holds a complete rewrite — finish swapping it in (resuming past
-        the trash phase if the ``_SWAP`` marker says it already ran, so
-        already-moved NEW entries are never re-trashed). ``_SWAP``
-        alone also proves completeness (the trash phase only ever runs
-        after the write returned) — that is the legacy path for a
-        round-8 store that crashed mid-swap before ``_COMPLETE``
-        existed. Spark's ``_SUCCESS`` is deliberately NOT consulted:
-        it is committer-controlled and can be suppressed cluster-wide,
-        and keying completeness on it would discard-and-restore over a
-        half-swapped-in rewrite (mixed old+new data). Without either
-        marker the rewrite died mid-write: discard it, and restore
-        anything a (structurally impossible today, but cheap to honor)
-        orphaned trash still holds."""
-        import shutil
-
-        tmp = self.base_dir.rstrip("/") + ".compact"
-        trash = self.base_dir.rstrip("/") + ".trash"
-        if os.path.isdir(tmp) and (
-            os.path.exists(os.path.join(tmp, "_COMPLETE"))
-            or os.path.exists(os.path.join(tmp, "_SWAP"))
-        ):
-            has_data = any(
-                f.endswith(".parquet") and not f.startswith(("_", "."))
-                for _r, _d, fs in os.walk(tmp)
-                for f in fs
+        with self._rewrite_mu:
+            consumed = self._consumed_files(df)
+            stage = os.path.join(
+                self.base_dir, f"_compact-stage-{os.getpid()}-{uuid.uuid4().hex}"
             )
-            if not has_data:
-                # marker-only compact dir: phase 3 already moved every
-                # data file in, so the swap COMMITTED — just clean up.
-                # Never fall into the marker-driven phase-2 paths here:
-                # a _COMPLETE-only dir left by an older store version's
-                # crash mid-cleanup would re-run the legacy whole-dir
-                # trash phase over the committed data and then delete
-                # it with the trash (ADVICE r12). Any surviving trash
-                # is garbage for the same reason the markers say the
-                # swap committed.
-                shutil.rmtree(trash, ignore_errors=True)
-                shutil.rmtree(tmp, ignore_errors=True)
-                if hasattr(self, "_records_cache"):
-                    self._invalidate_records()
-                return
-            self._swap_in(tmp, resume=True)
-            if hasattr(self, "_records_cache"):
-                self._invalidate_records()  # file listing changed
-            return
-        shutil.rmtree(tmp, ignore_errors=True)
-        if os.path.isdir(trash):
-            # no complete compact output: the old data is authoritative.
-            # Per-FILE restore: under the consumed-set protocol the
-            # base dir keeps its unconsumed files (and bucket dirs), so
-            # an entry-level rename could collide with a live directory.
-            # Under the swap latch for the same listing-atomicity reason
-            # as _swap_in (recovery can run on a live store's rewrite)
-            with self._swap_mu:
-                for root, _dirs, files in os.walk(trash):
-                    for f in files:
-                        rel = os.path.relpath(root, trash)
-                        dest_dir = (
-                            self.base_dir
-                            if rel == "."
-                            else os.path.join(self.base_dir, rel)
+            writer = df.write.mode("overwrite")
+            if self.bucket_count:
+                writer = writer.partitionBy("bucket")
+            added: list[str] = []
+            try:
+                writer.parquet(bk.spark_path(stage))
+                for rel, _mt in bk.walk_files(stage):
+                    if not rel.endswith(".parquet"):
+                        continue
+                    dst = os.path.join(self.base_dir, rel)
+                    if bk.exists(dst):
+                        # UUID part names make this structurally
+                        # impossible; clobbering a live file silently
+                        # would be acked-data loss, so fail loudly (a
+                        # RuntimeError, not assert — python -O must not
+                        # strip the guard)
+                        raise RuntimeError(
+                            f"compacted part name collides with a live "
+                            f"file: {dst}"
                         )
-                        os.makedirs(dest_dir, exist_ok=True)
-                        dst = os.path.join(dest_dir, f)
-                        if not os.path.exists(dst):
-                            os.rename(os.path.join(root, f), dst)
-            shutil.rmtree(trash, ignore_errors=True)
-            if hasattr(self, "_records_cache"):
-                self._invalidate_records()
+                    bk.finalize_data(os.path.join(stage, rel), dst)
+                    added.append(rel)
+                try:
+                    self._manifest_publish(
+                        add=added, remove=consumed, require_visible=True
+                    )
+                except PublishConflict:
+                    # never published → invisible to every reader: safe
+                    # to delete the staged-in files rather than leave
+                    # them as vacuum-aged orphans
+                    for rel in added:
+                        bk.delete(os.path.join(self.base_dir, rel))
+                    raise
+            finally:
+                bk.remove_tree(stage)
+            self._invalidate_records()
 
     def apply_trim_and_retention(
         self, drop_streams: list[tuple[str, str]] | None = None
@@ -2547,7 +2189,6 @@ class StreamStore:
     def _build_trim_retention_plan(
         self, drop_streams: list[tuple[str, str]] | None
     ) -> DataFrame:
-        self._swap_recover()  # before capturing the df's file listing
         df = self.records_df()
         # trim points come from storage, not the hot-state cache — the
         # cache only holds recently-touched streams (lazy recovery), and

@@ -66,13 +66,14 @@ def _parquet_files(path: str, backend=None) -> list[str]:
     prefixed, e.g. the store's ``_meta`` catalog) are skipped, matching
     Spark's and pyarrow's hidden-path filters.
 
-    A manifest-mode store (generation log under ``<path>/_manifest``)
-    is listed from its CURRENT generation instead: after a manifest
-    compaction the delisted originals coexist on disk with the
-    compacted copies until vacuum, so a raw directory walk would
-    double-count every record. The fold is lock-free (generation files
-    are immutable once published) — exactly the reader protocol the
-    store's own ``records_df`` uses.
+    A store (generation log under ``<path>/_manifest``) is listed from
+    its CURRENT generation: after a compaction the delisted originals
+    coexist on disk with the compacted copies until vacuum, so a raw
+    directory walk would double-count every record. The fold is
+    lock-free (generation files are immutable once published) —
+    exactly the reader protocol the store's own ``records_df`` uses.
+    A directory with no generation log (an empty store, or a legacy
+    listing-layout directory no store has opened yet) is walked.
 
     ``backend`` reads a store whose log (and data) live in a
     non-local :mod:`s2_spark.manifest` backend — wired from the
@@ -80,8 +81,6 @@ def _parquet_files(path: str, backend=None) -> list[str]:
     .backend_from_spec` string, since only strings cross the
     DataSource option boundary). Returned paths are the backend's
     READ locations, consumable by pyarrow and Spark alike."""
-    from s2_spark import manifest as _mf
-
     return [s for _l, s in _listed_pairs(path, backend)]
 
 
@@ -190,47 +189,19 @@ def _tails(
     cache: dict[str, tuple[tuple, dict[str, int]]] | None = None,
     stats: dict | None = None,
     backend=None,
-) -> dict[str, int] | None:
+) -> dict[str, int]:
     """Per-stream next_seq for the whole store — footer statistics only
     (no data pages for single-stream row groups), incremental via
     ``cache``: parquet files are immutable once written, so each trigger
     pays only for files that appeared since the last one. Per-trigger
     cost is O(new files), independent of total store size.
 
-    Returns ``None`` when the directory is mid-compaction-swap and
-    stayed that way past the wait budget: the listing would be
-    inconsistent (old entries parked in trash, new ones not yet
-    renamed in), so the caller must reuse its previous tails for this
-    trigger rather than scan — a COLD reader checkpointing a regressed
-    tail from a mid-swap listing was exactly the hole the wait was
-    added to cover, and proceeding after the timeout re-opened it."""
-    if backend is not None and not getattr(backend, "is_local", False):
-        # non-local backend: the store is manifest-mode by construction
-        # (no swap protocol, no .trash window) and the LOCAL base_dir
-        # may not even exist on this host — every local-filesystem gate
-        # below would silently report an empty store (code-review r15)
-        pass
-    else:
-        if not os.path.isdir(path):
-            return {}
-        # a compaction swap in progress can make a listing transiently
-        # MISS records: a warm reader's monotone guard absorbs that,
-        # but a COLD reader would emit the regressed tail into the
-        # offset log. The trash dir exists exactly for the swap window
-        # (store._swap_in), so wait it out. A trash dir stranded by a
-        # CRASHED swap outlives the wait (only the next store open
-        # recovers it) — skipping the trigger is the non-destructive
-        # answer: racing the store's own swap recovery from a reader
-        # could fight a live compactor.
-        trash = path.rstrip("/") + ".trash"
-        for _ in range(40):
-            if not os.path.isdir(trash):
-                break
-            time.sleep(0.05)
-        else:
-            if stats is not None:
-                stats["trash_timeouts"] = stats.get("trash_timeouts", 0) + 1
-            return None
+    On a non-local backend the LOCAL ``path`` may not even exist on
+    this host, so only a local store short-cuts a missing directory to
+    an empty result."""
+    local = backend is None or getattr(backend, "is_local", False)
+    if local and not os.path.isdir(path):
+        return {}
     tails: dict[str, int] = {}
     pairs = _listed_pairs(path, backend)
     if cache is not None:
@@ -584,12 +555,9 @@ class S2StreamReader(DataSourceStreamReader):
     def initialOffset(self) -> dict:
         # start of the log (or a requested seq) for every known stream;
         # streams discovered later start at 0 via partitions().
-        # A mid-swap directory (None) is safe to treat as empty here:
-        # every stream it hides is discovered by the first clean scan
-        # and still starts at start_seq.
         tails = _tails(self.path, self._tails_cache, self.tails_stats, self._backend)
         out = {self._VKEY: self.OFFSET_VERSION}
-        for k in self._filtered(tails or {}):
+        for k in self._filtered(tails):
             out[k] = [self._gen_seen.get(k, 0), self.start_seq]
         return out
 
@@ -616,30 +584,6 @@ class S2StreamReader(DataSourceStreamReader):
         gens = _purge_gens(self.path, self._purge_cache, self._backend)
         for attempt in range(32):
             scanned = _tails(self.path, self._tails_cache, self.tails_stats, self._backend)
-            if scanned is None:
-                # mid-compaction-swap past the wait budget: the listing
-                # is inconsistent — reuse the previous tails for this
-                # trigger (monotone by construction). A COLD reader has
-                # no previous tails: emitting from an empty _max_seen
-                # would produce an offset that silently OMITS streams
-                # present in Spark's checkpoint, and if that reduced
-                # offset becomes the log's latest before a crash, the
-                # next incarnation sees start=None for those streams and
-                # re-delivers committed records (the stranded-swap +
-                # restart double fault). Fail the trigger loudly instead
-                # — same posture as the purge-churn bound below; the
-                # next store open recovers the stranded swap.
-                if not self._max_seen:
-                    raise RuntimeError(
-                        "latestOffset timed out waiting on a stranded "
-                        f"compaction swap over {self.path!r} with no "
-                        "prior in-memory tails (cold reader) — refusing "
-                        "to emit an offset that would drop previously-"
-                        "checkpointed streams (the next store open "
-                        "recovers the stranded .trash)"
-                    )
-                tails = dict(self._max_seen)
-                break
             tails = self._filtered(scanned)
             gens2 = _purge_gens(self.path, self._purge_cache, self._backend)
             if gens2 == gens:
@@ -911,45 +855,25 @@ class S2StreamReader(DataSourceStreamReader):
         # races its removal (FileNotFoundError mid-listing, caught
         # live by test_source_exactly_once_under_live_concurrent_
         # compaction); _parquet_files applies the same underscore/dot
-        # filter as every other listing here. The read itself then
-        # races the compaction swap window: a mid-swap listing can
-        # miss rows of a PLANNED slice, and delivering short would
-        # lose them forever (the offset has already advanced) — so a
-        # shortfall with the trash dir sighted retries, a shortfall
-        # with no swap in sight is accepted (physical trim legitimately
-        # removes records below the trim point), and a stranded swap
-        # raises loudly rather than under-delivering.
-        expected = partition.end - partition.start
-        trash = partition.path.rstrip("/") + ".trash"
-        table = None
-        for _ in range(80):
-            saw = os.path.isdir(trash)
+        # filter as every other listing here. A listed file can still
+        # vanish before the scan opens it (vacuum deletes delisted
+        # files past their grace), so a missing file re-lists and
+        # retries, bounded.
+        for attempt in range(80):
             try:
                 files = _parquet_files(partition.path, self._backend)
-                t = (
+                table = (
                     ds.dataset(files, format="parquet").to_table(
                         filter=flt, columns=cols
                     )
                     if files
                     else None
                 )
-            except (FileNotFoundError, OSError):
-                time.sleep(0.05)  # a listed file moved mid-scan
-                continue
-            n = t.num_rows if t is not None else 0
-            if n == expected or (not saw and not os.path.isdir(trash)):
-                table = t
                 break
-            time.sleep(0.05)
-        else:
-            raise RuntimeError(
-                f"slice [{partition.start},{partition.end}) of "
-                f"{partition.basin}/{partition.stream} kept reading "
-                f"short under an in-progress compaction swap over "
-                f"{partition.path!r} — refusing to under-deliver a "
-                "planned batch (stranded .trash? the next store open "
-                "recovers it)"
-            )
+            except (FileNotFoundError, OSError):
+                if attempt == 79:
+                    raise
+                time.sleep(0.05)  # a listed file vanished mid-scan
         if table is None:
             return
         # deliver in seq order (total order per stream); yield Arrow

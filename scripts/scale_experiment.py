@@ -1,8 +1,8 @@
 """Reproducible scale experiment: ingest N records across K streams
-through the distributed sequencing path in both physical layouts, then
+through the distributed sequencing path, flat and bucketed, then
 measure the single-stream operations the reference serves constantly
-(range read, full-stream catch-up), compaction, and post-compaction
-reads.
+(range read, full-stream catch-up), compaction, post-compaction reads
+and the vacuum of the compaction's delisted originals.
 
 Run: python scripts/scale_experiment.py  (env: SCALE_N, SCALE_STREAMS)
 """
@@ -46,22 +46,12 @@ def main() -> None:
     src.count()
     mib = N * (BODY + 20) / 2**20
     probe = f"st-{STREAMS // 2}"
-    layouts = [
-        (0, False, "flat"),
-        (64, False, "bucketed(64)"),
-        # manifest-MVCC (r13): same data paths, visibility via the
-        # generation log — measures the per-batch publish overhead on
-        # ingest and the manifest-listed read; vacuum timed after
-        # compaction (the delisted-originals GC)
-        (0, True, "flat+manifest"),
-        (64, True, "bucketed(64)+manifest"),
-    ]
-    for bucket_count, manifest, label in layouts:
+    for bucket_count, label in ((0, "flat"), (64, "bucketed(64)")):
         cat = Catalog(spark)
         cat.create_basin("exp-basin-01", BasinConfig(create_stream_on_append=True))
         store = StreamStore(
             spark, tempfile.mkdtemp() + "/r", catalog=cat,
-            bucket_count=bucket_count, manifest=manifest,
+            bucket_count=bucket_count,
         )
         t0 = time.perf_counter()
         store.bulk_append(src)
@@ -82,15 +72,14 @@ def main() -> None:
             "exp-basin-01", probe, ReadStart(seq_num=10_000), ReadLimit(count=1000)
         ).count()
         t_read2 = time.perf_counter() - t0
-        vac = ""
-        if manifest:
-            t0 = time.perf_counter()
-            n_vac = store.vacuum(grace_ms=0)
-            vac = f", vacuum {time.perf_counter() - t0:.1f}s ({n_vac} files)"
+        t0 = time.perf_counter()
+        n_vac = store.vacuum(grace_ms=0)
+        t_vac = time.perf_counter() - t0
         print(
             f"{label}: append {t_append:.1f}s ({mib / t_append:.0f} MiB/s), "
             f"range-read(1k) {t_read1:.2f}s, full-stream {t_full:.2f}s ({n_full} rows), "
-            f"compact {t_comp:.1f}s, range-read-after {t_read2:.2f}s{vac}",
+            f"compact {t_comp:.1f}s, range-read-after {t_read2:.2f}s, "
+            f"vacuum {t_vac:.1f}s ({n_vac} files)",
             flush=True,
         )
 

@@ -55,29 +55,11 @@ def _multi_stream_scenario(spark, tmp_path, seed):
     L.test_concurrent_multi_stream_histories_isolated(store, seed)
 
 
-def _compaction_linearizability_scenario(spark, tmp_path, seed):
-    """Random-seed wrapper for the under-compaction Wing & Gong history
-    (r12: full client alphabet racing compaction churn — compaction
-    must be invisible; reads retry the loud swap-window FNF only)."""
-    import tests.test_linearizability as L
-    from s2_spark.catalog import BasinConfig, Catalog
-    from s2_spark.store import StreamStore
-
-    cat = Catalog(spark)
-    cat.create_basin(L.BASIN, BasinConfig(create_stream_on_append=True))
-    cat.create_stream(L.BASIN, L.STREAM)
-    # listing layout pinned: the subject is the swap-window FNF retry,
-    # which the manifest layout (the r14 default) retires structurally
-    store = StreamStore(
-        spark, str(tmp_path / "records"), catalog=cat, manifest=False
-    )
-    L._history_under_compaction(store, seed, retry_reads=True)
-
-
 def _manifest_linearizability_scenario(spark, tmp_path, seed):
-    """r13: the same alphabet-vs-churn history on the MANIFEST layout,
-    with the FNF retry DISABLED — readers pin a generation whose files
-    compaction never deletes, so any read exception is a failure."""
+    """Random-seed wrapper for the under-compaction Wing & Gong history:
+    the full client alphabet racing compaction churn. Readers pin a
+    generation whose files compaction never deletes, so any read
+    exception is a failure."""
     import tests.test_linearizability as L
     from s2_spark.catalog import BasinConfig, Catalog
     from s2_spark.store import StreamStore
@@ -85,17 +67,16 @@ def _manifest_linearizability_scenario(spark, tmp_path, seed):
     cat = Catalog(spark)
     cat.create_basin(L.BASIN, BasinConfig(create_stream_on_append=True))
     cat.create_stream(L.BASIN, L.STREAM)
-    store = StreamStore(spark, str(tmp_path / "records"), catalog=cat,
-                        manifest=True)
-    L._history_under_compaction(store, seed, retry_reads=False)
+    store = StreamStore(spark, str(tmp_path / "records"), catalog=cat)
+    L._history_under_compaction(store, seed)
 
 
 def _manifest_multi_stream_scenario(spark, tmp_path, seed):
-    """r13: cross-stream isolation on the manifest layout under
-    compaction churn — every stream's appends serialize generation
-    publishes on one manifest lock while compaction publishes
-    remove-generations on the same log; each stream's Wing & Gong
-    history checked independently, reads never retried."""
+    """Cross-stream isolation under compaction churn — every stream's
+    appends serialize generation publishes on one manifest lock while
+    compaction publishes remove-generations on the same log; each
+    stream's Wing & Gong history checked independently, reads never
+    retried."""
     import tests.test_linearizability as L
 
     L.test_concurrent_multi_stream_histories_manifest_under_compaction(
@@ -114,18 +95,12 @@ def main() -> int:
     scenarios = [
         ("crash_injection", T.test_sim_differential_with_crash_injection),
         ("dormancy_restart", T.test_sim_differential_with_dormancy_and_restart),
-        ("compaction_crashes", T.test_sim_differential_with_compaction_crashes),
-        ("compaction_bucketed", T.test_sim_differential_compaction_crashes_bucketed),
         ("source_exactly_once", T.test_sim_source_exactly_once_with_purges_restarts_rate_limits),
         ("sink_replay", T.test_sim_sink_replay_with_purges_and_trims),
         ("linearizability", _linearizability_scenario),
         ("multi_stream_linearizability", _multi_stream_scenario),
-        ("compaction_during_cc", T.test_sim_compaction_during_cc_loop),
         ("bulk_unary_race", T.test_sim_bulk_unary_race),
-        ("append_during_compaction", T.test_sim_append_during_compaction_churn),
-        ("compaction_linearizability", _compaction_linearizability_scenario),
-        # r13: manifest-MVCC layout — the same chaos without the
-        # pause/latch/retry coordination the rename-swap layout needs
+        # r13: compaction chaos on the generation log
         ("manifest_compaction_crashes", T.test_sim_differential_with_compaction_crashes_manifest),
         ("manifest_compaction_bucketed", T.test_sim_differential_compaction_crashes_manifest_bucketed),
         ("manifest_append_during_churn", T.test_sim_append_during_compaction_churn_manifest),

@@ -14,7 +14,18 @@ SF_TEST = "/root/testdata/sf0.001"
 def spark():
     from s2_spark.session import get_spark
 
-    s = get_spark("s2_spark_tests", cpus=8, shuffle_partitions=8)
+    # a loaded runner can stall the local executor's heartbeat thread
+    # for longer than Spark's 10 s interval x 60 misses; the suite
+    # asserts results, not liveness, so give both timeouts headroom
+    s = get_spark(
+        "s2_spark_tests",
+        cpus=8,
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.executor.heartbeatInterval": "60s",
+            "spark.network.timeout": "600s",
+        },
+    )
     yield s
 
 

@@ -161,7 +161,7 @@ def test_bulk_append_crash_between_write_and_state_then_recover(spark, tmp_path)
 def test_compaction_preserves_durable_catalog_and_audit(spark, tmp_path):
     """compact()/apply_trim_and_retention rewrite the DATA only: the
     durable catalog (_meta) and flushed audit history under base_dir
-    must survive the swap — a compaction must never un-create every
+    must survive the rewrite — a compaction must never un-create every
     basin and stream."""
     base = str(tmp_path / "records")
     s1 = _fresh(spark, base)
@@ -349,241 +349,6 @@ def test_bulk_append_admission_failure_writes_nothing(spark, tmp_path):
     assert _all_seqs(s2, "s") == list(range(5))
 
 
-# --- compaction swap crash atomicity ---------------------------------
-
-
-def _swap_rename_bomb(monkeypatch, trigger):
-    """Crash (raise _Boom) on the first os.rename whose (src, dst)
-    matches ``trigger`` — injected into the driver-side swap only;
-    Spark's own parquet commit renames happen JVM-side and are
-    untouched."""
-    import os as _os
-
-    real = _os.rename
-    armed = {"on": True}
-
-    def fake(src, dst):
-        if armed["on"] and trigger(str(src), str(dst)):
-            armed["on"] = False
-            raise _Boom("injected crash mid-swap")
-        return real(src, dst)
-
-    monkeypatch.setattr(_os, "rename", fake)
-
-
-def _seed(spark, base):
-    # the swap-protocol tests below target the LISTING layout's
-    # rename-swap machinery (legacy since the r14 manifest default
-    # flip, still fully supported as the migration source) — pin it
-    s = StreamStore(spark, base, manifest=False)
-    s.catalog.create_basin(
-        BASIN, BasinConfig(create_stream_on_append=True, create_stream_on_read=True)
-    )
-    s.append(BASIN, "s1", [Record(body=f"r{i}".encode()) for i in range(5)])
-    s.append(BASIN, "s2", [Record(body=b"x"), Record(body=b"y")])
-    return s
-
-
-def _assert_intact(spark, base):
-    r = StreamStore(spark, base, manifest=False)
-    r.recover_state()
-    assert r.check_tail(BASIN, "s1")[0] == 5
-    assert r.check_tail(BASIN, "s2")[0] == 2
-    assert _all_seqs(r, "s1") == [0, 1, 2, 3, 4]
-    bodies = sorted(
-        bytes(x["body"]) for x in r.read(BASIN, "s1").collect()
-    )
-    assert bodies == sorted(f"r{i}".encode() for i in range(5))
-    return r
-
-
-def test_compaction_crash_during_trash_phase_recovers(spark, tmp_path, monkeypatch):
-    """Crash while old entries move to .trash (phase 2): base_dir holds
-    partial old data, .compact holds the complete rewrite — reopening
-    the store completes the swap and loses nothing."""
-    base = str(tmp_path / "records")
-    s = _seed(spark, base)
-    trash = base + ".trash"
-    _swap_rename_bomb(monkeypatch, lambda src, dst: dst.startswith(trash))
-    with pytest.raises(_Boom):
-        s.compact()
-    monkeypatch.undo()
-    _assert_intact(spark, base)
-
-
-def test_compaction_crash_during_swap_in_phase_recovers(spark, tmp_path, monkeypatch):
-    """Crash on the FIRST rename out of .compact (phase 3): base_dir
-    holds ZERO data entries — the exact window the old delete-then-
-    rename order left unrecoverable. Reopen must see every record and
-    tail, and a fresh append must continue at the recovered tail."""
-    base = str(tmp_path / "records")
-    s = _seed(spark, base)
-    tmp = base + ".compact"
-    _swap_rename_bomb(monkeypatch, lambda src, dst: src.startswith(tmp))
-    with pytest.raises(_Boom):
-        s.compact()
-    monkeypatch.undo()
-    # worst case on disk: no data files in base_dir at all
-    data_entries = [
-        e for e in __import__("os").listdir(base) if not e.startswith(("_", "."))
-    ]
-    assert data_entries == []
-    r = _assert_intact(spark, base)
-    ack = r.append(BASIN, "s1", [Record(body=b"after")])
-    assert ack.start_seq == 5
-
-
-def test_compaction_crash_retry_on_same_store_recovers(spark, tmp_path, monkeypatch):
-    """The caller catches the crash and retries compact() on the SAME
-    store object: _rewrite's leading _swap_recover must finish the
-    interrupted swap (and refresh the cached file listing) before the
-    retry captures its input df."""
-    base = str(tmp_path / "records")
-    s = _seed(spark, base)
-    tmp = base + ".compact"
-    _swap_rename_bomb(monkeypatch, lambda src, dst: src.startswith(tmp))
-    with pytest.raises(_Boom):
-        s.compact()
-    monkeypatch.undo()
-    s.compact()  # retry completes cleanly
-    assert s.check_tail(BASIN, "s1")[0] == 5
-    assert _all_seqs(s, "s1") == [0, 1, 2, 3, 4]
-
-
-def test_incomplete_compact_write_discarded_and_trash_restored(spark, tmp_path):
-    """A .compact dir WITHOUT _SUCCESS is a mid-write casualty: reopen
-    discards it; an orphaned .trash (belt-and-braces — unreachable
-    under the current ordering) restores rather than deletes."""
-    import os
-    import shutil
-
-    base = str(tmp_path / "records")
-    s = _seed(spark, base)
-    del s
-    tmp = base + ".compact"
-    trash = base + ".trash"
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "part-junk.parquet"), "wb") as f:
-        f.write(b"not parquet")  # no _SUCCESS: incomplete write
-    os.makedirs(trash)
-    for e in list(os.listdir(base)):
-        if not e.startswith(("_", ".")):
-            os.rename(os.path.join(base, e), os.path.join(trash, e))
-    _assert_intact(spark, base)
-    assert not os.path.exists(tmp) and not os.path.exists(trash)
-
-
-def test_swap_recovery_does_not_key_on_sparks_success_marker(
-    spark, tmp_path, monkeypatch
-):
-    """Clusters commonly set mapreduce.fileoutputcommitter.
-    marksuccessfuljobs=false, which suppresses _SUCCESS. Recovery keyed
-    on _SUCCESS would misread a COMPLETE rewrite crashed during phase 3
-    as died-mid-write: discard the remaining .compact entries, keep the
-    already-renamed new ones, and restore the trash beside them —
-    mixed old+new data with duplicate seqs. The store's own _COMPLETE
-    marker (written after the write returns, committer-independent)
-    must carry the recovery alone."""
-    import os
-
-    base = str(tmp_path / "records")
-    s = _seed(spark, base)
-    tmp = base + ".compact"
-    # crash on the SECOND rename out of .compact: some new entries are
-    # already in base_dir, some still in .compact — the mixed window
-    seen = {"n": 0}
-
-    def second_out(src, dst):
-        if str(src).startswith(tmp):
-            seen["n"] += 1
-            return seen["n"] == 2
-        return False
-
-    _swap_rename_bomb(monkeypatch, second_out)
-    with pytest.raises(_Boom):
-        s.compact()
-    monkeypatch.undo()
-    # simulate the committer tuning: no _SUCCESS was ever written
-    success = os.path.join(tmp, "_SUCCESS")
-    if os.path.exists(success):
-        os.remove(success)
-    assert os.path.exists(os.path.join(tmp, "_COMPLETE"))
-    r = _assert_intact(spark, base)  # recovery completes the swap
-    # exactly one copy of every record: no old+new duplicates
-    assert not os.path.exists(tmp) and not os.path.exists(base + ".trash")
-    ack = r.append(BASIN, "s1", [Record(body=b"after")])
-    assert ack.start_seq == 5
-
-
-def test_compaction_crash_bucketed_layout_recovers(spark, tmp_path, monkeypatch):
-    """Same zero-data-files crash window, bucketed layout: the swap
-    moves whole bucket=N directories (names COLLIDE between old and new
-    data, unlike part files) — the trash-first ordering is what makes
-    the swap safe, and recovery must restore every bucket."""
-    base = str(tmp_path / "records")
-    s = StreamStore(spark, base, bucket_count=4, manifest=False)
-    s.catalog.create_basin(
-        BASIN, BasinConfig(create_stream_on_append=True, create_stream_on_read=True)
-    )
-    s.append(BASIN, "s1", [Record(body=f"r{i}".encode()) for i in range(5)])
-    s.append(BASIN, "s2", [Record(body=b"x"), Record(body=b"y")])
-    tmp = base + ".compact"
-    _swap_rename_bomb(monkeypatch, lambda src, dst: src.startswith(tmp))
-    with pytest.raises(_Boom):
-        s.compact()
-    monkeypatch.undo()
-    r = StreamStore(spark, base, bucket_count=4, manifest=False)
-    r.recover_state()
-    assert r.check_tail(BASIN, "s1")[0] == 5
-    assert r.check_tail(BASIN, "s2")[0] == 2
-    assert _all_seqs(r, "s1") == [0, 1, 2, 3, 4]
-
-
-def test_compaction_preserves_append_landed_after_listing(spark, tmp_path):
-    """Round-12 live find (REAL acked-data loss): appends commit
-    concurrently with a rewrite — they do not wait on the rewrite
-    latch — so a batch landing between the rewrite's listing snapshot
-    and the swap holds acked records the compacted output lacks. The
-    old phase 2 renamed EVERY data entry to the trash and deleted it
-    with the trash (reproduced: 12 acked appends racing 3 compactions
-    lost 11 records). The consumed-set swap (`_CONSUMED` manifest =
-    the rewrite's inputFiles snapshot) must leave such files alone.
-
-    Deterministic, not raced: the append is injected at the exact
-    window — after the rewrite's listing/inputFiles capture, before
-    phase 2 — by wrapping `_swap_in`."""
-    base = str(tmp_path / "records")
-    s = _seed(spark, base)
-
-    real_swap_in = s._swap_in
-    injected = []
-
-    def swap_in_with_midflight_append(tmp, resume=False):
-        if not injected:
-            injected.append(True)
-            ack = s.append(BASIN, "s1", [Record(body=b"landed-late")])
-            injected.append(ack.start_seq)
-        return real_swap_in(tmp, resume=resume)
-
-    s._swap_in = swap_in_with_midflight_append
-    try:
-        s.compact()
-    finally:
-        s._swap_in = real_swap_in
-    assert injected, "injection did not run"
-
-    # the acked late append must survive the swap — same store AND a
-    # cold recovery store must both see it at its acked position
-    assert _all_seqs(s, "s1") == [0, 1, 2, 3, 4, 5]
-    assert bytes(
-        s.read(BASIN, "s1").filter("seq_num = 5").collect()[0]["body"]
-    ) == b"landed-late"
-    r = StreamStore(spark, base, manifest=False)
-    r.recover_state()
-    assert r.check_tail(BASIN, "s1")[0] == 6
-    assert _all_seqs(r, "s1") == [0, 1, 2, 3, 4, 5]
-
-
 @settings(
     max_examples=10,
     deadline=None,
@@ -593,7 +358,7 @@ def test_compaction_preserves_append_landed_after_listing(spark, tmp_path):
 def test_any_trim_sequence_recovers_exactly_manifest_publish_crash(
     spark, ops, crash_at
 ):
-    """Manifest-mode property form of the trim-keeper rule, with the
+    """Property form of the trim-keeper rule, with the
     compaction rewrite crashing at the ``crash_at``-th protocol step —
     a staged-output rename or the generation PUBLISH itself (the
     single commit point; VERDICT r13 task 1). Whether the publish
@@ -607,7 +372,7 @@ def test_any_trim_sequence_recovers_exactly_manifest_publish_crash(
     import tempfile
 
     base = tempfile.mkdtemp(prefix="mftrimprop_")
-    s1 = StreamStore(spark, base, manifest=True)
+    s1 = StreamStore(spark, base)
     s1.catalog.create_basin(
         BASIN,
         BasinConfig(create_stream_on_append=True, create_stream_on_read=True),
@@ -648,7 +413,6 @@ def test_any_trim_sequence_recovers_exactly_manifest_publish_crash(
         )
 
     s2 = StreamStore(spark, base)
-    assert s2.manifest
     s2.vacuum(grace_ms=0)
     s2.recover_state()
     st_ = s2._st(BASIN, "s")

@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import os
 import random
-import threading
 import uuid
 
 import pyarrow.parquet as pq
@@ -374,55 +373,3 @@ def test_driver_parquet_on_object_store_backend(spark, tmp_path):
     assert _as_dicts(_session_records(store, 1)) == _as_dicts(_storage(store, 1))
     store.compact()
     assert [r.body for r in _storage(store, 0)] == [r.body for r in _RECS] + [b"more"]
-
-
-def test_listing_layout_never_exposes_partial_file(spark, tmp_path, monkeypatch):
-    """``manifest=False``: visibility is the directory listing, so the
-    driver writes each file into a hidden stage and renames it into
-    place whole. A concurrent reader opening every listed file never
-    meets a partly written one."""
-    store = _mkstore(spark, str(tmp_path / "records"), manifest=False)
-    real_write = pq.write_table
-    staged = []
-
-    def write_table(table, where, **kw):
-        rel = os.path.relpath(where, store.base_dir)
-        assert rel.split(os.sep)[0].startswith("_stage-")
-        staged.append(os.path.basename(where))
-        return real_write(table, where, **kw)
-
-    monkeypatch.setattr(pq, "write_table", write_table)
-    stop = threading.Event()
-    errors: list[str] = []
-    opened = [0]
-
-    def reader():
-        while True:
-            last = stop.is_set()  # one full pass after the writer stops
-            for path in _visible_parquet(store):
-                try:
-                    n = pq.read_table(path).num_rows
-                except FileNotFoundError:
-                    continue
-                except (OSError, ValueError) as e:  # a torn file: ArrowInvalid, OSError
-                    errors.append(f"{path}: {e}")
-                    continue
-                opened[0] += 1
-                if n != 2:
-                    errors.append(f"{path}: {n} rows")
-            if last:
-                return
-
-    t = threading.Thread(target=reader, daemon=True)
-    t.start()
-    try:
-        for i in range(20):
-            store.append(B, S, [Record(body=f"{i}a".encode()), Record(body=f"{i}b".encode())])
-    finally:
-        stop.set()
-        t.join(timeout=30)
-    assert not t.is_alive()
-    assert not errors
-    assert opened[0] > 0
-    assert sorted(os.path.basename(p) for p in _visible_parquet(store)) == sorted(staged)
-    assert [r.seq_num for r in _storage(store, 0)] == list(range(40))

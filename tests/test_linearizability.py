@@ -664,48 +664,15 @@ def test_concurrent_multi_stream_histories_isolated(store, seed):
         assert any(o.result[0] == "ok" for o in rec.events)
 
 
-def _history_under_compaction(store, seed, retry_reads: bool) -> None:
+def _history_under_compaction(store, seed) -> None:
     """Shared core: the full client alphabet (plain / CAS / fencing /
     trim+ranged-read) races a background compaction churn, and the
     recorded history must STILL be linearizable — compaction must be
-    invisible to every client.
-
-    ``retry_reads=True`` is the LISTING layout's contract: a read
-    whose pre-swap listing executes after the swap fails loudly
-    (FileNotFound on a trashed file) — the documented availability
-    window, not a correctness defect — so clients retry with a fresh
-    call stamp. ``retry_reads=False`` is the MANIFEST layout's
-    stronger contract: no swap window exists (delisted files outlive
-    in-flight readers until vacuum), so ANY read exception fails the
-    scenario outright. A SILENT anomaly — a hole, a resurrected
-    trimmed record, a lost append — reaches the checker either way."""
+    invisible to every client. Reads are never retried: delisted files
+    outlive in-flight readers until vacuum, so ANY read exception fails
+    the scenario outright, and a SILENT anomaly — a hole, a resurrected
+    trimmed record, a lost append — reaches the checker."""
     import threading
-
-    global _read_result
-    real_read_result = _read_result
-
-    def retrying_read_result(store_, start=0, stream=STREAM):
-        for _ in range(20):
-            try:
-                return real_read_result(store_, start=start, stream=stream)
-            except Exception as e:  # noqa: BLE001 - classified below
-                # str(), not repr(): Py4JJavaError carries the Java-side
-                # detail (the FILE_NOT_EXIST message) only in __str__
-                msg = f"{type(e).__name__}: {e}"
-                # FAILED_READ_FILE covers both the FILE_NOT_EXIST and
-                # the NO_HINT renderings of the same trashed-file read
-                # (NO_HINT omits the reason text); a genuinely corrupt
-                # file would persist across all 20 retries and still
-                # fail the scenario via the AssertionError below
-                if not any(
-                    pat in msg
-                    for pat in (
-                        "FileNotFound", "fileNotExist", "does not exist",
-                        "PATH_NOT_FOUND", "FAILED_READ_FILE",
-                    )
-                ):
-                    raise
-        raise AssertionError("read kept hitting the swap window")
 
     stop = threading.Event()
     churn_errs: list = []
@@ -726,8 +693,6 @@ def _history_under_compaction(store, seed, retry_reads: bool) -> None:
         kinds[cid % 4](store, rec, cid, random.Random(seed * 100 + cid), n_ops)
 
     th = threading.Thread(target=churn)
-    if retry_reads:
-        _read_result = retrying_read_result
     th.start()
     try:
         with ThreadPoolExecutor(clients) as ex:
@@ -736,7 +701,6 @@ def _history_under_compaction(store, seed, retry_reads: bool) -> None:
     finally:
         stop.set()
         th.join()
-        _read_result = real_read_result
     assert not churn_errs, churn_errs
     # one final read AFTER the churn stopped closes the history
     call = rec.clock.tick()
@@ -749,44 +713,22 @@ def _history_under_compaction(store, seed, retry_reads: bool) -> None:
 
 
 @pytest.mark.parametrize("seed", [29, 6006])
-def test_concurrent_history_linearizable_under_compaction(
-    spark, tmp_path, seed
-):
-    """Listing layout: linearizable under compaction churn, with the
-    documented loud-FNF retry for reads that execute mid-swap. The
-    round-12 swap work makes three claims this scenario checks live:
-    concurrent append batches survive the swap (consumed-set
-    manifest), reads never silently observe a hole below an acked
-    tail (the swap latch over listing creation), and trim visibility
-    stays exactly the monotone-clamp model even while rewrites
-    physically delete trimmed records. The listing layout is pinned
-    explicitly — the shared fixture follows the r14 manifest default,
-    which would retire this scenario's very subject."""
-    cat = Catalog(spark)
-    cat.create_basin(BASIN, BasinConfig(create_stream_on_append=True))
-    cat.create_stream(BASIN, STREAM)
-    listing = StreamStore(
-        spark, str(tmp_path / "records"), catalog=cat, manifest=False
-    )
-    _history_under_compaction(listing, seed, retry_reads=True)
-
-
-@pytest.mark.parametrize("seed", [29, 6006])
 def test_concurrent_history_linearizable_under_compaction_manifest(
     spark, tmp_path, seed
 ):
-    """Manifest-MVCC layout under the SAME churn, with retries
-    DISABLED: readers pin a manifest generation whose files compaction
-    never renames or deletes (until vacuum), so the swap-window
-    FileNotFound class must be structurally gone — any read exception
-    fails the scenario — and the history must still linearize without
-    pause/latch coordination anywhere."""
+    """Linearizable under compaction churn: readers pin a generation
+    whose files compaction never renames or deletes (until vacuum), so
+    any read exception fails the scenario, and the history must
+    linearize without pause/latch coordination anywhere. Checks live
+    that concurrent append batches survive a rewrite, that reads never
+    observe a hole below an acked tail, and that trim visibility stays
+    exactly the monotone-clamp model while rewrites physically delete
+    trimmed records."""
     cat = Catalog(spark)
     cat.create_basin(BASIN, BasinConfig(create_stream_on_append=True))
     cat.create_stream(BASIN, STREAM)
-    store = StreamStore(spark, str(tmp_path / "records"), catalog=cat,
-                        manifest=True)
-    _history_under_compaction(store, seed, retry_reads=False)
+    store = StreamStore(spark, str(tmp_path / "records"), catalog=cat)
+    _history_under_compaction(store, seed)
 
 
 @pytest.mark.parametrize("seed", [13, 5150])
@@ -799,16 +741,15 @@ def test_concurrent_multi_stream_histories_manifest_under_compaction(
     manifest lock while compaction publishes remove-generations on the
     same log, so a lost or misordered publish would surface as a
     non-linearizable history (a hole below an acked tail, a trim the
-    stream never set). Reads never retry: no swap window may exist.
-    Each stream's Wing & Gong history is checked independently."""
+    stream never set). Reads never retry. Each stream's Wing & Gong
+    history is checked independently."""
     import threading
 
     cat = Catalog(spark)
     cat.create_basin(BASIN, BasinConfig(create_stream_on_append=True))
     cat.create_stream(BASIN, STREAM)
     cat.create_stream(BASIN, STREAM2)
-    store = StreamStore(spark, str(tmp_path / "records"), catalog=cat,
-                        manifest=True)
+    store = StreamStore(spark, str(tmp_path / "records"), catalog=cat)
     recs = {STREAM: _Recorder(), STREAM2: _Recorder()}
     kinds = [_plain_client, _cas_client, _fencing_client, _trim_client]
     clients, n_ops = 8, 6

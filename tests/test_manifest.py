@@ -1,14 +1,14 @@
-"""Manifest-MVCC store mode (``StreamStore(manifest=True)``).
+"""Manifest-MVCC visibility of :class:`s2_spark.store.StreamStore`.
 
-The generation log replaces listing-defined visibility: appends and
-compactions commit by atomically publishing a generation
-(s2_spark/manifest.py), delisted files outlive in-flight readers until
-vacuum, and no rename-over-readers swap (hence no swap window, no
-``compaction_paused()`` coordination) exists at all. These tests pin
-the protocol's core claims: publish atomicity at every crash point,
-MVCC reader pinning across compaction, acked-append survival during
-churn, the bootstrap migration, vacuum's grace contract, and the
-consumed-set normalization (ADVICE r12) on both layouts.
+The generation log defines visibility: appends and compactions commit
+by atomically publishing a generation (s2_spark/manifest.py), delisted
+files outlive in-flight readers until vacuum, and no rename-over-
+readers swap exists at all. These tests pin the protocol's core
+claims: publish atomicity at every crash point, MVCC reader pinning
+across compaction, acked-append survival during churn, adopting a
+legacy listing-layout directory (and refusing a half-swapped one),
+vacuum's grace contract, and the consumed-set normalization
+(ADVICE r12).
 
 Reference analogue: SlateDB's manifest+WAL visibility
 (lite/src/backend/kv/mod.rs:55-95) — state is defined by the
@@ -20,6 +20,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 import pytest
 
@@ -39,7 +40,7 @@ def _mkstore(spark, tmp_path, clockbox=None, **kw):
     cat.create_stream(B, "s2")
     return StreamStore(
         spark, str(tmp_path / "records"), catalog=cat, clock=clock,
-        manifest=True, **kw,
+        **kw,
     )
 
 
@@ -74,9 +75,7 @@ def test_manifest_append_read_compact_vacuum_roundtrip(spark, tmp_path):
     removed = store.vacuum(grace_ms=0)
     assert removed == n_before  # every pre-compaction file swept
     assert _rows(store) == want
-    # cold reopen WITHOUT the flag: the on-disk log is authoritative
     cold = StreamStore(spark, store.base_dir, catalog=store.catalog)
-    assert cold.manifest
     assert _rows(cold) == want
 
 
@@ -85,8 +84,8 @@ def test_manifest_reader_pinned_generation_survives_compact_and_vacuum(
 ):
     """The MVCC claim itself: a DataFrame built BEFORE a compaction
     (pinned to that generation's file list) still collects correctly
-    after the compaction published — without compaction_paused(),
-    localCheckpoint, or retry. Only vacuum may invalidate it, and only
+    after the compaction published — without a pause around the
+    compaction, localCheckpoint, or retry. Only vacuum may invalidate it, and only
     past the grace window."""
     store = _mkstore(spark, tmp_path)
     for i in range(5):
@@ -180,10 +179,9 @@ def test_manifest_compaction_crash_points_leave_store_intact(
 
 
 def test_manifest_append_batch_is_atomic_across_crash(spark, tmp_path, monkeypatch):
-    """Manifest-mode appends commit at the publish: a crash after the
-    parquet write but before the publish makes the whole batch
-    invisible (a strictly smaller unknown-outcome envelope than the
-    listing layout's durable prefix) — never a torn half-batch."""
+    """Appends commit at the publish: a crash after the parquet write
+    but before the publish makes the whole batch invisible — never a
+    torn half-batch."""
     store = _mkstore(spark, tmp_path, bucket_count=8)
     store.append(B, "s1", [Record(body=b"keep")])
 
@@ -225,25 +223,63 @@ def test_manifest_checkpoint_and_prune(spark, tmp_path):
     assert _rows(cold) == [(i, f"k{i}".encode()) for i in range(n)]
 
 
+def _legacy_listing_dir(spark, base, n):
+    """A directory as a store that predates the generation log left it:
+    plain RECORD_SCHEMA parquet, no ``_manifest``."""
+    from s2_spark.model import RECORD_SCHEMA
+
+    spark.createDataFrame(
+        [(B, "s1", i, 1_000 + i, [], f"m{i}".encode()) for i in range(n)],
+        RECORD_SCHEMA,
+    ).write.parquet(base)
+
+
 def test_manifest_bootstrap_migrates_listing_store(spark, tmp_path):
-    """Opening an existing listing-mode directory with manifest=True
-    publishes a checkpoint of the current data files — the flag never
-    makes existing records invisible."""
+    """Opening an existing listing-layout directory publishes a
+    checkpoint of its current data files — opening never makes
+    existing records invisible."""
     cat = Catalog(spark)
     cat.create_basin(B, BasinConfig(create_stream_on_append=True))
     cat.create_stream(B, "s1")
     base = str(tmp_path / "records")
-    legacy = StreamStore(spark, base, catalog=cat, manifest=False)
-    for i in range(3):
-        legacy.append(B, "s1", [Record(body=f"m{i}".encode())])
-    assert not legacy.manifest
-    upgraded = StreamStore(spark, base, catalog=cat, manifest=True)
-    assert upgraded.manifest and mf.is_manifest_store(base)
+    _legacy_listing_dir(spark, base, 3)
+    assert not mf.is_manifest_store(base)
+    upgraded = StreamStore(spark, base, catalog=cat)
+    assert mf.is_manifest_store(base)
     assert _rows(upgraded) == [(i, f"m{i}".encode()) for i in range(3)]
     upgraded.append(B, "s1", [Record(body=b"m3")])
     upgraded.compact()
     upgraded.vacuum(grace_ms=0)
     assert _rows(upgraded) == [(i, f"m{i}".encode()) for i in range(4)]
+    cold = StreamStore(spark, base, catalog=cat)
+    assert _rows(cold) == [(i, f"m{i}".encode()) for i in range(4)]
+
+
+@pytest.mark.parametrize("sibling", [".compact", ".trash"])
+def test_half_swapped_legacy_directory_is_refused(spark, tmp_path, sibling):
+    """A listing-layout store that crashed mid-compaction-swap left its
+    consumed files in ``<base>.trash`` and its compacted files in
+    ``<base>.compact``: adopting the directory would checkpoint a
+    partial file set and silently drop acked records, so opening it
+    fails loudly, names the directory, and publishes nothing."""
+    cat = Catalog(spark)
+    cat.create_basin(B)
+    cat.create_stream(B, "s1")
+    base = str(tmp_path / "records")
+    _legacy_listing_dir(spark, base, 3)
+    os.makedirs(base + sibling)
+    with pytest.raises(
+        RuntimeError, match=re.escape(base) + ".*" + re.escape(sibling)
+    ):
+        StreamStore(spark, base, catalog=cat)
+    assert not mf.is_manifest_store(base)
+    # a store with a generation log never reads the siblings
+    os.rmdir(base + sibling)
+    StreamStore(spark, base, catalog=cat)
+    os.makedirs(base + sibling)
+    assert _rows(StreamStore(spark, base, catalog=cat)) == [
+        (i, f"m{i}".encode()) for i in range(3)
+    ]
 
 
 def test_manifest_trim_retention_rewrite(spark, tmp_path):
@@ -287,9 +323,9 @@ def test_manifest_streaming_source_listing_is_deduplicated(spark, tmp_path):
 
 def test_consumed_files_symlinked_base_dir_no_duplicates(spark, tmp_path):
     """ADVICE r12 (medium): inputFiles() URIs resolved through a
-    symlinked base_dir must still land in the consumed set — on the
-    LISTING layout a miss leaves the original beside the compacted
-    copy and every read serves duplicate seq_nums."""
+    symlinked base_dir must still land in the consumed set — a miss
+    would leave the original visible beside the compacted copy and
+    every read would serve duplicate seq_nums."""
     cat = Catalog(spark)
     cat.create_basin(B, BasinConfig(create_stream_on_append=True))
     cat.create_stream(B, "s1")
@@ -350,16 +386,6 @@ def test_manifest_write_gen_collision_returns_false_and_publish_retries(
     assert new_files == set(files) | {"extra.parquet"}
 
 
-def test_manifest_vacuum_requires_manifest_mode(spark, tmp_path):
-    cat = Catalog(spark)
-    cat.create_basin(B, BasinConfig(create_stream_on_append=True))
-    store = StreamStore(
-        spark, str(tmp_path / "records"), catalog=cat, manifest=False
-    )
-    with pytest.raises(RuntimeError, match="manifest mode"):
-        store.vacuum()
-
-
 def test_manifest_fold_gap_above_checkpoint_is_corrupt(tmp_path):
     base = str(tmp_path)
     mf.write_gen(base, 1, ["a"], [], None)
@@ -388,11 +414,10 @@ def test_manifest_fold_ignores_tmp_staging_files(tmp_path):
 
 
 def test_manifest_attach_views_no_double_count_and_live(spark, tmp_path):
-    """A raw parquet.`path` view would double-count after a manifest
-    compaction (originals + compacted copies coexist until vacuum);
-    manifest-mode views snapshot the current generation and the store
-    re-attaches them on every write-side invalidation, so they stay
-    exactly as live as the listing layout's path views."""
+    """A raw parquet.`path` view would double-count after a compaction
+    (originals + compacted copies coexist until vacuum); the views
+    snapshot the current generation and the store re-attaches them on
+    every write-side invalidation, so they stay live."""
     store = _mkstore(spark, tmp_path)
     for i in range(4):
         store.append(B, "s1", [Record(body=f"v{i}".encode())])
@@ -497,7 +522,7 @@ def test_inmemory_cas_backend_full_store_roundtrip(spark, tmp_path):
     cat.create_stream(B, "s1")
     store = StreamStore(
         spark, str(tmp_path / "records"), catalog=cat,
-        manifest=True, manifest_backend=backend,
+        manifest_backend=backend,
     )
     for i in range(4):
         store.append(B, "s1", [Record(body=f"o{i}".encode())])
@@ -518,7 +543,7 @@ def test_inmemory_cas_backend_full_store_roundtrip(spark, tmp_path):
     # retry) instead of clobbering
     other = StreamStore(
         spark, store.base_dir, catalog=cat,
-        manifest=True, manifest_backend=backend,
+        manifest_backend=backend,
     )
     other.append(B, "s1", [Record(body=b"o4")])
     assert backend.conflicts == 0  # no contention in this sequence
@@ -539,7 +564,7 @@ def test_two_streamstore_objects_race_appends(spark, tmp_path):
     cat.create_stream(B, "s2")
     base = str(tmp_path / "records")
     stores = [
-        StreamStore(spark, base, catalog=cat, manifest=True) for _ in range(2)
+        StreamStore(spark, base, catalog=cat) for _ in range(2)
     ]
     barrier = threading.Barrier(2)
     errs: list[Exception] = []
@@ -576,7 +601,7 @@ def test_compaction_conflict_replans_against_racing_rewrite(spark, tmp_path):
     cat.create_basin(B, BasinConfig(create_stream_on_append=True))
     cat.create_stream(B, "s1")
     base = str(tmp_path / "records")
-    a = StreamStore(spark, base, catalog=cat, manifest=True)
+    a = StreamStore(spark, base, catalog=cat)
     for i in range(4):
         a.append(B, "s1", [Record(body=f"r{i}".encode())])
     want = [(i, f"r{i}".encode()) for i in range(4)]
@@ -714,16 +739,6 @@ def test_expired_lease_is_gced_and_files_reclaimed(spark, tmp_path):
     assert _rows(store) == [(i, f"E{i}".encode()) for i in range(3)]
 
 
-def test_reader_lease_requires_manifest_mode(spark, tmp_path):
-    cat = Catalog(spark)
-    cat.create_basin(B, BasinConfig(create_stream_on_append=True))
-    store = StreamStore(
-        spark, str(tmp_path / "records"), catalog=cat, manifest=False
-    )
-    with pytest.raises(RuntimeError, match="manifest mode"):
-        store.reader_lease()
-
-
 def test_lease_does_not_pin_files_delisted_before_it(spark, tmp_path):
     """Correct floor semantics: a lease acquired at generation G pins
     only what was visible AT G — files delisted by generations <= G
@@ -748,7 +763,7 @@ def test_manifest_refresh_sees_other_writers_generations(spark, tmp_path):
     cat.create_stream(B, "s1")
     cat.create_stream(B, "s2")
     base = str(tmp_path / "records")
-    a = StreamStore(spark, base, catalog=cat, manifest=True)
+    a = StreamStore(spark, base, catalog=cat)
     b = StreamStore(spark, base, catalog=cat)
     a.append(B, "s1", [Record(body=b"from-a")])
     assert b._manifest_current()[0] == 0  # b folded the empty log at open
@@ -912,7 +927,7 @@ def test_vacuum_folds_fresh_never_deletes_other_writers_live_files(
     cat.create_stream(B, "s1")
     cat.create_stream(B, "s2")
     base = str(tmp_path / "records")
-    a = StreamStore(spark, base, catalog=cat, manifest=True)
+    a = StreamStore(spark, base, catalog=cat)
     a.append(B, "s1", [Record(body=b"a0")])  # a's cache: gen 1
     b = StreamStore(spark, base, catalog=cat)
     for i in range(2):
@@ -937,7 +952,7 @@ def test_reader_lease_pins_fresh_generation_not_stale_cache(spark, tmp_path):
     cat.create_basin(B, BasinConfig(create_stream_on_append=True))
     cat.create_stream(B, "s1")
     base = str(tmp_path / "records")
-    a = StreamStore(spark, base, catalog=cat, manifest=True)
+    a = StreamStore(spark, base, catalog=cat)
     a.append(B, "s1", [Record(body=b"x0")])  # a's cache: gen 1
     b = StreamStore(spark, base, catalog=cat)
     b.append(B, "s1", [Record(body=b"x1")])  # gen 2 — a's cache stale
@@ -968,7 +983,7 @@ def test_external_backend_marker_guards_path_readers_and_reopen(
     cat.create_stream(B, "s1")
     base = str(tmp_path / "records")
     store = StreamStore(
-        spark, base, catalog=cat, manifest=True, manifest_backend=backend
+        spark, base, catalog=cat, manifest_backend=backend
     )
     store.append(B, "s1", [Record(body=b"m0")])
     with pytest.raises(RuntimeError, match="external manifest backend"):
@@ -977,7 +992,7 @@ def test_external_backend_marker_guards_path_readers_and_reopen(
         StreamStore(spark, base, catalog=cat)
     # reopening WITH the backend works and reads through the log
     again = StreamStore(
-        spark, base, catalog=cat, manifest=True, manifest_backend=backend
+        spark, base, catalog=cat, manifest_backend=backend
     )
     assert _rows(again) == [(0, b"m0")]
 

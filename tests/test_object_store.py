@@ -36,7 +36,6 @@ def _mkstore(spark, tmp_path, **kw):
         spark,
         str(tmp_path / "records"),
         catalog=cat,
-        manifest=True,
         manifest_backend=backend,
         **kw,
     )
@@ -101,7 +100,6 @@ def test_sandbox_full_lifecycle_no_local_data(spark, tmp_path):
         spark,
         store.base_dir,
         catalog=store.catalog,
-        manifest=True,
         manifest_backend=mf.SandboxObjectBackend(backend.root),
     )
     assert _rows(cold) == want
@@ -116,7 +114,7 @@ def test_sandbox_catalog_control_plane_in_bucket(spark, tmp_path):
     backend = mf.SandboxObjectBackend(str(tmp_path / "bucket"))
     base = str(tmp_path / "records")
     store = StreamStore(
-        spark, base, manifest=True, manifest_backend=backend
+        spark, base, manifest_backend=backend
     )
     store.catalog.create_basin(B, BasinConfig(create_stream_on_append=True))
     store.catalog.create_stream(B, "s1")
@@ -126,7 +124,6 @@ def test_sandbox_catalog_control_plane_in_bucket(spark, tmp_path):
     cold = StreamStore(
         spark,
         base,
-        manifest=True,
         manifest_backend=mf.SandboxObjectBackend(backend.root),
     )
     assert cold.catalog.get_stream(B, "s1").name == "s1"
@@ -216,26 +213,13 @@ def test_local_backend_never_marks_external(spark, tmp_path):
         spark,
         base,
         catalog=cat,
-        manifest=True,
         manifest_backend=mf.LocalBackend(),
     )
     store.append(B, "s1", [Record(body=b"x")])
     assert not mf.has_external_backend_marker(base)
     # backend-less reopen works
-    again = StreamStore(spark, base, catalog=cat, manifest=True)
+    again = StreamStore(spark, base, catalog=cat)
     assert _rows(again) == [(0, b"x")]
-
-
-def test_nonlocal_backend_requires_manifest_mode(spark, tmp_path):
-    cat = Catalog(spark)
-    with pytest.raises(RuntimeError, match="requires manifest mode"):
-        StreamStore(
-            spark,
-            str(tmp_path / "records"),
-            catalog=cat,
-            manifest=False,
-            manifest_backend=mf.SandboxObjectBackend(str(tmp_path / "b")),
-        )
 
 
 def test_backend_spec_roundtrip(tmp_path):
@@ -269,7 +253,7 @@ def _child_spark_appender(args):
         spark = _get_spark("child-writer", cpus=2, shuffle_partitions=2)
         backend = _mf.SandboxObjectBackend(bucket_root)
         st = _StreamStore(
-            spark, base, manifest=True, manifest_backend=backend
+            spark, base, manifest_backend=backend
         )
         for i in range(n):
             st.append(B, stream, [_Record(body=f"child-{i}".encode())])
@@ -298,7 +282,7 @@ def test_two_spark_processes_one_bucket_store(spark, tmp_path):
 
     backend = mf.SandboxObjectBackend(str(tmp_path / "bucket"))
     base = str(tmp_path / "records")
-    store = StreamStore(spark, base, manifest=True, manifest_backend=backend)
+    store = StreamStore(spark, base, manifest_backend=backend)
     store.catalog.create_basin(B, BasinConfig(create_stream_on_append=True))
     store.catalog.create_stream(B, "parent-s")
     store.catalog.create_stream(B, "child-s")
@@ -330,7 +314,6 @@ def test_two_spark_processes_one_bucket_store(spark, tmp_path):
     cold = StreamStore(
         spark,
         base,
-        manifest=True,
         manifest_backend=mf.SandboxObjectBackend(backend.root),
     )
     assert _rows(cold, "child-s") == [
@@ -397,8 +380,7 @@ def test_catalog_legacy_unversioned_file_upgrades_in_place(spark, tmp_path):
 
 def test_tails_scan_works_without_local_base_dir(spark, tmp_path):
     """Code-review r15: _tails gated on LOCAL filesystem state
-    (os.path.isdir, the .trash swap wait) even with a non-local
-    backend, so a reader host without the local base_dir silently
+    (os.path.isdir) even with a non-local backend, so a reader host without the local base_dir silently
     planned an empty stream forever. With the backend passed, the scan
     must come from the bucket alone."""
     import shutil

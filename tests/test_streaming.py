@@ -1782,52 +1782,6 @@ def test_latest_offset_purge_racing_tails_scan_rescans(spark, store, monkeypatch
     assert parts == [("dead", 3, 5)]
 
 
-def test_tails_scan_skips_trigger_on_stranded_trash(spark, store, monkeypatch):
-    """ADVICE r9: a `.trash` dir stranded by a crashed compaction swap
-    outlives the tails scan's wait budget — the scan must NOT proceed
-    on the possibly mid-swap (mixed/partial) listing it was waiting
-    out. `_tails` reports the timeout and latestOffset reuses the
-    previous tails for the trigger: a warm reader keeps its position;
-    a COLD reader has no previous tails and fails the trigger loudly
-    (ADVICE r10: emitting from an empty _max_seen would drop
-    checkpointed streams from the offset — combined with a crash, the
-    next incarnation re-delivers committed records). Neither can
-    checkpoint a regressed tail."""
-    import os
-
-    import s2_spark.streaming.source as src
-
-    k = f"{BASIN}\x00s1"
-    store.append(BASIN, "s1", _recs(4))
-    r = _reader(store)
-    o1 = r.latestOffset()
-    assert o1 == {"__v": 2, k: [0, 4]}
-    # strand a trash dir (crashed swap: no .compact markers, only the
-    # parked old entries) and shrink the wait budget so the test does
-    # not sleep the full 2 s
-    monkeypatch.setattr(src.time, "sleep", lambda s: None)
-    trash = store.base_dir.rstrip("/") + ".trash"
-    os.makedirs(trash)
-    stats = r.tails_stats
-    assert src._tails(store.base_dir, None, stats) is None
-    assert stats["trash_timeouts"] >= 1
-    # warm reader: previous tails reused — offsets never regress, and
-    # appends hidden behind the swap window are not falsely consumed
-    o2 = r.latestOffset()
-    assert {kk: v[:2] for kk, v in o2.items() if kk != "__v"} == {k: [0, 4]}
-    # cold reader over the same (still-stranded) store: it has no
-    # previous tails to reuse, and emitting from nothing would DROP
-    # streams a checkpoint may hold (the stranded-swap + restart
-    # double fault) — the trigger fails loudly instead
-    r2 = _reader(store)
-    with pytest.raises(RuntimeError, match="cold reader"):
-        r2.latestOffset()
-    # swap window over: the next trigger sees the true tails again
-    os.rmdir(trash)
-    o3 = r2.latestOffset()
-    assert {kk: v[:2] for kk, v in o3.items() if kk != "__v"} == {k: [0, 4]}
-
-
 def test_latest_offset_purge_churn_bounded_retry_raises(spark, store, monkeypatch):
     """ADVICE r9: the tails/tombstone consistency loop must not wedge
     the driver's trigger forever under sustained purge churn — bounded
@@ -2009,17 +1963,12 @@ def test_reader_hwm_namespace_isolates_queries(spark, store):
 
 
 def test_source_exactly_once_under_live_concurrent_compaction(spark, tmp_path):
-    """Live race of the round-10 tails-scan hardening: a reader
-    triggers continuously while the store compacts in a loop (the
-    `.trash` swap window repeatedly opens and closes under the scan).
-    LISTING layout pinned explicitly — this scenario's subject is the
-    swap window, which the r14 manifest default retires (the manifest
-    E2E source test covers that layout's compaction+vacuum race).
-    Offsets must never regress within a generation — a mid-swap
-    listing is skipped, not trusted — and every appended record is
-    delivered exactly once. Appends and compactions serialize against
-    each other (compaction is a maintenance op); the READER runs fully
-    concurrent with both."""
+    """A reader triggers continuously while the store compacts in a
+    loop, so every tails scan and slice read races generations that
+    delist the files it just listed. Offsets must never regress within
+    a generation, and every appended record is delivered exactly once.
+    Appends and compactions serialize against each other (compaction
+    is a maintenance op); the READER runs fully concurrent with both."""
     import threading
     import time as _t
 
@@ -2028,9 +1977,7 @@ def test_source_exactly_once_under_live_concurrent_compaction(spark, tmp_path):
     cat = Catalog(spark)
     cat.create_basin(BASIN)
     cat.create_stream(BASIN, "s1")
-    store = StreamStore(
-        spark, str(tmp_path / "records"), catalog=cat, manifest=False
-    )
+    store = StreamStore(spark, str(tmp_path / "records"), catalog=cat)
     k = f"{BASIN}{SEP}s1"
     mu = threading.Lock()
     stop = threading.Event()
@@ -2210,7 +2157,7 @@ def test_source_manifest_store_live_tail_across_compaction(spark, tmp_path):
     cat.create_basin(BASIN)
     cat.create_stream(BASIN, "s1")
     store = StreamStore(
-        spark, str(tmp_path / "records"), catalog=cat, manifest=True
+        spark, str(tmp_path / "records"), catalog=cat
     )
     store.append(BASIN, "s1", _recs(10))
     q = _start_tail_query(spark, store, "mftail")
