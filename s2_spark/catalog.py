@@ -147,9 +147,10 @@ class Catalog:
         meta_dir: str | None = None,
         backend=None,
     ):
-        """``meta_dir`` makes the catalog durable: every mutation writes
-        the full (tiny) metadata table to ``meta_dir/catalog.parquet``
-        atomically, and a new session pointed at the same dir loads it —
+        """``meta_dir`` makes the catalog durable: every mutation saves
+        the full (tiny) metadata table as the next version
+        ``meta_dir/catalog-%012d.parquet`` with a conditional PUT, and a
+        new session pointed at the same dir loads the newest version —
         the Spark analogue of the reference's BasinMeta/StreamMeta
         keyspaces (lite/src/backend/kv/mod.rs:55-95). Without it the
         catalog is session-local (in-memory).
@@ -186,7 +187,7 @@ class Catalog:
             from s2_spark.manifest import VersionedBlob
 
             #: shared versioned-CAS persistence (head-verified saves,
-            #: age-gated GC, no-op skip, legacy upgrade)
+            #: age-gated GC, no-op skip)
             self._blob = VersionedBlob(
                 meta_dir, "catalog", ".parquet", backend=self._backend
             )
@@ -212,7 +213,7 @@ class Catalog:
         manifest publish CAS, shared machinery in
         :class:`s2_spark.manifest.VersionedBlob` (head-verified saves,
         age-gated version GC over the listed set, byte-identical
-        no-op skip, legacy upgrade). On losing the race to another
+        no-op skip). On losing the race to another
         store's save, the freshest table is reloaded and ``fn``
         re-applies on top of the winner (every mutator is a pure
         function of the current table: a concurrent same-name create

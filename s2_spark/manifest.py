@@ -509,9 +509,7 @@ class VersionedBlob:
     empty purge sweep, an idempotent create retry — must not churn
     versions). GC runs over the LISTED versions (not a fixed lookback
     window, which would leak under sustained write rates) and only
-    deletes objects older than ``gc_min_age_ms``. The legacy
-    unversioned ``{stem}{ext}`` object loads as version 0 and is
-    deleted after the first successful versioned save."""
+    deletes objects older than ``gc_min_age_ms``."""
 
     KEEP_VERSIONS = 3
 
@@ -539,9 +537,6 @@ class VersionedBlob:
     def _vpath(self, v: int) -> str:
         return os.path.join(self.meta_dir, f"{self.stem}-{v:012d}{self.ext}")
 
-    def _legacy(self) -> str:
-        return os.path.join(self.meta_dir, f"{self.stem}{self.ext}")
-
     def _versions(self) -> list[int]:
         return sorted(
             int(m.group(1))
@@ -558,20 +553,16 @@ class VersionedBlob:
         read can race version GC; a missing max-version re-lists."""
         for _ in range(8):
             vs = self._versions()
+            if not vs:
+                self.version = 0
+                self._last_blob = None
+                return None
             try:
-                if vs:
-                    self.version = vs[-1]
-                    self._last_blob = self.backend.read(self._vpath(vs[-1]))
-                else:
-                    self.version = 0
-                    self._last_blob = self.backend.read(self._legacy())
-                return self._last_blob
+                self._last_blob = self.backend.read(self._vpath(vs[-1]))
             except FileNotFoundError:
-                if not vs:
-                    self.version = 0
-                    self._last_blob = None
-                    return None
                 continue  # raced GC: re-list
+            self.version = vs[-1]
+            return self._last_blob
         return self._last_blob  # pragma: no cover - sustained GC race
 
     def save_cas(self, data: bytes) -> bool:
@@ -594,9 +585,6 @@ class VersionedBlob:
                 mt = self.backend.mtime_ms(p)
                 if mt is not None and wall - mt >= self.gc_min_age_ms:
                     self.backend.delete(p)
-        # the pre-versioning unversioned object is now a permanently
-        # stale snapshot — remove it so nothing resurrects it
-        self.backend.delete(self._legacy())
         return True
 
 
@@ -622,9 +610,8 @@ def manifest_dir(base_dir: str) -> str:
 
 
 def is_manifest_store(base_dir: str, backend: LocalBackend = LOCAL) -> bool:
-    """True if ``base_dir`` carries a generation log — the on-disk
-    marker every reader (including the streaming source's footer
-    scanner, which has no store object) keys visibility on."""
+    """True if ``base_dir`` carries a generation log (opening a store
+    writes generation 0 before any record file)."""
     return any(_GEN_RE.match(f) for f in backend.list_dir(manifest_dir(base_dir)))
 
 
@@ -831,11 +818,10 @@ def delisted_entries(
 ) -> list[tuple[int, str, int]]:
     """Every ``(generation, relpath, delisted_at_ms)`` still recorded
     in the log — vacuum's worklist. The delist clock is the publishing
-    generation's ``ts_ms`` (object stores cannot stamp file mtimes;
-    a pre-ts_ms-era entry falls back to the generation file's own
-    mtime, which is the same publish instant). Entries pruned from the
-    log are gone precisely because a prior vacuum confirmed their
-    removed files deleted (:func:`prune_log` ``keep_gens``)."""
+    generation's ``ts_ms`` (object stores cannot stamp file mtimes).
+    Entries pruned from the log are gone precisely because a prior
+    vacuum confirmed their removed files deleted (:func:`prune_log`
+    ``keep_gens``)."""
     d = manifest_dir(base_dir)
     out: list[tuple[int, str, int]] = []
     for g in _gen_numbers(d, backend):
@@ -843,14 +829,8 @@ def delisted_entries(
             entry = _read_gen(d, g, backend)
         except FileNotFoundError:  # pragma: no cover - raced a prune
             continue
-        removes = entry.get("remove", ())
-        if not removes:
-            continue
-        ts = entry.get("ts_ms")
-        if ts is None:
-            ts = backend.mtime_ms(_gen_path(d, g)) or 0
-        for rel in removes:
-            out.append((g, rel, ts))
+        for rel in entry.get("remove", ()):
+            out.append((g, rel, entry["ts_ms"]))
     return out
 
 
@@ -901,10 +881,7 @@ def prune_log(
                     entry = _read_gen(d, g, backend)
                 except FileNotFoundError:  # pragma: no cover - raced
                     continue
-                ts = entry.get("ts_ms")
-                if ts is None:
-                    ts = backend.mtime_ms(_gen_path(d, g)) or 0
-                if now - ts < entry_grace_ms:
+                if now - entry["ts_ms"] < entry_grace_ms:
                     continue  # too young: its number must not recycle yet
             backend.delete(_gen_path(d, g))
             n += 1

@@ -163,10 +163,10 @@ class TokenStore:
 
             #: shared versioned-CAS persistence (`tokens-%012d.json`,
             #: head-verified conditional-PUT saves, age-gated version
-            #: GC, byte-identical no-op skip, legacy `tokens.json`
-            #: upgrade) — the same lost-update-proof discipline as the
-            #: catalog; two stores over one bucket cannot clobber each
-            #: other's issues/revokes (code-review r15)
+            #: GC, byte-identical no-op skip) — the same lost-update-
+            #: proof discipline as the catalog; two stores over one
+            #: bucket cannot clobber each other's issues/revokes
+            #: (code-review r15)
             self._blob = VersionedBlob(
                 meta_dir, "tokens", ".json", backend=self._backend
             )

@@ -5,14 +5,13 @@ which implies the serving layer records every read and control-plane
 operation somewhere aggregatable. Here that record is an explicit
 meta-stream owned by the store: one row per served operation.
 
-**The audit stream IS an S2 stream (dogfooding).** When bound to a
-:class:`~s2_spark.store.StreamStore`, :meth:`flush` appends the
-buffered rows as ordinary records (JSON bodies) to the reserved
+**The audit stream IS an S2 stream (dogfooding).** Every OpsAudit is
+bound to a :class:`~s2_spark.store.StreamStore`: :meth:`flush` appends
+the buffered rows as ordinary records (JSON bodies) to the reserved
 ``s2-ops-audit/ops`` stream through ``StreamStore.append`` — so audit
 rows inherit the engine's own sequencing, durability boundary,
 retention/trim, and read surface, and :meth:`df` reads them back
-through ``store.read``. A standalone OpsAudit (no store bound) keeps
-the original parquet-directory path under ``{base_dir}/_audit``.
+through ``store.read``.
 
 Design constraints:
 
@@ -38,15 +37,14 @@ Design constraints:
   inflate BasinOps with its own bookkeeping. Appends are never logged
   anyway (only read/control ops are client-shaped audit inputs).
 - **Aggregation is a DataFrame.** :meth:`df` returns the full audit
-  relation (stream + legacy parquet + buffer); the metric sets in
-  ``operators/metrics.py`` are plain groupBys over it, sharing the
-  bucketing machinery with the append sets.
+  relation (stream + buffer); the metric sets in ``operators/metrics.py``
+  are plain groupBys over it, sharing the bucketing machinery with the
+  append sets.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import threading
 import time
 
@@ -83,20 +81,18 @@ _BODY_SCHEMA = (
 
 class OpsAudit:
     """Driver-buffered operation log, flushed to the store's own
-    ``s2-ops-audit/ops`` stream (or a parquet dir when standalone)."""
+    ``s2-ops-audit/ops`` stream."""
 
     def __init__(
         self,
         spark: SparkSession,
-        audit_dir: str,
+        store,
         clock,
         flush_threshold: int = 4096,
-        store=None,
         hard_cap: int | None = None,
         backpressure_s: float = 5.0,
     ):
         self.spark = spark
-        self.dir = audit_dir
         self._clock = clock
         self.flush_threshold = flush_threshold
         self.hard_cap = hard_cap or flush_threshold * 64
@@ -141,9 +137,6 @@ class OpsAudit:
         self._local = threading.local()
         self._sink_ready = False
         self._sunk_any = False
-        self._flushed_any = os.path.isdir(audit_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(audit_dir)
-        )
 
     def log(
         self,
@@ -271,8 +264,7 @@ class OpsAudit:
     def flush(self) -> None:
         """Append buffered rows to the audit stream via the store's own
         append path (sequencing + durable parquet commit), in ≤1000-
-        record batches (the unary append cap). Standalone fallback: one
-        parquet append under the audit dir.
+        record batches (the unary append cap).
 
         Failure-safe: rows are popped from the buffer up front (so
         concurrent flushes never double-send), but on ANY error the
@@ -302,54 +294,42 @@ class OpsAudit:
             self._cv.notify_all()  # back-pressured loggers may proceed
         if not rows:
             return
-        if self._store is not None:
-            from s2_spark.model import MAX_BATCH_RECORDS, Record
+        from s2_spark.model import MAX_BATCH_RECORDS, Record
 
-            self._local.suppress = True
-            done = 0
-            try:
-                self._ensure_sink()
-                for i in range(0, len(rows), MAX_BATCH_RECORDS):
-                    chunk = rows[i : i + MAX_BATCH_RECORDS]
-                    records = [
-                        Record(
-                            timestamp=ts,
-                            body=json.dumps(
-                                {
-                                    "ts": ts,
-                                    "op": op,
-                                    "basin": basin,
-                                    "stream": stream,
-                                    "records": n,
-                                    "bytes": b,
-                                },
-                                separators=(",", ":"),
-                            ).encode("utf-8"),
-                        )
-                        for ts, op, basin, stream, n, b in chunk
-                    ]
-                    self._store.append(AUDIT_BASIN, AUDIT_STREAM, records)
-                    done = i + len(chunk)
-                    self._sunk_any = True
-            except BaseException:
-                with self._mu:
-                    self._buf = rows[done:] + self._buf
-                    self._retry_pending = True
-                    self._wake_flusher_locked()  # retry w/o new traffic
-                raise
-            finally:
-                self._local.suppress = False
-        else:
-            try:
-                df = self.spark.createDataFrame(rows, AUDIT_SCHEMA)
-                df.coalesce(1).write.mode("append").parquet(self.dir)
-            except BaseException:
-                with self._mu:
-                    self._buf = rows + self._buf
-                    self._retry_pending = True
-                    self._wake_flusher_locked()
-                raise
-            self._flushed_any = True
+        self._local.suppress = True
+        done = 0
+        try:
+            self._ensure_sink()
+            for i in range(0, len(rows), MAX_BATCH_RECORDS):
+                chunk = rows[i : i + MAX_BATCH_RECORDS]
+                records = [
+                    Record(
+                        timestamp=ts,
+                        body=json.dumps(
+                            {
+                                "ts": ts,
+                                "op": op,
+                                "basin": basin,
+                                "stream": stream,
+                                "records": n,
+                                "bytes": b,
+                            },
+                            separators=(",", ":"),
+                        ).encode("utf-8"),
+                    )
+                    for ts, op, basin, stream, n, b in chunk
+                ]
+                self._store.append(AUDIT_BASIN, AUDIT_STREAM, records)
+                done = i + len(chunk)
+                self._sunk_any = True
+        except BaseException:
+            with self._mu:
+                self._buf = rows[done:] + self._buf
+                self._retry_pending = True
+                self._wake_flusher_locked()  # retry w/o new traffic
+            raise
+        finally:
+            self._local.suppress = False
         with self._mu:
             self._retry_pending = False
 
@@ -363,8 +343,6 @@ class OpsAudit:
         in that configuration.)"""
         if self._sunk_any:
             return True
-        if self._store is None:
-            return False
         from s2_spark.model import S2Error
 
         try:
@@ -392,10 +370,9 @@ class OpsAudit:
         )
 
     def df(self) -> DataFrame:
-        """The audit relation: everything flushed (stream and/or legacy
-        parquet) plus the current buffer (buffer rides as a small
-        union — metric queries see ops immediately without forcing a
-        write), plus one ``op='audit_drop'`` row per back-pressure drop
+        """The audit relation: everything flushed to the stream plus the
+        current buffer (buffer rides as a small union — metric queries
+        see ops immediately without forcing a write), plus one ``op='audit_drop'`` row per back-pressure drop
         tick (``records`` = rows lost) — so label-metric queries
         (ops_by_label et al.) report the accounting path's OWN loss
         instead of silently under-counting. Caveat: the audit relation
@@ -412,8 +389,6 @@ class OpsAudit:
         parts = []
         if self._stream_has_history():
             parts.append(self._stream_df())
-        if self._flushed_any:
-            parts.append(self.spark.read.schema(AUDIT_SCHEMA).parquet(self.dir))
         if rows:
             parts.append(self.spark.createDataFrame(rows, AUDIT_SCHEMA))
         if not parts:

@@ -231,12 +231,11 @@ class StreamStore:
         generation (multi-writer-safe via the CAS publish loop), a
         compaction's consumed files stay on disk for in-flight readers,
         and delisted files are garbage-collected by :meth:`vacuum`.
-        Opening a directory of record files that has no generation log
-        yet (written by a store that predates the log) adopts it in
-        place: one checkpoint publish, no record rewritten or lost. A
-        directory that such a store left mid-compaction-swap (a
-        ``<base>.compact`` or ``<base>.trash`` sibling) is refused,
-        since its file set is partial.
+        Opening a directory with no generation log starts the log with
+        an empty generation 0, so record files a crashed first commit
+        left behind stay invisible orphans for :meth:`vacuum`. A
+        directory that holds record files but no log is foreign (or
+        predates the log) and is refused with a ``RuntimeError``.
 
         ``manifest_backend`` swaps the WHOLE store's storage
         (:class:`s2_spark.manifest.LocalBackend` by default): since
@@ -259,28 +258,30 @@ class StreamStore:
             base_dir
         ):
             # this directory's generation log lives in a NON-local
-            # backend: opening it without that backend would fall back
-            # to listings and double-count every compaction's delisted
-            # originals — fail loudly instead
+            # backend: opening it without that backend would start an
+            # empty local log and hide every record — fail loudly
+            # instead
             raise RuntimeError(
                 f"store {base_dir!r} uses an external manifest backend "
                 f"(marker {_mf.EXTERNAL_BACKEND_MARKER!r}); pass the "
                 f"matching manifest_backend to open it"
             )
-        adopt = not _mf.is_manifest_store(base_dir, self._mf_backend)
-        if adopt:
-            for sibling in (".compact", ".trash"):
-                if os.path.exists(base_dir.rstrip("/") + sibling):
-                    # a listing-layout store crashed mid-swap: its
-                    # consumed files sit in .trash and its compacted
-                    # files in .compact, so adopting the directory would
-                    # silently drop acked records
-                    raise RuntimeError(
-                        f"store {base_dir!r} has no generation log and a "
-                        f"{sibling!r} sibling left by an interrupted "
-                        f"compaction swap; its file set is partial, "
-                        f"refusing to adopt it"
-                    )
+        if not _mf.is_manifest_store(base_dir, self._mf_backend):
+            # every store writes its log before its first record file,
+            # so record files with no log are not this store's: refuse.
+            # The log re-check after the walk lets a concurrent open of
+            # the same fresh directory (which may already have written
+            # generation 0 and appended) through.
+            if any(
+                rel.endswith(".parquet")
+                for rel, _mt in self._mf_backend.walk_files(base_dir)
+            ) and not _mf.is_manifest_store(base_dir, self._mf_backend):
+                raise RuntimeError(
+                    f"store {base_dir!r} holds record files but no "
+                    f"generation log (foreign or pre-log data); refusing "
+                    f"to open it"
+                )
+            _mf.write_gen(base_dir, 0, [], [], None, backend=self._mf_backend)
         if manifest_backend is not None and not getattr(
             manifest_backend, "is_local", False
         ):
@@ -327,27 +328,6 @@ class StreamStore:
         # serialize on it within this process
         self._rewrite_mu = threading.RLock()
         os.makedirs(base_dir, exist_ok=True)
-        if adopt:
-            if not getattr(self._mf_backend, "data_is_local", False) and any(
-                rel.endswith(".parquet")
-                for rel, _mt in _mf.LOCAL.walk_files(base_dir)
-            ):
-                # an existing LOCAL listing-layout directory cannot be
-                # adopted into a backend whose DATA plane is a bucket:
-                # the bootstrap would checkpoint the (empty) bucket and
-                # silently hide every local record — migrate on the
-                # local backend first, then copy the objects
-                # (code-review r15; a SPLIT backend with local data,
-                # e.g. InMemoryCASBackend, bootstraps fine)
-                raise RuntimeError(
-                    f"store {base_dir!r} holds local listing-layout data "
-                    f"but the manifest_backend's data plane is non-local; "
-                    f"migrate with the local backend before pointing it "
-                    f"at a bucket"
-                )
-            # adopting an existing listing-layout directory: opening it
-            # must never make existing records invisible
-            self._manifest_bootstrap()
         # Hot state is recovered LAZILY, per touched stream: a store
         # opened over existing data probes storage on a stream's first
         # touch (never silently restarting it at seq 0), and only
@@ -387,9 +367,7 @@ class StreamStore:
         # (dogfooding: audit inherits sequencing/retention/read).
         from s2_spark.operators.audit import OpsAudit
 
-        self.audit = OpsAudit(
-            spark, os.path.join(base_dir, "_audit"), self._clock, store=self
-        )
+        self.audit = OpsAudit(spark, self, self._clock)
         if self.catalog.audit is None:
             self.catalog.audit = self.audit
 
@@ -653,22 +631,11 @@ class StreamStore:
                 if stage_grace_ms is not None
                 else max(grace_ms, 3_600_000)
             )
-            # defaults chosen for backends written against the PRE-r15
-            # seam (manifest-log only, data always local): such a
-            # backend has host-local data and no list_data_dir
-            backend_local = getattr(
-                bk, "data_is_local", getattr(bk, "is_local", True)
-            )
-            list_data = getattr(bk, "list_data_dir", None) or _mf.LOCAL.list_dir
-            for entry in list_data(self.base_dir):
+            for entry in bk.list_data_dir(self.base_dir):
                 if entry.startswith(("_stage-", "_compact-stage-")):
                     p = os.path.join(self.base_dir, entry)
                     m = re.search(r"stage-(\d+)-", entry)
-                    if (
-                        backend_local
-                        and m
-                        and _pid_alive(int(m.group(1)))
-                    ):
+                    if bk.data_is_local and m and _pid_alive(int(m.group(1))):
                         continue  # owner still running: in flight
                     mt = bk.mtime_ms(p)
                     if mt is not None and wall_ms - mt >= stage_grace:
@@ -722,19 +689,6 @@ class StreamStore:
                 _mf.release_lease(self.base_dir, lease_id, self._mf_backend)
 
         return _lease()
-
-    def _manifest_bootstrap(self) -> None:
-        """First open of a directory with no generation log: publish
-        generation 1 as a checkpoint of the existing data files, moving
-        visibility into the log (adopting a listing-layout directory
-        must never make its records invisible)."""
-        existing = [
-            rel
-            for rel, _mt in self._mf_backend.walk_files(self.base_dir)
-            if rel.endswith(".parquet")
-        ]
-        if existing:
-            self._manifest_publish(add=existing)
 
     def _bucket_of(self, basin: str, stream: str) -> int:
         import zlib
@@ -2092,7 +2046,7 @@ class StreamStore:
         output, move its part files into the data layout under fresh
         (UUID) names, then COMMIT by publishing one generation that
         adds them and removes exactly the files the rewrite consumed.
-        Metadata directories (``_meta``, ``_audit``, ``_manifest``)
+        Metadata directories (``_meta``, ``_manifest``)
         are never consumed, so a rewrite leaves the control plane
         alone.
 

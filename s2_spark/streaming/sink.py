@@ -12,28 +12,31 @@ foreachBatch alone is at-least-once (a crash after the append but
 before Spark's checkpoint commit replays the epoch). The sink keeps a
 tiny epoch log under ``{base_dir}/_sink_epochs/{sink_id}``:
 
-- before appending, an ``<epoch>.intent`` marker records, per touched
-  stream: the pre-append tail, the batch's record count, and a digest
-  of the batch's FIRST record (headers+body — the sequencing-stable
-  fields; the stored timestamp may differ from the input's);
+- before appending, an ``<epoch>.intent`` marker (format ``"v": 3``)
+  records, per touched stream: the pre-append tail, the batch's record
+  count, a digest of the batch's FIRST record and a digest of its
+  whole record range (headers+body — the sequencing-stable fields; the
+  stored timestamp may differ from the input's);
 - after appending, the epoch is marked done and the intent removed;
 - a replayed epoch already marked done is skipped outright;
 - a replayed epoch with only ``intent`` present decides per stream
   whether the crashed attempt's append committed by PROBING STORAGE,
   not by tail movement: the crashed attempt computed its seqs from the
-  recorded tails, so if it landed at all, its first record for stream
-  k sits exactly at seq ``tails[k]``. A digest match there proves the
-  commit; a differing record there is a foreign append (a second
-  producer, or retention's in-band trim-command records — both advance
-  the tail WITHOUT our records landing, the round-6 design's silent
-  data-loss hole) and the replay proceeds. Per-stream verdicts repair
-  even a cross-stream partial commit (re-append only the streams whose
-  records never landed). Two states refuse to guess and raise
+  recorded tails, so if it landed at all, its records for stream k
+  sit exactly at seqs ``[tails[k], tails[k]+counts[k])``. Digest
+  matches over that whole range prove the commit; a differing record
+  there is a foreign append (a second producer, or retention's in-band
+  trim-command records — both advance the tail WITHOUT our records
+  landing, so tail movement alone would lose data) and the replay
+  proceeds. Per-stream verdicts repair even a cross-stream partial
+  commit (re-append only the streams whose records never landed).
+  Three states refuse to guess and raise
   :class:`ExactlyOnceUnverifiable` instead of silently choosing: the
-  evidence record was compacted away, or a digest match with a tail
-  short of ``tails[k]+counts[k]`` (would contradict the per-stream
-  write atomicity the sink relies on — one sequenced task file per
-  stream per batch).
+  evidence range was compacted or trimmed away, a first-record match
+  with a tail short of ``tails[k]+counts[k]`` (would contradict the
+  per-stream write atomicity the sink relies on — one sequenced task
+  file per stream per batch), or an intent in any format but v3,
+  which carries no range evidence.
 
 **Epoch-log compaction**: markers would otherwise accumulate forever
 (a 1 s-trigger query creates ~86k files/day). The log keeps a single
@@ -270,14 +273,13 @@ def append_sink(
     def _committed_streams(before: dict) -> dict[str, bool]:
         """Per-stream verdict for a crashed attempt: did its append
         land? Decided by the storage probe described in the module
-        docstring, never by tail movement alone. With a v3 intent the
-        probe covers the ENTIRE recorded range, so a false "committed"
-        requires a foreign writer to have landed every record of the
-        batch byte-identically at exactly the recorded seqs — the
-        documented residual alias, vanishingly narrower than the old
-        first-record-only check."""
-        tails, counts, digests = before["tails"], before["counts"], before["digests"]
-        range_digests = before.get("range_digests", {})
+        docstring, never by tail movement alone. The probe covers the
+        ENTIRE recorded range, so a false "committed" requires a
+        foreign writer to have landed every record of the batch
+        byte-identically at exactly the recorded seqs — the documented
+        residual alias."""
+        tails, counts = before["tails"], before["counts"]
+        digests, range_digests = before["digests"], before["range_digests"]
         verdicts: dict[str, bool] = {}
         keys = [tuple(k.split(_KEY_SEP, 1)) for k in tails]
         store._ensure_states(keys)
@@ -320,10 +322,6 @@ def append_sink(
                     "partial within-stream commit contradicts the "
                     "sink's per-stream write atomicity"
                 )
-            rd = range_digests.get(k)
-            if rd is None:
-                verdicts[k] = True  # v2 intent: first-record evidence only
-                continue
             if len(rows) != n or rows[-1]["seq_num"] != t0 + n - 1:
                 raise ExactlyOnceUnverifiable(
                     f"epoch replay: seqs [{t0}, {t0 + n}) of {b}/{s} are "
@@ -334,7 +332,7 @@ def append_sink(
             # whole-range check: first record matched but the rest must
             # too, else the range is a foreign writer's (first-record
             # byte-alias) and our records never landed
-            verdicts[k] = _range_digest(rows) == rd
+            verdicts[k] = _range_digest(rows) == range_digests[k]
         return verdicts
 
     def _intent_payload(batch_df: DataFrame) -> dict:
@@ -424,35 +422,23 @@ def append_sink(
                 # crashed attempt: decide per stream from storage
                 with open(intent) as f:
                     before = json.load(f)
-                if before.get("v") not in (2, 3):
-                    # pre-digest intent (round-6 format): tail movement
-                    # is not attributable — refuse to guess
-                    keys = [tuple(k.split(_KEY_SEP, 1)) for k in before]
-                    store._ensure_states(keys)
-                    if any(
-                        store._st(b, s).tail_seq > before[f"{b}{_KEY_SEP}{s}"]
-                        for b, s in keys
-                    ):
-                        raise ExactlyOnceUnverifiable(
-                            "epoch replay: legacy (v1) intent with moved "
-                            "tails — upgrade wrote no record digests, so "
-                            "the advance cannot be attributed"
-                        )
-                    # tails unmoved: the crashed attempt wrote nothing —
-                    # but THIS replay can itself crash mid-append, so
-                    # upgrade the intent to a digest-bearing one first:
-                    # a second crash is then decidable by the probe
-                    # instead of permanently unverifiable
-                    log.write_intent(epoch_id, _intent_payload(batch_df))
-                else:
-                    verdicts = _committed_streams(before)
-                    if all(verdicts.values()):
-                        log.mark_done(epoch_id)
-                        _remove_quiet(intent)
-                        return
-                    replay_only = [k for k, ok in verdicts.items() if not ok]
-                    if len(replay_only) == len(verdicts):
-                        replay_only = None  # nothing landed: full replay
+                if before.get("v") != 3:
+                    # no range evidence: a moved tail cannot be
+                    # attributed, so neither replaying nor skipping is
+                    # provably exactly-once
+                    raise ExactlyOnceUnverifiable(
+                        f"epoch replay: intent {intent!r} is not a v3 "
+                        "intent (no record-range digests); cannot decide "
+                        "whether the crashed attempt committed"
+                    )
+                verdicts = _committed_streams(before)
+                if all(verdicts.values()):
+                    log.mark_done(epoch_id)
+                    _remove_quiet(intent)
+                    return
+                replay_only = [k for k, ok in verdicts.items() if not ok]
+                if len(replay_only) == len(verdicts):
+                    replay_only = None  # nothing landed: full replay
             else:
                 log.write_intent(epoch_id, _intent_payload(batch_df))
             to_append = batch_df

@@ -23,10 +23,9 @@ Re-expresses the reference's read-session / live-tail machinery
   backlog is throttled from the first micro-batch, the reference's
   streamer.rs:815-838 contract) and is still never bought at the cost
   of exactly-once: with no durable file (caps newly enabled, non-POSIX
-  filesystem) the first window falls back to uncapped. v1 (plain-int)
-  checkpoint values are accepted and upgraded in place; their
-  generation is unknowable, so purges predating the upgrade are not
-  replayed (disclosed migration boundary).
+  filesystem) the first window falls back to uncapped. An offset value
+  in any other shape (a plain int, written before offsets carried the
+  generation) raises ``ValueError``: its generation is unknowable.
 - **latestOffset** = the tails scan (``check_tail``, A15).
 - **partitions** = one input split per stream per micro-batch — the
   per-stream single-reader discipline; N streams read in parallel
@@ -72,8 +71,7 @@ def _parquet_files(path: str, backend=None) -> list[str]:
     directory walk would double-count every record. The fold is
     lock-free (generation files are immutable once published) —
     exactly the reader protocol the store's own ``records_df`` uses.
-    A directory with no generation log (an empty store, or a legacy
-    listing-layout directory no store has opened yet) is walked.
+    A directory with no generation log lists no files.
 
     ``backend`` reads a store whose log (and data) live in a
     non-local :mod:`s2_spark.manifest` backend — wired from the
@@ -96,26 +94,19 @@ def _listed_pairs(path: str, backend=None) -> list[tuple[str, str]]:
         path
     ):
         # the generation log lives in a non-local PublishBackend this
-        # local-backend scanner cannot reach — a listing fallback would
-        # double-count delisted originals after a compaction
+        # local-backend scanner cannot reach — folding the local path
+        # would silently list no files
         raise RuntimeError(
             f"store {path!r} uses an external manifest backend; pass "
             f"the matching spec via .option('backend', …) so the "
             f"source can read the generation log"
         )
-    if _mf.is_manifest_store(path, bk):
-        _, visible = _mf.fold(path, bk)
-        pairs = [
-            (p, bk.spark_path(p))
-            for rel in visible
-            if bk.exists(p := os.path.join(path, rel))
-        ]
-    else:
-        pairs = []
-        for rel, _mt in bk.walk_files(path):
-            if rel.endswith(".parquet"):
-                p = os.path.join(path, rel)
-                pairs.append((p, bk.spark_path(p)))
+    _, visible = _mf.fold(path, bk)
+    pairs = [
+        (p, bk.spark_path(p))
+        for rel in visible
+        if bk.exists(p := os.path.join(path, rel))
+    ]
     pairs.sort(key=lambda t: t[1])
     return pairs
 
@@ -497,15 +488,9 @@ class S2StreamReader(DataSourceStreamReader):
         # while the query was DOWN (the checkpoint remembers the start
         # generation; latestOffset reports the current one).
         self._purge_cache: dict = {}
-        # generations on disk when THIS reader constructed — used (a)
-        # as the generation latestOffset stamps into fresh offsets and
-        # (b) to normalize v1 (pre-generation, plain-int) checkpoint
-        # values: a v1 offset cannot know its generation, so it is
-        # pinned to the generation current at restart — exactly the
-        # old semantics (pre-existing tombstones are history) for
-        # checkpoints that predate the v2 format.
+        # generations on disk when THIS reader constructed: the
+        # generation latestOffset stamps into fresh offsets
         self._gen_seen: dict[str, int] = _purge_gens(self.path, self._purge_cache, self._backend)
-        self._init_gens: dict[str, int] = dict(self._gen_seen)
         # high-water mark: per key the max (gen, seq) ever planned or
         # committed — generation-aware, so a dead generation's late
         # commit (Spark delivers commit(N) only when batch N+1 starts)
@@ -517,23 +502,24 @@ class S2StreamReader(DataSourceStreamReader):
         self._hwm_written: dict[str, tuple[int, int]] = {}
 
     #: offset format version stamped into every emitted offset dict
-    #: under the ``__v`` key. v1 (round-8) offsets were plain
-    #: ``{key: seq}``; v2 values are ``[gen, seq]``. Readers accept
-    #: both — see ``_norm`` — so an r8 checkpoint restarts cleanly.
+    #: under the ``__v`` key; values are ``[gen, seq]`` or
+    #: ``[gen, seq, hwm]``
     OFFSET_VERSION = 2
     _VKEY = "__v"
 
-    def _norm(self, k: str, v, default_gen: int | None = None) -> tuple[int, int]:
-        """(gen, seq) from an offset value of either format. A v1
-        plain-int value is stamped with ``default_gen`` (or the
-        generation current at reader construction): purges that
-        happened before the checkpoint upgraded to v2 are not
-        replayed — the disclosed migration boundary."""
-        if isinstance(v, (list, tuple)):
-            return int(v[0]), int(v[1])
-        if default_gen is None:
-            default_gen = self._init_gens.get(k, 0)
-        return default_gen, int(v)
+    @staticmethod
+    def _norm(k: str, v) -> tuple[int, int]:
+        """(gen, seq) from one offset value. Any other shape — a plain
+        int from a checkpoint written before offsets carried the
+        generation — raises: its generation is unknowable, so resuming
+        it could silently skip a purge's re-delivery."""
+        if not isinstance(v, (list, tuple)):
+            raise ValueError(
+                f"offset for stream {k!r} is {v!r}, not [gen, seq]: this "
+                f"checkpoint predates generation-carrying offsets; "
+                f"restart the query from a fresh checkpoint"
+            )
+        return int(v[0]), int(v[1])
 
     def _hwm_key(self, k: str) -> str:
         """Durable-HWM file key for stream key ``k`` — prefixed with the

@@ -275,28 +275,6 @@ def test_token_store_cas_two_writers_lose_nothing(tmp_path):
     assert ids == {"tok-from-a", "tok-from-b", "tok-from-a2"}
 
 
-def test_token_store_legacy_file_upgrades(tmp_path):
-    """A pre-r15 unversioned tokens.json loads as version 0; the first
-    save writes tokens-000000000001.json."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(tmp_path, "tokens.json"), "w") as f:
-        _json.dump(
-            [{"id": "tok-old", "basins": [["", True]],
-              "streams": [["", True]], "can_read": True,
-              "can_write": False, "expires_at_ms": None,
-              "auto_prefix_streams": False}], f)
-    ts = TokenStore(meta_dir=str(tmp_path))
-    assert ts.get("tok-old").id == "tok-old"
-    ts.issue("tok-new")
-    assert _os.path.exists(
-        _os.path.join(tmp_path, "tokens-000000000001.json")
-    )
-    again = TokenStore(meta_dir=str(tmp_path))
-    assert {t.id for t in again.list()[0]} == {"tok-old", "tok-new"}
-
-
 def test_token_store_cas_hammer_two_threads(tmp_path):
     """Two TokenStore objects hammer interleaved issues from two
     threads; every issue must survive (head-verified versioned saves —

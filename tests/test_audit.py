@@ -265,14 +265,14 @@ class _FakeStore:
         self.appended.extend(records)
 
 
-def _audit_over(spark, tmp_path, fake, **kw):
+def _audit_over(spark, fake, **kw):
     from s2_spark.operators.audit import OpsAudit
 
     clock = iter(range(10**9)).__next__
-    return OpsAudit(spark, str(tmp_path / "_audit"), clock, store=fake, **kw)
+    return OpsAudit(spark, fake, clock, **kw)
 
 
-def test_threshold_flush_is_async_and_lossless(spark, tmp_path):
+def test_threshold_flush_is_async_and_lossless(spark):
     """log() latency must be independent of the flush cost: with a
     0.5 s-per-append backend and threshold 50, 500 logs cross the
     threshold ~10 times — a synchronous flush would make those calls
@@ -282,7 +282,7 @@ def test_threshold_flush_is_async_and_lossless(spark, tmp_path):
     import time as _t
 
     fake = _FakeStore(delay=0.5)
-    audit = _audit_over(spark, tmp_path, fake, flush_threshold=50)
+    audit = _audit_over(spark, fake, flush_threshold=50)
     worst = 0.0
     for i in range(500):
         t0 = _t.perf_counter()
@@ -296,7 +296,7 @@ def test_threshold_flush_is_async_and_lossless(spark, tmp_path):
     assert audit.dropped == 0
 
 
-def test_hard_cap_backpressure_then_counted_drop(spark, tmp_path):
+def test_hard_cap_backpressure_then_counted_drop(spark):
     """A wedged backend (append blocked forever) must not grow the
     buffer unboundedly or block the client beyond the back-pressure
     budget: past hard_cap, log() waits briefly then drops + counts."""
@@ -307,7 +307,6 @@ def test_hard_cap_backpressure_then_counted_drop(spark, tmp_path):
     fake = _FakeStore(gate=gate)
     audit = _audit_over(
         spark,
-        tmp_path,
         fake,
         flush_threshold=4,
         hard_cap=10,
@@ -328,7 +327,7 @@ def test_hard_cap_backpressure_then_counted_drop(spark, tmp_path):
     _t.sleep(0.1)
 
 
-def test_drain_waits_out_inflight_async_flush(spark, tmp_path):
+def test_drain_waits_out_inflight_async_flush(spark):
     """drain() returns only after the background flusher committed the
     in-flight rows — df()-after-drain counts everything without an
     explicit flush."""
@@ -336,7 +335,7 @@ def test_drain_waits_out_inflight_async_flush(spark, tmp_path):
 
     gate = _th.Event()
     fake = _FakeStore(gate=gate)
-    audit = _audit_over(spark, tmp_path, fake, flush_threshold=5)
+    audit = _audit_over(spark, fake, flush_threshold=5)
     for i in range(5):
         audit.log("read", BASIN, f"s{i}")
     gate.set()
@@ -344,16 +343,16 @@ def test_drain_waits_out_inflight_async_flush(spark, tmp_path):
     assert len(fake.appended) == 5
 
 
-def test_hard_cap_below_threshold_rejected(spark, tmp_path):
+def test_hard_cap_below_threshold_rejected(spark):
     """hard_cap < flush_threshold would back-pressure on a flusher that
     can never wake — reject the misconfiguration up front."""
     with pytest.raises(ValueError, match="hard_cap"):
         _audit_over(
-            spark, tmp_path, _FakeStore(), flush_threshold=100, hard_cap=10
+            spark, _FakeStore(), flush_threshold=100, hard_cap=10
         )
 
 
-def test_flush_failure_retries_without_new_traffic(spark, tmp_path, monkeypatch):
+def test_flush_failure_retries_without_new_traffic(spark, monkeypatch):
     """A transient backend failure re-buffers a remainder that can sit
     BELOW the flush threshold; the flusher must retry while any rows
     remain — on a quiescent client (no further log() traffic) the rows
@@ -374,7 +373,7 @@ def test_flush_failure_retries_without_new_traffic(spark, tmp_path, monkeypatch)
         return real_append(basin, stream, records)
 
     fake.append = flaky
-    audit = _audit_over(spark, tmp_path, fake, flush_threshold=15)
+    audit = _audit_over(spark, fake, flush_threshold=15)
     for i in range(15):  # crosses the threshold -> async flush
         audit.log("read", BASIN, f"s{i}")
     # chunk 1 (10 rows) committed, chunk 2 (5 rows) re-buffered: 5 < 15
@@ -392,7 +391,7 @@ def test_flush_failure_retries_without_new_traffic(spark, tmp_path, monkeypatch)
     assert audit.dropped == 0
 
 
-def test_backpressure_drops_oldest_and_reports_drop_rows(spark, tmp_path):
+def test_backpressure_drops_oldest_and_reports_drop_rows(spark):
     """Drop bias + observability: past hard_cap against a wedged
     backend the OLDEST buffered row is evicted (the freshest operations
     survive), the monotonic counter records every loss, and df()
@@ -413,7 +412,6 @@ def test_backpressure_drops_oldest_and_reports_drop_rows(spark, tmp_path):
     fake.catalog.get_stream = _no_stream
     audit = _audit_over(
         spark,
-        tmp_path,
         fake,
         flush_threshold=4,
         hard_cap=10,

@@ -5,10 +5,9 @@ by atomically publishing a generation (s2_spark/manifest.py), delisted
 files outlive in-flight readers until vacuum, and no rename-over-
 readers swap exists at all. These tests pin the protocol's core
 claims: publish atomicity at every crash point, MVCC reader pinning
-across compaction, acked-append survival during churn, adopting a
-legacy listing-layout directory (and refusing a half-swapped one),
-vacuum's grace contract, and the consumed-set normalization
-(ADVICE r12).
+across compaction, acked-append survival during churn, refusing a
+directory of record files with no generation log, vacuum's grace
+contract, and the consumed-set normalization (ADVICE r12).
 
 Reference analogue: SlateDB's manifest+WAL visibility
 (lite/src/backend/kv/mod.rs:55-95) — state is defined by the
@@ -217,7 +216,7 @@ def test_manifest_checkpoint_and_prune(spark, tmp_path):
     # publish resurrection guard); this test targets the prune/fold
     # mechanics themselves
     dropped = mf.prune_log(store.base_dir, entry_grace_ms=0)
-    assert dropped == mf.CHECKPOINT_EVERY - 1
+    assert dropped == mf.CHECKPOINT_EVERY  # generations 0 .. checkpoint-1
     assert mf.fold(store.base_dir) == (gen, files)
     cold = StreamStore(spark, store.base_dir, catalog=store.catalog)
     assert _rows(cold) == [(i, f"k{i}".encode()) for i in range(n)]
@@ -234,52 +233,85 @@ def _legacy_listing_dir(spark, base, n):
     ).write.parquet(base)
 
 
-def test_manifest_bootstrap_migrates_listing_store(spark, tmp_path):
-    """Opening an existing listing-layout directory publishes a
-    checkpoint of its current data files — opening never makes
-    existing records invisible."""
+def _tree_snapshot(*roots):
+    """Every file under ``roots`` (hidden ones included) → its bytes."""
+    out = {}
+    for root in roots:
+        for d, _dirs, fs in os.walk(root):
+            for f in fs:
+                p = os.path.join(d, f)
+                with open(p, "rb") as fh:
+                    out[p] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("sibling", ["none", ".compact", ".trash"])
+def test_record_directory_without_log_is_refused(spark, tmp_path, sibling):
+    """Every store writes its generation log before its first record
+    file, so a directory of record files with no log (a legacy
+    listing-layout directory, whole or left mid-compaction-swap with a
+    ``<base>.compact``/``<base>.trash`` sibling) is not this store's:
+    opening it fails loudly, names the directory, and changes no
+    file."""
+    base = str(tmp_path / "records")
+    _legacy_listing_dir(spark, base, 3)
+    roots = [base]
+    if sibling != "none":
+        os.makedirs(base + sibling)
+        roots.append(base + sibling)
+    before = _tree_snapshot(*roots)
+    with pytest.raises(RuntimeError, match=re.escape(base)):
+        StreamStore(spark, base)
+    assert not mf.is_manifest_store(base)
+    assert _tree_snapshot(*roots) == before
+
+
+def test_concurrent_opens_of_a_fresh_directory_both_succeed(
+    spark, tmp_path, monkeypatch
+):
+    """Two stores opening one fresh directory at once both open, and
+    the store they start is empty at generation 0. A store whose
+    first log check ran before the other wrote generation 0 and
+    appended sees record files on its walk; the log re-check after the
+    walk lets it open instead of refusing the other store's data."""
+    import threading
+
+    base = str(tmp_path / "records")
+    gate = threading.Barrier(2)
+    opened, errs = [], []
+
+    def open_store():
+        try:
+            gate.wait()
+            opened.append(StreamStore(spark, base))
+        except Exception as e:  # pragma: no cover - the assertion
+            errs.append(e)
+
+    ths = [threading.Thread(target=open_store) for _ in range(2)]
+    for t in ths:
+        t.start()
+    for t in ths:
+        t.join()
+    assert not errs, errs
+    assert len(opened) == 2
+    assert StreamStore(spark, base)._manifest_current() == (0, set())
+
     cat = Catalog(spark)
     cat.create_basin(B, BasinConfig(create_stream_on_append=True))
-    cat.create_stream(B, "s1")
-    base = str(tmp_path / "records")
-    _legacy_listing_dir(spark, base, 3)
-    assert not mf.is_manifest_store(base)
-    upgraded = StreamStore(spark, base, catalog=cat)
-    assert mf.is_manifest_store(base)
-    assert _rows(upgraded) == [(i, f"m{i}".encode()) for i in range(3)]
-    upgraded.append(B, "s1", [Record(body=b"m3")])
-    upgraded.compact()
-    upgraded.vacuum(grace_ms=0)
-    assert _rows(upgraded) == [(i, f"m{i}".encode()) for i in range(4)]
-    cold = StreamStore(spark, base, catalog=cat)
-    assert _rows(cold) == [(i, f"m{i}".encode()) for i in range(4)]
+    first = StreamStore(spark, base, catalog=cat)
+    first.append(B, "s1", [Record(body=b"m0")])
+    real = mf.is_manifest_store
+    calls = []
 
+    def stale_once(*a, **kw):
+        calls.append(a)
+        return False if len(calls) == 1 else real(*a, **kw)
 
-@pytest.mark.parametrize("sibling", [".compact", ".trash"])
-def test_half_swapped_legacy_directory_is_refused(spark, tmp_path, sibling):
-    """A listing-layout store that crashed mid-compaction-swap left its
-    consumed files in ``<base>.trash`` and its compacted files in
-    ``<base>.compact``: adopting the directory would checkpoint a
-    partial file set and silently drop acked records, so opening it
-    fails loudly, names the directory, and publishes nothing."""
-    cat = Catalog(spark)
-    cat.create_basin(B)
-    cat.create_stream(B, "s1")
-    base = str(tmp_path / "records")
-    _legacy_listing_dir(spark, base, 3)
-    os.makedirs(base + sibling)
-    with pytest.raises(
-        RuntimeError, match=re.escape(base) + ".*" + re.escape(sibling)
-    ):
-        StreamStore(spark, base, catalog=cat)
-    assert not mf.is_manifest_store(base)
-    # a store with a generation log never reads the siblings
-    os.rmdir(base + sibling)
-    StreamStore(spark, base, catalog=cat)
-    os.makedirs(base + sibling)
-    assert _rows(StreamStore(spark, base, catalog=cat)) == [
-        (i, f"m{i}".encode()) for i in range(3)
-    ]
+    monkeypatch.setattr(mf, "is_manifest_store", stale_once)
+    second = StreamStore(spark, base, catalog=cat)
+    monkeypatch.setattr(mf, "is_manifest_store", real)
+    assert len(calls) == 2  # the stale check, then the re-check
+    assert _rows(second) == [(0, b"m0")]
 
 
 def test_manifest_trim_retention_rewrite(spark, tmp_path):
@@ -533,7 +565,8 @@ def test_inmemory_cas_backend_full_store_roundtrip(spark, tmp_path):
     assert _rows(store) == want
     assert store.vacuum(grace_ms=0) == n_before
     assert _rows(store) == want
-    assert backend.puts == store._manifest_current()[0]  # 1 put per gen
+    # generation 0 (written at open) plus 1 put per published gen
+    assert backend.puts == store._manifest_current()[0] + 1
     # no generation objects leaked onto the local filesystem — only the
     # external-backend breadcrumb that keeps path-only readers and
     # backend-less reopens from silently falling back to listings

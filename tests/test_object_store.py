@@ -352,32 +352,6 @@ def test_catalog_cas_concurrent_mutators_lose_nothing(spark, tmp_path):
         b.create_stream(B, "from-a")
 
 
-def test_catalog_legacy_unversioned_file_upgrades_in_place(spark, tmp_path):
-    """A pre-r15 store's unversioned catalog.parquet loads as version
-    0, and the first CAS save writes catalog-000000000001.parquet."""
-    meta = str(tmp_path / "_meta")
-    old = Catalog(spark, meta_dir=meta)
-    old.create_basin(B, BasinConfig(create_stream_on_append=True))
-    # simulate the legacy layout: collapse versioned objects into the
-    # unversioned name
-    import glob as _glob
-
-    versioned = sorted(_glob.glob(os.path.join(meta, "catalog-*.parquet")))
-    assert versioned, "expected versioned saves"
-    os.replace(versioned[-1], os.path.join(meta, "catalog.parquet"))
-    for p in versioned[:-1]:
-        if os.path.exists(p):
-            os.remove(p)
-    upgraded = Catalog(spark, meta_dir=meta)
-    assert upgraded.get_basin(B).name == B
-    upgraded.create_stream(B, "s-new")
-    assert os.path.exists(
-        os.path.join(meta, "catalog-000000000001.parquet")
-    )
-    again = Catalog(spark, meta_dir=meta)
-    assert again.get_stream(B, "s-new").name == "s-new"
-
-
 def test_tails_scan_works_without_local_base_dir(spark, tmp_path):
     """Code-review r15: _tails gated on LOCAL filesystem state
     (os.path.isdir) even with a non-local backend, so a reader host without the local base_dir silently

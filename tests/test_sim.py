@@ -983,8 +983,15 @@ def test_sim_compaction_during_cc_loop_manifest_no_pause(spark, tmp_path, seed):
     assert got == expected
 
 
-@pytest.mark.parametrize("seed", [17, 5150])
-def test_sim_staged_append_kill_point(spark, tmp_path, seed):
+@pytest.mark.parametrize(
+    "seed, fresh",
+    [
+        pytest.param(17, False, id="17"),
+        pytest.param(5150, False, id="5150"),
+        pytest.param(17, True, id="fresh"),
+    ],
+)
+def test_sim_staged_append_kill_point(spark, tmp_path, seed, fresh):
     """Kill-point chaos for the staged bulk commit's per-file move loop
     (``finalize_data``): a bulk_append batch spanning both streams is
     interrupted before a random part file's move, while readers poll
@@ -993,7 +1000,13 @@ def test_sim_staged_append_kill_point(spark, tmp_path, seed):
     stream — fully visible if bulk_append returned, fully invisible if
     the kill fired, never a per-file subset. Reads never fail, each
     stream's pre-batch rows stay intact, check_tail equals the visible
-    count, and later appends continue from the recovered tail."""
+    count, and later appends continue from the recovered tail.
+
+    ``fresh``: no append or compaction precedes the batch, and the
+    kill fires after the first part file's move, so the killed batch
+    is the directory's first commit. Reopening must not publish the
+    moved orphan: every stream stays empty and later appends start at
+    seq 0."""
     import os as _os
     import threading
 
@@ -1006,7 +1019,7 @@ def test_sim_staged_append_kill_point(spark, tmp_path, seed):
     pre: dict[str, list] = {s: [] for s in STREAMS}
     for s in STREAMS:
         store.catalog.create_stream(BASIN, s)
-        for i in range(rng.randint(1, 4)):
+        for i in range(0 if fresh else rng.randint(1, 4)):
             body = f"{s}-pre{i}".encode()
             store.append(BASIN, s, [Record(body=body)])
             pre[s].append(body)
@@ -1049,13 +1062,16 @@ def test_sim_staged_append_kill_point(spark, tmp_path, seed):
                 errs.append(e)
                 return
 
-    th_r = threading.Thread(target=poll_reads)
-    th_c = threading.Thread(target=churn)
-    th_r.start()
-    th_c.start()
+    # no compaction races the fresh case's batch: a compaction
+    # publishes a generation, and the batch must be the first commit
+    ths = [threading.Thread(target=poll_reads)]
+    if not fresh:
+        ths.append(threading.Thread(target=churn))
+    for th in ths:
+        th.start()
 
     real_replace = _os.replace
-    calls = {"n": 0, "limit": rng.randint(1, 4)}
+    calls = {"n": 0, "limit": 2 if fresh else rng.randint(1, 4)}
 
     def bomb(src, dst):
         if "_stage-" in str(src):
@@ -1076,9 +1092,10 @@ def test_sim_staged_append_kill_point(spark, tmp_path, seed):
     finally:
         _os.replace = real_replace
         stop.set()
-        th_r.join()
-        th_c.join()
+        for th in ths:
+            th.join()
     assert not errs, errs
+    assert killed or not fresh
 
     cold = StreamStore(spark, base, bucket_count=8)
     cold.recover_state()

@@ -304,26 +304,27 @@ def _sink_batch(spark, n, start=0, stream="s1"):
 
 
 def _crash_intent(spark, store, df, key_tails):
-    """Build the v2 intent a crashed attempt would have left behind:
-    recorded tails per key + the batch's per-stream count and
-    first-record digest (what the sink writes before appending)."""
-    from s2_spark.streaming.sink import _record_digest
+    """Build the v3 intent a crashed attempt would have left behind:
+    recorded tails per key + the batch's per-stream count, first-record
+    digest and whole-range digest (what the sink writes before
+    appending)."""
+    from s2_spark.streaming.sink import _range_digest, _record_digest
 
-    agg = (
-        df.groupBy("basin", "stream")
-        .agg(
-            F.count("*").alias("n"),
-            F.min_by(F.struct("headers", "body"), F.col("ingest_order")).alias(
-                "first"
-            ),
-        )
-        .collect()
-    )
-    out = {"v": 2, "tails": dict(key_tails), "counts": {}, "digests": {}}
-    for r in agg:
-        k = f"{r['basin']}\x00{r['stream']}"
-        out["counts"][k] = r["n"]
-        out["digests"][k] = _record_digest(r["first"]["headers"], r["first"]["body"])
+    by_key: dict[str, list] = {}
+    for r in df.select("basin", "stream", "ingest_order", "headers", "body").collect():
+        by_key.setdefault(f"{r['basin']}\x00{r['stream']}", []).append(r)
+    out = {
+        "v": 3,
+        "tails": dict(key_tails),
+        "counts": {},
+        "digests": {},
+        "range_digests": {},
+    }
+    for k, rows in by_key.items():
+        rows.sort(key=lambda r: r["ingest_order"])
+        out["counts"][k] = len(rows)
+        out["digests"][k] = _record_digest(rows[0]["headers"], rows[0]["body"])
+        out["range_digests"][k] = _range_digest(rows)
     return out
 
 
@@ -527,7 +528,7 @@ def test_source_restart_rate_limit_never_redelivers(spark, store):
     opts = {"path": store.base_dir, "basin": BASIN, "maxrecordspertrigger": "10"}
 
     # a prior run committed through offset 50 (checkpointed)
-    checkpointed = {key: 50}
+    checkpointed = {"__v": 2, key: [0, 50]}
 
     r2 = S2StreamReader(opts)  # cold restart: no baseline
     end1 = r2.latestOffset()
@@ -783,6 +784,7 @@ def test_tails_mixed_row_group_fallback(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from s2_spark import manifest as mf
     from s2_spark.streaming.source import SEP, _tails
 
     tbl = pa.table(
@@ -797,6 +799,7 @@ def test_tails_mixed_row_group_fallback(tmp_path):
     d = tmp_path / "mixed"
     d.mkdir()
     pq.write_table(tbl, d / "part-0.parquet")
+    mf.publish(str(d), add=["part-0.parquet"])
     stats: dict = {}
     tails = _tails(str(d), None, stats)
     assert tails == {f"b{SEP}s1": 2, f"b{SEP}s2": 6}
@@ -1416,47 +1419,32 @@ def test_sink_replay_range_probe_confirms_genuine_commit(spark, store):
     assert store.check_tail(BASIN, "s1")[0] == 3
 
 
-def test_sink_v1_intent_upgraded_before_replay_append(spark, store, monkeypatch):
-    """The v1 (round-6) replay path with unmoved tails must upgrade the
-    intent to a digest-bearing v3 BEFORE appending, so a crash during
-    THIS replay is decidable next time instead of permanently
-    ExactlyOnceUnverifiable."""
+def test_sink_non_v3_intent_refused(spark, store):
+    """The sink writes only v3 intents (whole-range digests). A replay
+    that finds any other intent format cannot attribute a moved tail,
+    so it raises before appending anything or touching the epoch
+    log."""
     import json
     import os
 
-    from s2_spark.streaming.sink import append_sink
+    from s2_spark.streaming.sink import ExactlyOnceUnverifiable, append_sink
 
     df = _sink_batch(spark, 3)
-    epochs = os.path.join(store.base_dir, "_sink_epochs", "q-v1")
+    epochs = os.path.join(store.base_dir, "_sink_epochs", "q-old")
     os.makedirs(epochs, exist_ok=True)
-    with open(os.path.join(epochs, "0.intent"), "w") as f:
-        json.dump({f"{BASIN}\x00s1": 0}, f)  # v1: bare key->tail map
-    commit = append_sink(store, sink_id="q-v1")
-
-    real_bulk = store.bulk_append
-    crashed = {"on": True}
-
-    def crashing_bulk(*a, **kw):
-        if crashed["on"]:
-            crashed["on"] = False
-            raise RuntimeError("crash mid-replay-append")
-        return real_bulk(*a, **kw)
-
-    monkeypatch.setattr(store, "bulk_append", crashing_bulk)
-    with pytest.raises(RuntimeError, match="crash mid-replay-append"):
-        commit(df, 0)
-    # the intent on disk is now v3 with digests — decidable evidence
-    with open(os.path.join(epochs, "0.intent")) as f:
-        upgraded = json.load(f)
-    assert upgraded["v"] == 3 and upgraded["range_digests"]
-    # second replay (no crash) completes exactly-once
-    commit(df, 0)
-    assert store.check_tail(BASIN, "s1")[0] == 3
-    assert [bytes(r.body) for r in store.read(BASIN, "s1").collect()] == [
-        b"r0",
-        b"r1",
-        b"r2",
-    ]
+    intent = os.path.join(epochs, "0.intent")
+    for old in (
+        {f"{BASIN}\x00s1": 0},  # bare key -> tail map
+        {**_crash_intent(spark, store, df, {f"{BASIN}\x00s1": 0}), "v": 2},
+    ):
+        with open(intent, "w") as f:
+            json.dump(old, f)
+        with pytest.raises(ExactlyOnceUnverifiable, match="not a v3"):
+            append_sink(store, sink_id="q-old")(df, 0)
+        assert store.check_tail(BASIN, "s1")[0] == 0
+        assert sorted(os.listdir(epochs)) == ["0.intent"]
+        with open(intent) as f:
+            assert json.load(f) == old
 
 
 def test_sink_orphan_intents_are_cleaned(spark, store):
@@ -1645,54 +1633,20 @@ def test_purge_while_reader_down_rebases_from_checkpoint(spark, store):
     assert parts == []  # and exactly once
 
 
-def test_v1_checkpoint_offsets_accepted_and_upgraded(spark, store):
-    """An r8 checkpoint holds plain-int offsets. The v2 reader must
-    resume them in place — no spurious rebase, no re-delivery — and
-    emit v2 offsets from the first trigger on."""
+def test_plain_int_offset_refused(spark, store):
+    """Offsets carry the purge generation (``[gen, seq]``). A plain-int
+    value, from a checkpoint written before that format, has no
+    knowable generation: planning or committing it raises instead of
+    guessing one."""
     k = f"{BASIN}\x00s1"
     store.append(BASIN, "s1", _recs(6))
     r = _reader(store)
-    start_v1 = {k: 4}  # r8-format checkpointed offset
     o = r.latestOffset()
-    assert o == {"__v": 2, k: [0, 6]}  # upgraded format from trigger one
-    parts = [
-        (p.stream, p.start, p.end) for p in r.partitions(start_v1, o) if p.stream
-    ]
-    assert parts == [("s1", 4, 6)]  # resumes exactly where v1 stopped
-    r.commit({k: 6})  # v1-format commit value also accepted
-    parts = [
-        (p.stream, p.start, p.end)
-        for p in r.partitions(o, r.latestOffset())
-        if p.stream
-    ]
-    assert parts == []
-
-
-def test_v1_checkpoint_purge_before_restart_keeps_r8_semantics(spark, store):
-    """Disclosed migration boundary: a purge that happened while the
-    query was down and BEFORE its checkpoint upgraded to v2 cannot be
-    detected (the v1 offset carries no generation), so the v1 value is
-    pinned to the restart-time generation — r8's exact behavior. New
-    records past the pinned position still deliver."""
-    k = f"{BASIN}\x00dead"
-    store.catalog.create_stream(BASIN, "dead")
-    store.append(BASIN, "dead", _recs(4))
-    # r8 code checkpointed {k: 4}; while down: purge + recreate(tail 2)
-    _purge_recreate(store, "dead", 2)
-    r = _reader(store)  # restart with the v2 reader
-    o = r.latestOffset()
-    assert o == {"__v": 2, k: [1, 2]}
-    parts = [
-        (p.stream, p.start, p.end) for p in r.partitions({k: 4}, o) if p.stream
-    ]
-    assert parts == []  # v1 start pins the position: not replayed (r8 parity)
-    r.commit(o)
-    store.append(BASIN, "dead", _recs(3, start=100))  # tail 2 → 5
-    o2 = r.latestOffset()
-    parts = [
-        (p.stream, p.start, p.end) for p in r.partitions(o, o2) if p.stream
-    ]
-    assert parts == [("dead", 4, 5)]  # past the pinned v1 position
+    assert o == {"__v": 2, k: [0, 6]}
+    with pytest.raises(ValueError, match="predates"):
+        r.partitions({k: 4}, o)
+    with pytest.raises(ValueError, match="predates"):
+        r.commit({k: 6})
 
 
 def test_rebase_with_rate_limit_delivers_new_generation_windowed(spark, store):
