@@ -189,8 +189,7 @@ def deletion_purge_sweep(store: StreamStore) -> list[str]:
         for (basin, stream), meta in store.catalog.streams.items()
         if meta.deleted_at is not None
     ]
-    if store._has_data():
-        store.apply_trim_and_retention(drop_streams=doomed or None)
+    store.apply_trim_and_retention(drop_streams=doomed or None)
     # the purged streams' hot state must not outlive their data
     with store._meta_mu:
         for key in doomed:

@@ -328,17 +328,10 @@ class StreamStore:
         # serialize on it within this process
         self._rewrite_mu = threading.RLock()
         os.makedirs(base_dir, exist_ok=True)
-        # Hot state is recovered LAZILY, per touched stream: a store
-        # opened over existing data probes storage on a stream's first
-        # touch (never silently restarting it at seq 0), and only
-        # touched streams occupy driver memory — the reference's
-        # actor-cache shape with its 60 s dormancy eviction
-        # (streamer.rs:55) rather than an eager all-streams scan.
-        self._data_seen = False
         # snapshot cache, keyed by the bucket hint (None = the full
         # table; single-stream reads add one pruned snapshot per
         # touched bucket). One epoch fences all.
-        self._records_cache: dict[int | None, DataFrame] = {}
+        self._records_cache: dict[int | None, tuple[DataFrame, frozenset]] = {}
         # epoch fencing for the snapshot cache: bumped by every
         # invalidation so a reader that started FOLDING before a
         # concurrent append cannot cache its pre-append snapshot after
@@ -347,15 +340,18 @@ class StreamStore:
         # acked records; found by the round-11 linearizability soak)
         self._records_epoch = 0
         self._records_mu = threading.Lock()
-        self._probe_unknown_streams = self._has_data()
+        # Hot state is recovered LAZILY, per touched stream: a store
+        # opened over existing data probes storage on a stream's first
+        # touch (never silently restarting it at seq 0), and only
+        # touched streams occupy driver memory — the reference's
+        # actor-cache shape with its 60 s dormancy eviction
+        # (streamer.rs:55) rather than an eager all-streams scan. A store
+        # opened over no visible file has nothing to probe.
+        self._probe_unknown_streams = bool(self._manifest_current()[1])
         self._evicted: set[tuple[str, str]] = set()
         self._touched_ms: dict[tuple[str, str], int] = {}
         self._last_sweep_ms = 0
-        # temp-view prefixes attached while the store was still empty;
-        # refreshed to live SQL views on the first append (see
-        # attach_views)
-        self._stale_view_prefixes: set[str] = set()
-        # prefixes with live record-derived views attached; every
+        # prefixes with record-derived views attached; every
         # write-side invalidation re-attaches these (the views snapshot
         # one generation's file list)
         self._attached_view_prefixes: set[str] = set()
@@ -392,7 +388,7 @@ class StreamStore:
                     self._state[key] = st
             self._touched_ms[key] = now
         if need_recover:
-            rec = self._recover_one(basin, stream)
+            rec = self._recover([key]).get(key, _StreamState())
             with self._meta_mu:
                 # insert-if-absent: a concurrent touch may have recovered
                 # (and even advanced) this stream already — keep theirs
@@ -421,16 +417,6 @@ class StreamStore:
                 self._evicted.add(key)
                 n += 1
         return n
-
-    def _has_data(self) -> bool:
-        """True once any record file is visible in the generation log
-        (orphaned unpublished files must not count as data). Sticky:
-        the flag only ever flips False→True (deleting every record
-        later just means reads see an empty DataFrame, which the
-        schema-pinned ``records_df`` read handles)."""
-        if not self._data_seen and self._manifest_current()[1]:
-            self._data_seen = True
-        return self._data_seen
 
     # --- manifest-MVCC visibility -----------------------------------------
 
@@ -696,9 +682,19 @@ class StreamStore:
         return zlib.crc32(f"{basin}\x00{stream}".encode()) % self.bucket_count
 
     def records_df(self, bucket: int | None = None) -> DataFrame:
-        """The raw records table (commands included, trim not applied).
-        In bucketed layout the partition column rides along so stream
-        filters prune directories.
+        """The raw records table (commands included, trim not applied)
+        over the current generation's visible files — the relation of
+        :meth:`_records_snapshot`. Every read path goes through here."""
+        return self._records_snapshot(bucket)[0]
+
+    def _records_snapshot(
+        self, bucket: int | None = None
+    ) -> tuple[DataFrame, frozenset]:
+        """``(records DataFrame, visible relpaths it lists)`` for one
+        generation. In bucketed layout the partition column rides along
+        so stream filters prune directories. With no visible file the
+        relation is the empty, schema-pinned one (the bucket column
+        included, so an empty plan can still ``partitionBy``).
 
         ``bucket`` prunes the EXPLICIT file list to one ``bucket=N``
         subtree before the reader is built: a read names every visible
@@ -708,13 +704,14 @@ class StreamStore:
 
         The file list is an immutable snapshot of one generation: no
         write moves a file a plan has captured (delisted files outlive
-        in-flight plans until :meth:`vacuum`). The DataFrame is cached
-        between writes: every append/compaction of this store
-        invalidates it (:meth:`_invalidate_records`), so read-heavy
-        paths — follow sessions polling for new batches above all —
-        skip a rebuild per call. The cache is keyed by the bucket hint
-        (one snapshot per touched bucket, all fenced by the same
-        epoch)."""
+        in-flight plans until :meth:`vacuum`), and the relpath set is
+        exactly what a rewrite built on the DataFrame consumes
+        (:meth:`_rewrite`). The pair is cached between writes: every
+        append/compaction of this store invalidates it
+        (:meth:`_invalidate_records`), so read-heavy paths — follow
+        sessions polling for new batches above all — skip a rebuild per
+        call. The cache is keyed by the bucket hint (one snapshot per
+        touched bucket, all fenced by the same epoch)."""
         cached = self._records_cache.get(bucket)
         if cached is not None:
             return cached
@@ -727,29 +724,29 @@ class StreamStore:
             )
         else:
             schema = RECORD_SCHEMA
-        if not self._has_data():
-            # schema includes the bucket column in bucketed layout, so
-            # an empty-store maintenance rewrite can still partitionBy
-            return self.spark.createDataFrame([], schema)
         _, visible = self._manifest_current()
         if bucket is not None:
             prefix = f"bucket={bucket}{os.sep}"
             visible = frozenset(rel for rel in visible if rel.startswith(prefix))
         if not visible:
-            return self.spark.createDataFrame([], schema)
-        # spark_path maps each visible file to the location Spark reads
-        # it from — identity locally, the object location (s3a-style
-        # URL) on an object-store backend. basePath keeps the bucket=N
-        # partition-column inference of a directory read.
-        bk = self._mf_backend
-        paths = [
-            bk.spark_path(os.path.join(self.base_dir, rel)) for rel in sorted(visible)
-        ]
-        df = (
-            self.spark.read.option("basePath", bk.spark_path(self.base_dir))
-            .schema(schema)
-            .parquet(*paths)
-        )
+            df = self.spark.createDataFrame([], schema)
+        else:
+            # spark_path maps each visible file to the location Spark
+            # reads it from — identity locally, the object location
+            # (s3a-style URL) on an object-store backend. basePath keeps
+            # the bucket=N partition-column inference of a directory
+            # read.
+            bk = self._mf_backend
+            paths = [
+                bk.spark_path(os.path.join(self.base_dir, rel))
+                for rel in sorted(visible)
+            ]
+            df = (
+                self.spark.read.option("basePath", bk.spark_path(self.base_dir))
+                .schema(schema)
+                .parquet(*paths)
+            )
+        snap = (df, visible)
         # cache only if no writer invalidated while we folded: a df
         # that raced an append is still fine for THIS caller (its read
         # is concurrent with that append and may linearize first) but
@@ -757,8 +754,8 @@ class StreamStore:
         # after the append acked
         with self._records_mu:
             if self._records_epoch == epoch:
-                self._records_cache[bucket] = df
-        return df
+                self._records_cache[bucket] = snap
+        return snap
 
     def _invalidate_records(self) -> None:
         with self._records_mu:
@@ -812,16 +809,33 @@ class StreamStore:
             trim_point=row["trim_point"] or 0,
         )
 
-    def _recover_one(self, basin: str, stream: str) -> _StreamState:
-        """Lazy single-stream recovery: the aggregation pushed down to
-        one stream's key range (one bucket directory when partitioned —
-        the LSM key-range seek analogue)."""
+    def _recover(
+        self, keys: list[tuple[str, str]]
+    ) -> dict[tuple[str, str], _StreamState]:
+        """Recovered state of the streams in ``keys`` that hold records,
+        in ONE aggregation: ``basin``/``stream`` membership filters
+        that push down to the parquet scan (and, partitioned, the bucket
+        filter that prunes directories — the LSM key-range seek
+        analogue), then only the requested pairs are kept. Streams with
+        no records are absent from the result."""
+        if not keys:
+            return {}
         df = self.records_df()
         if self.bucket_count:
-            df = df.filter(F.col("bucket") == self._bucket_of(basin, stream))
-        df = df.filter((F.col("basin") == basin) & (F.col("stream") == stream))
-        rows = self._state_agg(df).collect()
-        return self._state_of(rows[0]) if rows else _StreamState()
+            df = df.filter(
+                F.col("bucket").isin(sorted({self._bucket_of(*k) for k in keys}))
+            )
+        df = df.filter(
+            F.col("basin").isin(sorted({b for b, _ in keys}))
+            & F.col("stream").isin(sorted({s for _, s in keys}))
+        )
+        want = set(keys)
+        out = {}
+        for r in self._state_agg(df).collect():
+            key = (r["basin"], r["stream"])
+            if key in want:
+                out[key] = self._state_of(r)
+        return out
 
     def _ensure_states(self, keys: list[tuple[str, str]]) -> None:
         """Batch form of the lazy recovery in :meth:`_st`: recover every
@@ -834,54 +848,36 @@ class StreamStore:
                 if k not in self._state
                 and (self._probe_unknown_streams or k in self._evicted)
             ]
-        if missing:
-            cond = F.concat_ws("\x00", "basin", "stream").isin(
-                [f"{b}\x00{s}" for b, s in missing]
-            )
-            rows = self._state_agg(self.records_df().filter(cond)).collect()
-        else:
-            rows = []
+        recovered = self._recover(missing)
         with self._meta_mu:
-            for r in rows:
-                # insert-if-absent: never clobber a state a concurrent
-                # append advanced while the scan ran
-                self._state.setdefault((r["basin"], r["stream"]), self._state_of(r))
             now = self._clock()
             for k in keys:
-                self._state.setdefault(k, _StreamState())
+                # insert-if-absent: never clobber a state a concurrent
+                # append advanced while the scan ran
+                self._state.setdefault(k, recovered.get(k) or _StreamState())
                 self._evicted.discard(k)
                 self._touched_ms[k] = now
 
-    def recover_state(
-        self, force_keys: frozenset[tuple[str, str]] = frozenset()
-    ) -> None:
-        """Rebuild hot state from storage, like the reference's recovery
-        read of tail/token/trim rows (lite/src/backend/core.rs:101-161).
-        One distributed pass: per-stream aggregates + last-command lookups.
+    def recover_state(self) -> None:
+        """Rebuild hot state for every stream from storage, like the
+        reference's recovery read of tail/token/trim rows
+        (lite/src/backend/core.rs:101-161). One distributed pass over
+        the whole store: per-stream aggregates + last-command lookups.
 
         Eager full recovery — normally unnecessary: streams recover
-        lazily on first touch (:meth:`_st`).
+        lazily on first touch (:meth:`_st`, one keyed :meth:`_recover`).
 
         Streams with an append IN FLIGHT (their per-stream writer lock
         held) keep their existing state object: the holder's commit is
         at least as new as the scan, and replacing the object would
-        detach the holder's tail advance (lost update → seq reuse).
-        ``force_keys`` overrides that keep-rule for keys whose locks
-        the CALLER itself holds (bulk_append's command branch: its own
-        commit is already durable, so the scan is the newest truth for
-        exactly those keys and the stale pre-bulk object must go)."""
+        detach the holder's tail advance (lost update → seq reuse)."""
         per_stream = self._state_agg(self.records_df()).collect()
         with self._meta_mu:
             new_state: dict[tuple[str, str], _StreamState] = {}
             for r in per_stream:
                 key = (r["basin"], r["stream"])
                 lk = self._locks.get(key)
-                if (
-                    lk is not None
-                    and lk.locked()
-                    and key in self._state
-                    and key not in force_keys
-                ):
+                if lk is not None and lk.locked() and key in self._state:
                     new_state[key] = self._state[key]
                 else:
                     new_state[key] = self._state_of(r)
@@ -923,18 +919,9 @@ class StreamStore:
             # concurrent recover_state skips locked keys, so the object
             # obtained here stays the canonical one for this commit
             st = self._st(basin, stream)
-            ack = self._append_locked(
+            return self._append_locked(
                 basin, stream, records, match_seq_num, fencing_token, cfg, st, metered
             )
-        self._refresh_stale_views()
-        return ack
-
-    def _refresh_stale_views(self) -> None:
-        """Upgrade any temp views attached while the store was empty to
-        their live SQL-over-path definitions now that data exists."""
-        if self._stale_view_prefixes and self._has_data():
-            for prefix in list(self._stale_view_prefixes):
-                self.attach_views(prefix)
 
     def _append_locked(
         self, basin, stream, records, match_seq_num, fencing_token, cfg, st, metered
@@ -990,7 +977,6 @@ class StreamStore:
         # durable commit — one parquet file per append batch
         bkt = self._bucket_of(basin, stream) if self.bucket_count else None
         self._staged_commit(lambda stage: self._write_batch_file(stage, rows, bkt))
-        self._data_seen = True
         self._invalidate_records()
 
         if bkt is not None:
@@ -1375,7 +1361,6 @@ class StreamStore:
                 self._staged_append_write(out, None, timings=timings)
             if timings is not None:
                 timings["write_sec"] = round(time.perf_counter() - _t0, 3)
-            self._data_seen = True
             self._invalidate_records()
             _t0 = time.perf_counter()
             # advance hot state from the up-front stats — pure driver math,
@@ -1386,11 +1371,14 @@ class StreamStore:
             # client ts folds to least(max_client, arrival), with arrival
             # itself a candidate when any row's timestamp was NULL.
             if any(v["n_cmd"] for v in per_stream.values()):
-                # in-band fence/trim in a bulk batch: rare — take the full
-                # recovery scan to fold them at their assigned positions
-                # (force our own held keys: the keep-locked rule would
-                # otherwise preserve their stale pre-bulk state objects)
-                self.recover_state(force_keys=frozenset(keys))
+                # in-band fence/trim in a bulk batch: rare — re-derive the
+                # batch's streams from storage to fold the commands at
+                # their assigned positions. Their writer locks are ours,
+                # so the scan is the newest truth for exactly these keys
+                recovered = self._recover(keys)
+                with self._meta_mu:
+                    for k in keys:
+                        self._state[k] = recovered.get(k) or _StreamState()
             else:
                 # the prefix fold in `running` already ends at each
                 # stream's final (tail, last_ts) — reuse it, no recompute
@@ -1404,7 +1392,6 @@ class StreamStore:
         finally:
             for _lk in reversed(_held):
                 _lk.release()
-        self._refresh_stale_views()
         if timings is not None:
             timings["state_sec"] = round(time.perf_counter() - _t0, 3)
 
@@ -1602,56 +1589,44 @@ class StreamStore:
         - ``{prefix}streams`` / ``{prefix}basins`` — catalog metadata
         - ``{prefix}tails``   — check_tail per stream
 
-        Once the store holds data, the record-derived views are **live**:
-        ``{prefix}records`` is built from :meth:`records_df` (the
-        CURRENT generation's explicit file list; a raw ``parquet.`path```
-        view would double-count every record a compaction delisted but
-        vacuum has not yet deleted), and the store re-attaches it on
-        every write-side invalidation, while trim points and tails are
-        re-derived per query — so appends/trims/fences through this
-        store after ``attach_views()`` show up without re-attaching.
-        Attached while the store is still empty, they
-        start as empty placeholders and are automatically upgraded to
-        the live definitions by the first append (the store remembers
-        the prefix). Catalog views are snapshots of driver metadata;
-        with a durable catalog they can be re-attached after config
-        changes.
+        The record-derived views are **live**: ``{prefix}records`` is
+        built from :meth:`records_df` (the CURRENT generation's explicit
+        file list; a raw ``parquet.`path``` view would double-count
+        every record a compaction delisted but vacuum has not yet
+        deleted), and the store re-attaches it on every write-side
+        invalidation, while trim points and tails are re-derived per
+        query — so appends/trims/fences through this store after
+        ``attach_views()`` show up without re-attaching. On an empty
+        store they sit over the empty relation until the first append
+        re-attaches them. Catalog views are snapshots of driver
+        metadata; with a durable catalog they can be re-attached after
+        config changes.
         """
-        if not self._has_data():
-            empty = self.spark.createDataFrame([], RECORD_SCHEMA)
-            empty.createOrReplaceTempView(f"{prefix}records")
-            empty.createOrReplaceTempView(f"{prefix}visible")
-            self.spark.createDataFrame(
-                [], "basin string, stream string, next_seq_num long, last_timestamp long"
-            ).createOrReplaceTempView(f"{prefix}tails")
-            self._stale_view_prefixes.add(prefix)
-        else:
-            self._stale_view_prefixes.discard(prefix)
-            self._attached_view_prefixes.add(prefix)
-            is_cmd = "(size(headers) = 1 AND length(headers[0].name) = 0)"
-            self.records_df().select(
-                "basin", "stream", "seq_num", "timestamp", "headers", "body"
-            ).createOrReplaceTempView(f"{prefix}records")
-            # final trim point per stream, re-derived per query: max over
-            # trim commands of min(payload, own seq+1) (streamer.rs:369-389)
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW {prefix}visible AS "
-                f"WITH trims AS ("
-                f"  SELECT basin, stream, "
-                f"         max(least(CAST(conv(hex(body), 16, 10) AS BIGINT), seq_num + 1)) AS tp "
-                f"  FROM {prefix}records "
-                f"  WHERE {is_cmd} AND CAST(headers[0].value AS STRING) = 'trim' "
-                f"  GROUP BY basin, stream) "
-                f"SELECT r.* FROM {prefix}records r LEFT JOIN trims t "
-                f"USING (basin, stream) "
-                f"WHERE r.seq_num >= coalesce(t.tp, 0) AND NOT {is_cmd}"
-            )
-            self.spark.sql(
-                f"CREATE OR REPLACE TEMP VIEW {prefix}tails AS "
-                f"SELECT basin, stream, max(seq_num) + 1 AS next_seq_num, "
-                f"       max(timestamp) AS last_timestamp "
-                f"FROM {prefix}records GROUP BY basin, stream"
-            )
+        self._attached_view_prefixes.add(prefix)
+        is_cmd = "(size(headers) = 1 AND length(headers[0].name) = 0)"
+        self.records_df().select(
+            "basin", "stream", "seq_num", "timestamp", "headers", "body"
+        ).createOrReplaceTempView(f"{prefix}records")
+        # final trim point per stream, re-derived per query: max over
+        # trim commands of min(payload, own seq+1) (streamer.rs:369-389)
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMP VIEW {prefix}visible AS "
+            f"WITH trims AS ("
+            f"  SELECT basin, stream, "
+            f"         max(least(CAST(conv(hex(body), 16, 10) AS BIGINT), seq_num + 1)) AS tp "
+            f"  FROM {prefix}records "
+            f"  WHERE {is_cmd} AND CAST(headers[0].value AS STRING) = 'trim' "
+            f"  GROUP BY basin, stream) "
+            f"SELECT r.* FROM {prefix}records r LEFT JOIN trims t "
+            f"USING (basin, stream) "
+            f"WHERE r.seq_num >= coalesce(t.tp, 0) AND NOT {is_cmd}"
+        )
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMP VIEW {prefix}tails AS "
+            f"SELECT basin, stream, max(seq_num) + 1 AS next_seq_num, "
+            f"       max(timestamp) AS last_timestamp "
+            f"FROM {prefix}records GROUP BY basin, stream"
+        )
         self.catalog.streams_df().createOrReplaceTempView(f"{prefix}streams")
         self.catalog.basins_df().createOrReplaceTempView(f"{prefix}basins")
 
@@ -1961,19 +1936,20 @@ class StreamStore:
         into few files whose row-group (min, max) on the key columns are
         disjoint, so range reads prune precisely."""
 
-        def build() -> DataFrame:
-            df = self.records_df()
+        def build() -> tuple[DataFrame, frozenset]:
+            df, files = self._records_snapshot()
             n = files_per_partition_hint or max(
                 1, self.spark.sparkContext.defaultParallelism // 4
             )
             return df.repartitionByRange(
                 n, "basin", "stream", "seq_num"
-            ).sortWithinPartitions("basin", "stream", "seq_num")
+            ).sortWithinPartitions("basin", "stream", "seq_num"), files
 
         self._rewrite_replanned(build)
 
     def _rewrite_replanned(self, build, attempts: int = 8) -> None:
-        """Run ``self._rewrite(build())``, re-planning on
+        """Run ``self._rewrite(*build())`` — ``build`` returns the plan
+        and the snapshot it reads — re-planning on
         :class:`~s2_spark.manifest.PublishConflict`: the conflict means
         a racing rewrite in ANOTHER process delisted files this plan
         consumed (in-process rewrites serialize on the rewrite latch),
@@ -1991,64 +1967,21 @@ class StreamStore:
 
         for attempt in range(attempts):
             try:
-                self._rewrite(build())
+                self._rewrite(*build())
                 return
             except PublishConflict:
                 if attempt == attempts - 1:
                     raise
                 self.manifest_refresh()
 
-    def _consumed_files(self, df: DataFrame) -> list[str]:
-        """Store-relative paths of the data files ``df``'s pinned
-        file list reads — the exact set a rewrite's publish ``remove``s.
-
-        Both sides are normalized through ``urlparse`` + ``unquote`` +
-        ``realpath`` (ADVICE r12): ``inputFiles()`` URIs can be
-        percent-encoded or carry ``file://`` variants, and ``abspath``
-        does not resolve symlinks — a store file silently failing the
-        containment check would survive the swap alongside its
-        compacted copy and serve duplicate seq_nums forever. Files
-        under metadata components (``_meta``, ``_manifest``, hidden
-        dirs) are never consumed; any OTHER input file that does not
-        resolve into the store directory aborts the rewrite loudly —
-        a rewrite plan only ever reads store files, so an unresolvable
-        one means the normalization (not the plan) is wrong."""
-        from urllib.parse import unquote, urlparse
-
-        # containment is checked against the backend's READ location
-        # (identity locally; the bucket-mapped root on an object-store
-        # backend, since inputFiles() reports what Spark actually read)
-        base = os.path.realpath(
-            self._mf_backend.spark_path(self.base_dir).rstrip("/")
-        )
-        consumed, foreign = [], []
-        for uri in df.inputFiles():
-            parsed = urlparse(uri)
-            p = unquote(parsed.path) if parsed.scheme else uri
-            p = os.path.realpath(p)
-            if p.startswith(base + os.sep):
-                rel = os.path.relpath(p, base)
-                if any(c.startswith(("_", ".")) for c in rel.split(os.sep)):
-                    continue  # catalog/_meta, manifest log, markers
-                consumed.append(rel)
-            else:
-                foreign.append(uri)
-        if foreign:
-            raise RuntimeError(
-                f"rewrite input includes files that do not resolve into "
-                f"the store directory {self.base_dir!r}: {foreign[:3]} — "
-                f"aborting (a silent skip would leave duplicates)"
-            )
-        return consumed
-
-    def _rewrite(self, df: DataFrame) -> None:
-        """Replace the files ``df`` reads with its output: stage the
-        output, move its part files into the data layout under fresh
-        (UUID) names, then COMMIT by publishing one generation that
-        adds them and removes exactly the files the rewrite consumed.
-        Metadata directories (``_meta``, ``_manifest``)
-        are never consumed, so a rewrite leaves the control plane
-        alone.
+    def _rewrite(self, df: DataFrame, consumed: frozenset) -> None:
+        """Replace ``consumed`` — the visible relpaths of the generation
+        snapshot ``df`` was built from (:meth:`_records_snapshot`) —
+        with ``df``'s output: stage the output, move its part files into
+        the data layout under fresh (UUID) names, then COMMIT by
+        publishing one generation that adds them and removes exactly
+        the snapshot it read. An empty snapshot is no work: nothing is
+        written and nothing published.
 
         Consumed files stay on disk (in-flight readers pinned to older
         generations keep reading them) until :meth:`vacuum`, and the
@@ -2068,9 +2001,10 @@ class StreamStore:
 
         from s2_spark.manifest import PublishConflict
 
+        if not consumed:
+            return
         bk = self._mf_backend
         with self._rewrite_mu:
-            consumed = self._consumed_files(df)
             stage = os.path.join(
                 self.base_dir, f"_compact-stage-{os.getpid()}-{uuid.uuid4().hex}"
             )
@@ -2098,7 +2032,7 @@ class StreamStore:
                     added.append(rel)
                 try:
                     self._manifest_publish(
-                        add=added, remove=consumed, require_visible=True
+                        add=added, remove=sorted(consumed), require_visible=True
                     )
                 except PublishConflict:
                     # never published → invisible to every reader: safe
@@ -2133,7 +2067,7 @@ class StreamStore:
         keeper): the purge path for DELETED streams, whose names must
         become recreatable as fresh streams starting at seq 0.
         """
-        def build() -> DataFrame:
+        def build() -> tuple[DataFrame, frozenset]:
             return self._build_trim_retention_plan(drop_streams)
 
         self._rewrite_replanned(build)
@@ -2142,8 +2076,8 @@ class StreamStore:
 
     def _build_trim_retention_plan(
         self, drop_streams: list[tuple[str, str]] | None
-    ) -> DataFrame:
-        df = self.records_df()
+    ) -> tuple[DataFrame, frozenset]:
+        df, files = self._records_snapshot()
         # trim points come from storage, not the hot-state cache — the
         # cache only holds recently-touched streams (lazy recovery), and
         # maintenance must honor every stream's trim commands
@@ -2216,7 +2150,7 @@ class StreamStore:
                     [f"{b}\x00{s}" for b, s in drop_streams]
                 )
             )
-        return keep
+        return keep, files
 
     def _record_purges(self, drop_streams: list[tuple[str, str]]) -> None:
         """Generation tombstones for physically purged streams, written

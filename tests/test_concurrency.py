@@ -596,18 +596,18 @@ def test_records_cache_lost_invalidation_is_fenced(store):
     store._invalidate_records()
 
     entered, proceed = threading.Event(), threading.Event()
-    orig_has_data = store._has_data
+    orig_manifest_current = store._manifest_current
 
-    def slow_has_data():
+    def slow_manifest_current(*a, **kw):
         entered.set()
         assert proceed.wait(10)
-        return orig_has_data()
+        return orig_manifest_current(*a, **kw)
 
-    store._has_data = slow_has_data
+    store._manifest_current = slow_manifest_current
     reader = threading.Thread(target=store.records_df)
     reader.start()
     assert entered.wait(10)  # the reader is mid-listing (pre-epoch read done)
-    store._has_data = orig_has_data
+    store._manifest_current = orig_manifest_current
     store.append(BASIN, "s1", [Record(body=b"late")])  # bumps the epoch
     proceed.set()
     reader.join(10)
@@ -674,13 +674,12 @@ def test_bulk_append_serializes_with_unary_appends(spark, store):
 def test_bulk_append_with_commands_recovers_own_streams_under_lock(
     spark, store
 ):
-    """The command branch of bulk_append runs a full recover_state
-    WHILE holding its own streams' writer locks — recover_state's
-    keep-locked rule would preserve the stale pre-bulk state object,
-    losing the bulk's tail advance and the in-band trim fold.
-    force_keys makes the scan authoritative for exactly the caller's
-    held keys: after a bulk batch containing a trim command, the tail
-    AND the trim point must reflect the batch."""
+    """The command branch of bulk_append re-derives its own streams'
+    state from storage WHILE holding their writer locks: one keyed
+    recovery whose result replaces exactly the held keys' pre-bulk
+    state objects (keeping them would lose the bulk's tail advance and
+    the in-band trim fold). After a bulk batch containing a trim
+    command, the tail AND the trim point must reflect the batch."""
     from s2_spark.model import trim_record
 
     store.append(BASIN, "s1", [Record(body=b"a"), Record(body=b"b")])

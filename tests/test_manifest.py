@@ -7,7 +7,8 @@ readers swap exists at all. These tests pin the protocol's core
 claims: publish atomicity at every crash point, MVCC reader pinning
 across compaction, acked-append survival during churn, refusing a
 directory of record files with no generation log, vacuum's grace
-contract, and the consumed-set normalization (ADVICE r12).
+contract, and a rewrite consuming exactly the generation snapshot it
+read (nothing at all on an empty store).
 
 Reference analogue: SlateDB's manifest+WAL visibility
 (lite/src/backend/kv/mod.rs:55-95) — state is defined by the
@@ -20,6 +21,7 @@ import glob
 import json
 import os
 import re
+import uuid
 
 import pytest
 
@@ -374,24 +376,40 @@ def test_consumed_files_symlinked_base_dir_no_duplicates(spark, tmp_path):
     assert _rows(cold) == [(i, f"d{i}".encode()) for i in range(4)]
 
 
-def test_consumed_files_foreign_input_aborts_loudly(spark, tmp_path):
-    """A rewrite plan whose input includes files outside the store
-    directory aborts instead of silently skipping them."""
-    store = _mkstore(spark, tmp_path)
-    store.append(B, "s1", [Record(body=b"x")])
-    foreign = str(tmp_path / "foreign.parquet")
-    spark.range(3).write.parquet(foreign)
-    df = store.records_df().unionByName(
-        spark.read.parquet(foreign)
-        .selectExpr(
-            "'b' as basin", "'s' as stream", "id as seq_num",
-            "id as timestamp",
-            "cast(null as array<struct<name binary, value binary>>) as headers",
-            "cast(null as binary) as body",
-        )
+def _job_count(spark, fn) -> int:
+    """Run ``fn`` under a fresh job group; returns its Spark job count."""
+    sc = spark.sparkContext
+    group = f"empty-rewrite-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("bucket_count", [0, 4], ids=["flat", "bucketed"])
+def test_empty_store_rewrites_run_no_job_and_publish_nothing(
+    spark, tmp_path, bucket_count
+):
+    """A rewrite consumes the generation snapshot its plan was built
+    from, so on a store with no visible file, compaction, trim/retention
+    and the deletion purge are no work: no Spark job and no generation.
+    A published generation holding one 0-row file would make every
+    store reopened on the directory pay a recovery job on the first
+    touch of each stream."""
+    from s2_spark.operators.maintenance import deletion_purge_sweep
+
+    store = _mkstore(spark, tmp_path, bucket_count=bucket_count)
+    store.catalog.delete_stream(B, "s2")
+    assert _job_count(spark, store.compact) == 0
+    assert _job_count(spark, store.apply_trim_and_retention) == 0
+    assert _job_count(spark, lambda: deletion_purge_sweep(store)) == 0
+    assert mf.fold(store.base_dir) == (0, set())
+    reopened = StreamStore(
+        spark, store.base_dir, catalog=store.catalog, bucket_count=bucket_count
     )
-    with pytest.raises(RuntimeError, match="do not resolve into"):
-        store._consumed_files(df)
+    assert not reopened._probe_unknown_streams
 
 
 def test_manifest_write_gen_collision_returns_false_and_publish_retries(

@@ -550,7 +550,6 @@ def test_sim_source_exactly_once_with_purges_restarts_rate_limits(
     applog = {s: {0: []} for s in STREAMS}  # stream -> gen -> [bodies]
     delivered = {s: {} for s in STREAMS}  # stream -> gen -> [(st, en, rows)]
     n_appended = {s: 0 for s in STREAMS}
-    ever_data = [False]  # store-level _has_data(): sticky False->True
 
     def trigger():
         nonlocal reader, ckpt
@@ -604,23 +603,14 @@ def test_sim_source_exactly_once_with_purges_restarts_rate_limits(
             n_appended[s] += n
             store.append(BASIN, s, [Record(body=b) for b in bodies])
             applog[s][gen[s]] += bodies
-            ever_data[0] = True
         elif roll < 0.55:  # purge + recreate: a fresh generation
             cat.delete_stream(BASIN, s)
             deletion_purge_sweep(store)
             cat.create_stream(BASIN, s)
-            # the generation tombstone is written only when the sweep
-            # runs a rewrite, gated on store._has_data() — a STICKY
-            # flag (False->True once, never back): a purge before any
-            # record ever existed bumps nothing. That skip is safe —
-            # a generation that never held records is indistinguishable
-            # recreated-at-0 either way — and every later purge bumps,
-            # data or not. The shadow model mirrors the flag exactly
-            # (round-10 fresh-seed soak caught the model bumping
-            # unconditionally and mislabeling generations).
-            if ever_data[0]:
-                gen[s] += 1
-                applog[s][gen[s]] = []
+            # every purge writes the stream's generation tombstone,
+            # whether or not the store ever held data
+            gen[s] += 1
+            applog[s][gen[s]] = []
         elif roll < 0.7:  # cold reader restart (checkpoint persists)
             reader = mk()
         else:
