@@ -178,6 +178,26 @@ def is_command_col(headers: Column | str = "headers") -> Column:
     return (F.size(h) == 1) & (F.length(h[0]["name"]) == 0)
 
 
+def command_col() -> Column:
+    """:meth:`Record.command` as a column over a records frame:
+    ``'fence'`` / ``'trim'`` for a command record (:meth:`Record.validate`
+    admits no other op), NULL otherwise. Every Spark-side derivation of
+    stream state decodes command records through this and
+    :func:`trim_point_col` only."""
+    return F.when(is_command_col(), F.col("headers")[0]["value"].cast("string"))
+
+
+def trim_point_col() -> Column:
+    """Effective point of a trim row: ``min(payload, seq_num + 1)``, the
+    payload being the body as a u64 big-endian seq_num
+    (command.rs:92-97; a trim may cover its own record,
+    streamer.rs:369-389). Exact over all of u64: the comparison runs in
+    ``decimal(20,0)`` (a BIGINT cast rejects payloads >= 2^63), and the
+    result, at most ``seq_num + 1``, fits a long."""
+    u64 = F.conv(F.hex("body"), 16, 10).cast("decimal(20,0)")
+    return F.least(u64, (F.col("seq_num") + 1).cast("decimal(20,0)")).cast("long")
+
+
 # --- errors (HTTP-mapped in the reference) ------------------------------
 
 

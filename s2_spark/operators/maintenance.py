@@ -190,12 +190,6 @@ def deletion_purge_sweep(store: StreamStore) -> list[str]:
         if meta.deleted_at is not None
     ]
     store.apply_trim_and_retention(drop_streams=doomed or None)
-    # the purged streams' hot state must not outlive their data
-    with store._meta_mu:
-        for key in doomed:
-            store._state.pop(key, None)
-            store._touched_ms.pop(key, None)
-            store._evicted.discard(key)
     return store.catalog.purge_deleted()
 
 

@@ -53,8 +53,11 @@ from s2_spark.model import (
     RECORD_SCHEMA,
     SeqNumMismatch,
     arrow_record_schema,
+    command_col,
+    is_command_col,
     metered_size_bytes,
     metered_size_col,
+    trim_point_col,
 )
 
 
@@ -768,35 +771,40 @@ class StreamStore:
             for prefix in list(self._attached_view_prefixes):
                 self.attach_views(prefix)
 
+    #: the hot-state columns of :meth:`_state_agg` (plus the key)
+    _STATE_COLS = ("basin", "stream", "tail_seq", "last_ts", "fence_token", "trim_point")
+
     @staticmethod
     def _state_agg(df: DataFrame) -> DataFrame:
-        """Per-stream hot-state aggregation: tail, last ts, latest fence
-        token, monotone trim point (core.rs:101-161, streamer.rs:369-389)."""
-        cmd = F.when(
-            (F.size("headers") == 1) & (F.length(F.col("headers")[0]["name"]) == 0),
-            F.col("headers")[0]["value"].cast("string"),
-        )
+        """The one per-stream state aggregation: tail, last ts, latest
+        fence token, monotone trim point (core.rs:101-161,
+        streamer.rs:369-389), and the seqs of the commands defining the
+        last two, which trim/retention keeps. Callers selecting only
+        :attr:`_STATE_COLS` get the rest pruned by the optimizer."""
+        cmd, tp, seq = F.col("_cmd"), F.col("_tp"), F.col("seq_num")
+        fence_seq = F.when(cmd == "fence", seq)
         return (
-            df.withColumn("cmd", cmd)
+            df.withColumn("_cmd", command_col())
+            .withColumn("_tp", F.when(cmd == "trim", trim_point_col()))
             .groupBy("basin", "stream")
             .agg(
                 (F.max("seq_num") + 1).alias("tail_seq"),
                 F.max("timestamp").alias("last_ts"),
                 F.max_by(
-                    F.when(F.col("cmd") == "fence", F.col("body").cast("string")),
-                    F.when(F.col("cmd") == "fence", F.col("seq_num")),
+                    F.when(cmd == "fence", F.col("body").cast("string")), fence_seq
                 ).alias("fence_token"),
-                # trim payload clamped to seq+1 (may trim its own
-                # record, streamer.rs:369-389), monotone max
-                F.max(
-                    F.when(
-                        F.col("cmd") == "trim",
-                        F.least(
-                            F.conv(F.hex("body"), 16, 10).cast("long"),
-                            F.col("seq_num") + 1,
-                        ),
-                    )
-                ).alias("trim_point"),
+                # monotone max of the effective points: a later trim
+                # with a lower payload changes nothing
+                F.max(tp).alias("trim_point"),
+                F.max(fence_seq).alias("last_fence_seq"),
+                # the trim DEFINING the trim point — arg-max of the
+                # effective point, not the latest trim by seq: keeping
+                # only a later, dominated trim would regress the
+                # recovered trim point (seed-930413 sim soak)
+                F.max_by(
+                    F.when(cmd == "trim", seq),
+                    F.when(cmd == "trim", F.struct(tp.alias("eff"), seq.alias("sq"))),
+                ).alias("last_trim_seq"),
             )
         )
 
@@ -831,7 +839,7 @@ class StreamStore:
         )
         want = set(keys)
         out = {}
-        for r in self._state_agg(df).collect():
+        for r in self._state_agg(df).select(*self._STATE_COLS).collect():
             key = (r["basin"], r["stream"])
             if key in want:
                 out[key] = self._state_of(r)
@@ -871,7 +879,9 @@ class StreamStore:
         held) keep their existing state object: the holder's commit is
         at least as new as the scan, and replacing the object would
         detach the holder's tail advance (lost update → seq reuse)."""
-        per_stream = self._state_agg(self.records_df()).collect()
+        per_stream = (
+            self._state_agg(self.records_df()).select(*self._STATE_COLS).collect()
+        )
         with self._meta_mu:
             new_state: dict[tuple[str, str], _StreamState] = {}
             for r in per_stream:
@@ -1595,38 +1605,34 @@ class StreamStore:
         every record a compaction delisted but vacuum has not yet
         deleted), and the store re-attaches it on every write-side
         invalidation, while trim points and tails are re-derived per
-        query — so appends/trims/fences through this store after
-        ``attach_views()`` show up without re-attaching. On an empty
-        store they sit over the empty relation until the first append
-        re-attaches them. Catalog views are snapshots of driver
+        query by recovery's :meth:`_state_agg` (a trim's point is
+        ``min(payload, seq + 1)`` for any u64 payload) — so
+        appends/trims/fences through this store after ``attach_views()``
+        show up without re-attaching. On an empty store they sit over
+        the empty relation until the first append re-attaches them.
+        Catalog views are snapshots of driver
         metadata; with a durable catalog they can be re-attached after
         config changes.
         """
         self._attached_view_prefixes.add(prefix)
-        is_cmd = "(size(headers) = 1 AND length(headers[0].name) = 0)"
-        self.records_df().select(
-            "basin", "stream", "seq_num", "timestamp", "headers", "body"
-        ).createOrReplaceTempView(f"{prefix}records")
-        # final trim point per stream, re-derived per query: max over
-        # trim commands of min(payload, own seq+1) (streamer.rs:369-389)
-        self.spark.sql(
-            f"CREATE OR REPLACE TEMP VIEW {prefix}visible AS "
-            f"WITH trims AS ("
-            f"  SELECT basin, stream, "
-            f"         max(least(CAST(conv(hex(body), 16, 10) AS BIGINT), seq_num + 1)) AS tp "
-            f"  FROM {prefix}records "
-            f"  WHERE {is_cmd} AND CAST(headers[0].value AS STRING) = 'trim' "
-            f"  GROUP BY basin, stream) "
-            f"SELECT r.* FROM {prefix}records r LEFT JOIN trims t "
-            f"USING (basin, stream) "
-            f"WHERE r.seq_num >= coalesce(t.tp, 0) AND NOT {is_cmd}"
+        records = self.records_df().select(*RECORD_SCHEMA.fieldNames())
+        records.createOrReplaceTempView(f"{prefix}records")
+        states = self._state_agg(records)
+        (
+            records.join(states, ["basin", "stream"], "left")
+            .filter(
+                (F.col("seq_num") >= F.coalesce("trim_point", F.lit(0)))
+                & ~is_command_col()
+            )
+            .select(*records.columns)
+            .createOrReplaceTempView(f"{prefix}visible")
         )
-        self.spark.sql(
-            f"CREATE OR REPLACE TEMP VIEW {prefix}tails AS "
-            f"SELECT basin, stream, max(seq_num) + 1 AS next_seq_num, "
-            f"       max(timestamp) AS last_timestamp "
-            f"FROM {prefix}records GROUP BY basin, stream"
-        )
+        states.select(
+            "basin",
+            "stream",
+            F.col("tail_seq").alias("next_seq_num"),
+            F.col("last_ts").alias("last_timestamp"),
+        ).createOrReplaceTempView(f"{prefix}tails")
         self.catalog.streams_df().createOrReplaceTempView(f"{prefix}streams")
         self.catalog.basins_df().createOrReplaceTempView(f"{prefix}basins")
 
@@ -1981,7 +1987,8 @@ class StreamStore:
         the data layout under fresh (UUID) names, then COMMIT by
         publishing one generation that adds them and removes exactly
         the snapshot it read. An empty snapshot is no work: nothing is
-        written and nothing published.
+        written and nothing published; 0-row output parts are dropped,
+        so a rewrite to no rows publishes a remove-only generation.
 
         Consumed files stay on disk (in-flight readers pinned to older
         generations keep reading them) until :meth:`vacuum`, and the
@@ -1998,6 +2005,8 @@ class StreamStore:
         conflict propagates (the caller re-plans from the new
         generation)."""
         import uuid
+
+        import pyarrow.parquet as pq
 
         from s2_spark.manifest import PublishConflict
 
@@ -2016,6 +2025,12 @@ class StreamStore:
                 writer.parquet(bk.spark_path(stage))
                 for rel, _mt in bk.walk_files(stage):
                     if not rel.endswith(".parquet"):
+                        continue
+                    # Spark writes a 0-row part for an empty output;
+                    # published, it would make the next compaction
+                    # rewrite it and a reopened store probe for state
+                    src = bk.spark_path(os.path.join(stage, rel))
+                    if pq.read_metadata(src).num_rows == 0:
                         continue
                     dst = os.path.join(self.base_dir, rel)
                     if bk.exists(dst):
@@ -2064,8 +2079,9 @@ class StreamStore:
         from it.
 
         ``drop_streams`` removes those streams' records entirely (no
-        keeper): the purge path for DELETED streams, whose names must
-        become recreatable as fresh streams starting at seq 0.
+        keeper) and, once the rewrite commits, their hot state: the
+        purge path for DELETED streams, whose names must become
+        recreatable as fresh streams starting at seq 0.
         """
         def build() -> tuple[DataFrame, frozenset]:
             return self._build_trim_retention_plan(drop_streams)
@@ -2073,6 +2089,11 @@ class StreamStore:
         self._rewrite_replanned(build)
         if drop_streams:
             self._record_purges(drop_streams)
+            with self._meta_mu:
+                for key in drop_streams:
+                    self._state.pop(key, None)
+                    self._touched_ms.pop(key, None)
+                    self._evicted.discard(key)
 
     def _build_trim_retention_plan(
         self, drop_streams: list[tuple[str, str]] | None
@@ -2080,69 +2101,27 @@ class StreamStore:
         df, files = self._records_snapshot()
         # trim points come from storage, not the hot-state cache — the
         # cache only holds recently-touched streams (lazy recovery), and
-        # maintenance must honor every stream's trim commands
-        trims = self._state_agg(df).select(
-            "basin",
-            "stream",
-            F.coalesce("trim_point", F.lit(0)).alias("trim_point"),
-            (F.col("tail_seq") - 1).alias("_last_seq"),
-        )
+        # maintenance must honor every stream's trim commands.
         # COMMAND keepers: recovery derives the fencing token and trim
         # point from command records, so physically deleting a stream's
-        # latest fence/trim command (it can sit below its own trim
+        # defining fence/trim command (it can sit below its own trim
         # point) would silently regress recovered state — the reference
         # keeps both in dedicated KV rows that trims never touch
         # (kv/mod.rs:55-95). Like the tail keeper, kept commands stay
         # invisible to reads (the trim filter hides them).
-        hdr_cmd = F.when(
-            (F.size("headers") == 1)
-            & (F.length(F.col("headers")[0]["name"]) == 0),
-            F.col("headers")[0]["value"].cast("string"),
-        )
-        cmd_keeps = (
-            df.withColumn("_cmd", hdr_cmd)
-            .filter(F.col("_cmd").isin("fence", "trim"))
-            .groupBy("basin", "stream")
-            .agg(
-                F.max(
-                    F.when(F.col("_cmd") == "fence", F.col("seq_num"))
-                ).alias("_last_fence_seq"),
-                # the kept trim command is the one DEFINING the trim
-                # point — arg-max of the effective clamp min(payload,
-                # seq+1), NOT the latest by seq: a later trim with a
-                # LOWER payload is dominated by the monotone max, and
-                # keeping only it would delete the defining command and
-                # regress the recovered trim point (resurrecting every
-                # record between the regressed and true points — found
-                # by the round-11 fresh-seed sim soak, seed 930413)
-                F.max_by(
-                    F.when(F.col("_cmd") == "trim", F.col("seq_num")),
-                    F.when(
-                        F.col("_cmd") == "trim",
-                        F.struct(
-                            F.least(
-                                F.conv(F.hex("body"), 16, 10).cast("long"),
-                                F.col("seq_num") + 1,
-                            ).alias("eff"),
-                            F.col("seq_num").alias("sq"),
-                        ),
-                    ),
-                ).alias("_last_trim_seq"),
-            )
-        )
         # no broadcast hint: one row per stream can be huge at the
         # million-stream scale — AQE picks broadcast vs shuffle join
         # from the aggregate's actual runtime size
+        seq = F.col("seq_num")
         keep = (
-            df.join(trims, ["basin", "stream"], "left")
-            .join(cmd_keeps, ["basin", "stream"], "left")
+            df.join(self._state_agg(df), ["basin", "stream"], "left")
             .filter(
-                (F.col("seq_num") >= F.coalesce("trim_point", F.lit(0)))
-                | (F.col("seq_num") == F.col("_last_seq"))
-                | (F.col("seq_num") == F.col("_last_fence_seq"))
-                | (F.col("seq_num") == F.col("_last_trim_seq"))
+                (seq >= F.coalesce("trim_point", F.lit(0)))
+                | (seq == F.col("tail_seq") - 1)
+                | (seq == F.col("last_fence_seq"))
+                | (seq == F.col("last_trim_seq"))
             )
-            .drop("trim_point", "_last_seq", "_last_fence_seq", "_last_trim_seq")
+            .select(*df.columns)
         )
         if drop_streams:
             keep = keep.filter(

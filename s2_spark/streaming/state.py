@@ -8,7 +8,8 @@ The streaming analogue is an ordered stateful fold per stream:
 
 Semantics folded per record, in seq order:
 - ``fence`` command → token := body (UTF-8, ≤36 bytes)
-- ``trim`` command  → trim_point := max(trim_point, min(payload, own seq))
+- ``trim`` command  → trim_point := max(trim_point, min(payload, own seq + 1)),
+  the payload being any u64
 - every record is annotated with the state *after* it applies, and
   ``visible`` = seq_num >= current trim_point.
 
@@ -24,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from s2_spark.model import command_col, trim_point_col
 
 OUT_SCHEMA = T.StructType(
     [
@@ -62,7 +65,7 @@ def _fold(key, pdf_iter, state):
             "visible": [],
         }
         for row in pdf.itertuples(index=False):
-            cmd, payload = row.cmd, row.payload
+            cmd, payload = row.cmd, row.body
             if cmd == "fence":
                 token = payload.decode("utf-8") if payload is not None else ""
             elif cmd == "trim":
@@ -81,14 +84,8 @@ def _fold(key, pdf_iter, state):
 
 
 def _with_cmd_cols(records: DataFrame) -> DataFrame:
-    is_cmd = (F.size("headers") == 1) & (F.length(F.col("headers")[0]["name"]) == 0)
     return records.select(
-        "basin",
-        "stream",
-        "seq_num",
-        "timestamp",
-        F.when(is_cmd, F.col("headers")[0]["value"].cast("string")).alias("cmd"),
-        F.col("body").alias("payload"),
+        "basin", "stream", "seq_num", "timestamp", command_col().alias("cmd"), "body"
     )
 
 
@@ -119,11 +116,8 @@ def apply_commands_batch(records: DataFrame) -> DataFrame:
     from s2_spark.operators.prefix import chunked_running_multi
 
     df = _with_cmd_cols(records)
-    trim_req = F.when(
-        F.col("cmd") == "trim",
-        F.least(F.conv(F.hex("payload"), 16, 10).cast("long"), F.col("seq_num") + 1),
-    )
-    token_at = F.when(F.col("cmd") == "fence", F.col("payload").cast("string"))
+    trim_req = F.when(F.col("cmd") == "trim", trim_point_col())
+    token_at = F.when(F.col("cmd") == "fence", F.col("body").cast("string"))
     fence_at = F.when(
         token_at.isNotNull(),
         F.struct(F.col("seq_num").alias("s"), token_at.alias("t")),

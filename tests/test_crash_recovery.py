@@ -232,7 +232,7 @@ def test_compaction_keeps_the_defining_trim_command(spark, tmp_path):
     assert ack.start_seq == 10
 
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _ops_st = st.lists(
@@ -251,12 +251,15 @@ _ops_st = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=_ops_st)
+@example(ops=[("append", 2), ("trim", 2**63), ("append", 1)])
+@example(ops=[("append", 1), ("trim", 2**64 - 1)])
 def test_any_trim_sequence_recovers_exactly_after_compaction(spark, ops):
     """Property form of the trim-keeper rule: for ANY interleaving of
     appends and trims — including dominated trims, self-trimming trims,
-    and past-tail clamps — physical compaction followed by cold
-    recovery reproduces exactly the monotone-max trim point, the tail,
-    and the visible suffix. Generalizes the seed-930413 regression."""
+    and past-tail clamps up to u64 payloads — physical compaction
+    followed by recovery (eager, and lazy on first touch) reproduces
+    exactly the monotone-max trim point, the tail, and the visible
+    suffix. Generalizes the seed-930413 regression."""
     import tempfile
 
     base = tempfile.mkdtemp(prefix="trimprop_")
@@ -276,9 +279,33 @@ def test_any_trim_sequence_recovers_exactly_after_compaction(spark, ops):
     s2.recover_state()
     st_ = s2._st(BASIN, "s")
     assert (st_.tail_seq, st_.trim_point) == (tail, trim)
+    cold = StreamStore(spark, base)._st(BASIN, "s")
+    assert (cold.tail_seq, cold.trim_point) == (tail, trim)
     assert _all_seqs(s2, "s") == [s for s in range(tail) if s >= trim]
     ack = s2.append(BASIN, "s", [Record(body=b"next")])
     assert ack.start_seq == tail
+
+
+def _plan_node_names(node) -> list[str]:
+    kids = node.children()
+    names = [node.nodeName()]
+    for i in range(kids.size()):
+        names += _plan_node_names(kids.apply(i))
+    return names
+
+
+def test_trim_retention_plan_is_one_aggregate_and_one_join(spark, tmp_path):
+    """Trim/retention takes its keepers (tail, trim point, and the
+    fence and trim commands defining the recovered state) from the one
+    per-stream state aggregation recovery runs: one Aggregate, joined
+    back to the records once."""
+    s1 = _fresh(spark, str(tmp_path / "records"))
+    s1.append(BASIN, "s", [Record(body=b"a"), Record(body=b"b")])
+    s1.fence(BASIN, "s", "tok")
+    s1.trim(BASIN, "s", 1)
+    plan, _files = s1._build_trim_retention_plan(None)
+    names = _plan_node_names(plan._jdf.queryExecution().optimizedPlan())
+    assert (names.count("Aggregate"), names.count("Join")) == (1, 1), names
 
 
 def test_purged_stream_name_recreates_fresh(spark, tmp_path):

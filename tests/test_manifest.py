@@ -395,9 +395,11 @@ def test_empty_store_rewrites_run_no_job_and_publish_nothing(
     """A rewrite consumes the generation snapshot its plan was built
     from, so on a store with no visible file, compaction, trim/retention
     and the deletion purge are no work: no Spark job and no generation.
-    A published generation holding one 0-row file would make every
-    store reopened on the directory pay a recovery job on the first
-    touch of each stream."""
+    A rewrite of a non-empty snapshot to no rows (a purge of the only
+    stream) publishes no file either. A published generation holding
+    one 0-row file would make every later compaction rewrite it and
+    every store reopened on the directory pay a recovery job on the
+    first touch of each stream."""
     from s2_spark.operators.maintenance import deletion_purge_sweep
 
     store = _mkstore(spark, tmp_path, bucket_count=bucket_count)
@@ -406,10 +408,22 @@ def test_empty_store_rewrites_run_no_job_and_publish_nothing(
     assert _job_count(spark, store.apply_trim_and_retention) == 0
     assert _job_count(spark, lambda: deletion_purge_sweep(store)) == 0
     assert mf.fold(store.base_dir) == (0, set())
-    reopened = StreamStore(
-        spark, store.base_dir, catalog=store.catalog, bucket_count=bucket_count
-    )
-    assert not reopened._probe_unknown_streams
+
+    def reopened():
+        return StreamStore(
+            spark, store.base_dir, catalog=store.catalog, bucket_count=bucket_count
+        )
+
+    assert not reopened()._probe_unknown_streams
+
+    store.append(B, "s1", [Record(body=b"x")])
+    store.catalog.delete_stream(B, "s1")
+    deletion_purge_sweep(store)
+    gen, visible = mf.fold(store.base_dir)
+    assert visible == set()
+    assert _job_count(spark, store.compact) == 0
+    assert mf.fold(store.base_dir) == (gen, set())
+    assert not reopened()._probe_unknown_streams
 
 
 def test_manifest_write_gen_collision_returns_false_and_publish_retries(

@@ -35,7 +35,7 @@ def test_metered_size_formula(headers, body):
     assert r.metered_size() == expected
 
 
-@given(seq=st.integers(min_value=0, max_value=2**63 - 1))
+@given(seq=st.integers(min_value=0, max_value=2**64 - 1))
 def test_trim_payload_roundtrip(seq):
     """u64 BE payload roundtrip (command.rs:186-194 proptest)."""
     r = trim_record(seq)

@@ -836,6 +836,11 @@ def test_attach_views_empty_store_upgrades_on_first_append(store, spark):
     store.append(BASIN, STREAM, recs(2, start=3))
     assert spark.sql("SELECT count(*) AS c FROM av_records").first().c == 5
     assert spark.sql("SELECT max(next_seq_num) AS t FROM av_tails").first().t == 5
+    # a u64::MAX trim (the terminal trim of the empty-stream sweep)
+    # clamps to its own seq + 1 and hides the whole stream
+    store.trim(BASIN, STREAM, 2**64 - 1)
+    assert spark.sql("SELECT count(*) AS c FROM av_visible").first().c == 0
+    assert spark.sql("SELECT max(next_seq_num) AS t FROM av_tails").first().t == 6
 
 
 # --- append-session scenarios (lite/tests/backend/data_plane/append.rs) -----

@@ -165,6 +165,7 @@ def _command_fixture(store):
     store.trim(BASIN, "s1", 7)  # 9 → trim_point 7
     store.append(BASIN, "s1", _recs(2, start=8))  # 10-11
     store.fence(BASIN, "s1", "tok-B")  # 12
+    store.trim(BASIN, "s1", 2**64 - 1)  # 13 → u64::MAX clamps to 14
 
 
 def test_stateful_commands_stream_equals_batch(spark, store, tmp_path):
@@ -205,6 +206,7 @@ def test_stateful_commands_stream_equals_batch(spark, store, tmp_path):
     # state is as-of each record: seq 6 predates the trim → visible there
     assert by_seq[6] == ("tok-A", 0, True)
     assert by_seq[12] == ("tok-B", 7, True)
+    assert by_seq[13] == ("tok-B", 14, False)
 
 
 def test_stateful_commands_state_carries_across_batches(spark, store):
