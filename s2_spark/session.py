@@ -51,6 +51,14 @@ def get_spark(
         # classes, so at 100 the LRU evicts every class before its plan
         # runs again and each repeat re-runs Janino and the JIT on it.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # an ordered limit(k) at or below this plans TakeOrderedAndProject,
+        # whose per-task priority queue allocates 2k slots up front: with
+        # Spark's unbounded default a limit of 10**9 throws
+        # OutOfMemoryError on any heap. Above it Spark sorts and collects
+        # the limit instead. Far above every limit the engine plans (the
+        # registry's at most 500, the unary read cap of 1000), whose
+        # plans keep the top-k operator.
+        .config("spark.sql.execution.topKSortFallbackThreshold", "1000000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

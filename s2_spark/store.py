@@ -987,7 +987,6 @@ class StreamStore:
         # durable commit — one parquet file per append batch
         bkt = self._bucket_of(basin, stream) if self.bucket_count else None
         self._staged_commit(lambda stage: self._write_batch_file(stage, rows, bkt))
-        self._invalidate_records()
 
         if bkt is not None:
             # the follow broadcast serves what a storage read returns,
@@ -1042,30 +1041,33 @@ class StreamStore:
         os.makedirs(os.path.dirname(path), exist_ok=True)
         pq.write_table(table, path, compression="snappy")
 
-    def _staged_append_write(
-        self, df: DataFrame, partition_cols, timings: dict | None = None
-    ) -> None:
-        """Land a bulk batch's parquet into ``base_dir``: the Spark
-        write of :meth:`_staged_commit`."""
+    def _spark_write(self, df: DataFrame):
+        """The Spark ``write(stage)`` of :meth:`_staged_commit` for
+        ``df``: one parquet write job, ``bucket=N`` subdirectories in
+        the bucketed layout (``df`` then carries the ``bucket``
+        column)."""
         writer = df.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        self._staged_commit(
-            lambda stage: writer.parquet(self._mf_backend.spark_path(stage)),
-            timings,
-        )
+        if self.bucket_count:
+            writer = writer.partitionBy("bucket")
+        return lambda stage: writer.parquet(self._mf_backend.spark_path(stage))
 
-    def _staged_commit(self, write, timings: dict | None = None) -> None:
-        """Commit an append batch: stage its parquet in a PRIVATE dir,
-        move the part files into ``base_dir``, then publish ONE
-        generation that adds them. ``write(stage)`` produces the part
-        files under ``stage`` — a Spark job for :meth:`bulk_append`,
+    def _staged_commit(
+        self, write, consumed: frozenset = frozenset(), timings: dict | None = None
+    ) -> None:
+        """THE commit path of every write into the store — a unary
+        append, a :meth:`bulk_append` and each rewrite
+        (:meth:`_rewrite`): stage the parquet in a PRIVATE dir, move
+        its part files into ``base_dir``, then publish ONE generation
+        that adds them and removes ``consumed`` (the snapshot a rewrite
+        read; empty for an append). ``write(stage)`` produces the part
+        files under ``stage`` — a Spark job (:meth:`_spark_write`) or
         one driver-side pyarrow file for a unary append
         (:meth:`_write_batch_file`).
 
-        Each batch stages under its own ``_stage-{pid}-{uuid}`` dir
-        beside the data (underscore prefix → invisible to every
-        listing), never Hadoop's shared committer root: with
+        Each commit stages under its own ``_stage-{pid}-{uuid}``
+        (``_compact-stage-…`` for a rewrite) dir beside the data
+        (underscore prefix → invisible to every listing), never
+        Hadoop's shared committer root: with
         ``mode("append").parquet(base_dir)`` every concurrent job
         stages under the SAME ``{base_dir}/_temporary/0``, and one
         job's commit/cleanup deletes it recursively — so two appends
@@ -1074,17 +1076,36 @@ class StreamStore:
         other's durable commit (found live by the multi-stream
         linearizability soak, r12).
 
+        A part whose footer reports 0 rows is dropped (Spark writes one
+        for an empty output; published, it would make the next
+        compaction rewrite it and a reopened store probe for state), so
+        a commit with nothing to add and nothing consumed publishes
+        nothing. A part whose name is already live raises
+        ``RuntimeError``: UUID part names make that structurally
+        impossible, and the move would silently replace acked records.
+
         The moved files become visible only at the generation publish
-        that follows the move loop, so the batch commits ATOMICALLY: a
-        crash anywhere before the publish leaves orphaned (invisible)
-        files for :meth:`vacuum`, a crash after it the whole batch."""
+        that follows the move loop, so the commit is ATOMIC: a crash
+        anywhere before the publish leaves orphaned (invisible) files
+        for :meth:`vacuum`, a crash after it the whole batch. A rewrite
+        publishes with ``require_visible=True``; on
+        :class:`~s2_spark.manifest.PublishConflict` (a racing rewrite
+        delisted a consumed file) its never-published files are
+        deleted before the conflict propagates. The records snapshot
+        is invalidated before returning, i.e. before the caller
+        advances stream state (:meth:`_st_snapshot`)."""
         import uuid
 
+        import pyarrow.parquet as pq
+
+        from s2_spark.manifest import PublishConflict
+
         bk = self._mf_backend
+        prefix = "_compact-stage-" if consumed else "_stage-"
         stage = os.path.join(
-            self.base_dir, f"_stage-{os.getpid()}-{uuid.uuid4().hex}"
+            self.base_dir, f"{prefix}{os.getpid()}-{uuid.uuid4().hex}"
         )
-        renamed: list[str] = []
+        added: list[str] = []
         _t = time.perf_counter
         try:
             # the stage is written THROUGH the backend location
@@ -1101,15 +1122,34 @@ class StreamStore:
             for rel, _mt in bk.walk_files(stage):
                 if not rel.endswith(".parquet"):
                     continue
-                bk.finalize_data(
-                    os.path.join(stage, rel),
-                    os.path.join(self.base_dir, rel),
-                )
-                renamed.append(rel)
-            if renamed:
-                self._manifest_publish(add=renamed)
+                src = os.path.join(stage, rel)
+                if pq.read_metadata(bk.spark_path(src)).num_rows == 0:
+                    continue
+                dst = os.path.join(self.base_dir, rel)
+                if bk.exists(dst):
+                    # a RuntimeError, not assert: python -O must not
+                    # strip the guard
+                    raise RuntimeError(
+                        f"staged part name collides with a live file: {dst}"
+                    )
+                bk.finalize_data(src, dst)
+                added.append(rel)
+            if added or consumed:
+                try:
+                    self._manifest_publish(
+                        add=added,
+                        remove=sorted(consumed),
+                        require_visible=bool(consumed),
+                    )
+                except PublishConflict:
+                    # never published → invisible to every reader: safe
+                    # to delete rather than leave vacuum-aged orphans
+                    for rel in added:
+                        bk.delete(os.path.join(self.base_dir, rel))
+                    raise
             if timings is not None:
                 timings["publish_sec"] = round(_t() - _t0, 3)
+            self._invalidate_records()
         finally:
             bk.remove_tree(stage)
 
@@ -1225,6 +1265,8 @@ class StreamStore:
         )
         if timings is not None:
             timings["admission_sec"] = round(time.perf_counter() - _t0, 3)
+        if not cstats:
+            return  # an empty batch: nothing to admit, write or publish
         _t0 = time.perf_counter()
         # driver-side per-stream rollup of the chunk stats (tiny:
         # rows/width entries) — admission decisions use stream totals
@@ -1321,7 +1363,7 @@ class StreamStore:
                 )
             offsets = _lit_rows_df(
                 self.spark,
-                off_rows or [("", "", 0, 0, 0, "client-prefer", False, arrival)],
+                off_rows,
                 [("basin", "string"), ("stream", "string"), ("_chunk", "long"),
                  ("seq_off", "long"), ("ts_floor", "long"),
                  ("ts_mode", "string"), ("ts_uncapped", "boolean"),
@@ -1366,12 +1408,9 @@ class StreamStore:
                         % self.bucket_count
                     ).cast("int"),
                 )
-                self._staged_append_write(out, ["bucket"], timings=timings)
-            else:
-                self._staged_append_write(out, None, timings=timings)
+            self._staged_commit(self._spark_write(out), timings=timings)
             if timings is not None:
                 timings["write_sec"] = round(time.perf_counter() - _t0, 3)
-            self._invalidate_records()
             _t0 = time.perf_counter()
             # advance hot state from the up-front stats — pure driver math,
             # no second scan. Per stream the final last_ts is
@@ -1983,82 +2022,24 @@ class StreamStore:
     def _rewrite(self, df: DataFrame, consumed: frozenset) -> None:
         """Replace ``consumed`` — the visible relpaths of the generation
         snapshot ``df`` was built from (:meth:`_records_snapshot`) —
-        with ``df``'s output: stage the output, move its part files into
-        the data layout under fresh (UUID) names, then COMMIT by
-        publishing one generation that adds them and removes exactly
-        the snapshot it read. An empty snapshot is no work: nothing is
-        written and nothing published; 0-row output parts are dropped,
-        so a rewrite to no rows publishes a remove-only generation.
+        with ``df``'s output, committed through :meth:`_staged_commit`:
+        one generation adds the output's parts (0-row parts dropped, so
+        a rewrite to no rows publishes a remove-only generation) and
+        removes exactly the snapshot it read. An empty snapshot is no
+        work: nothing is written and nothing published.
 
         Consumed files stay on disk (in-flight readers pinned to older
-        generations keep reading them) until :meth:`vacuum`, and the
-        publish is the single atomic commit point — a crash anywhere
-        before it leaves only orphaned invisible files, a crash after
-        it a fully committed rewrite. Concurrent appends publish their
-        own generations in between; their files are not in the
-        consumed set and survive untouched. A concurrent REWRITE
-        (another process compacting the same directory) is detected at
-        the publish: ``require_visible=True`` raises
-        :class:`~s2_spark.manifest.PublishConflict` if any consumed
-        file was already delisted by the racing rewrite, and this
-        rewrite's never-published output files are deleted before the
-        conflict propagates (the caller re-plans from the new
-        generation)."""
-        import uuid
-
-        import pyarrow.parquet as pq
-
-        from s2_spark.manifest import PublishConflict
-
+        generations keep reading them) until :meth:`vacuum`. Concurrent
+        appends publish their own generations in between; their files
+        are not in the consumed set and survive untouched. A concurrent
+        REWRITE (another process compacting the same directory)
+        surfaces as :class:`~s2_spark.manifest.PublishConflict` and the
+        caller re-plans from the new generation; in-process rewrites
+        serialize on ``_rewrite_mu``."""
         if not consumed:
             return
-        bk = self._mf_backend
         with self._rewrite_mu:
-            stage = os.path.join(
-                self.base_dir, f"_compact-stage-{os.getpid()}-{uuid.uuid4().hex}"
-            )
-            writer = df.write.mode("overwrite")
-            if self.bucket_count:
-                writer = writer.partitionBy("bucket")
-            added: list[str] = []
-            try:
-                writer.parquet(bk.spark_path(stage))
-                for rel, _mt in bk.walk_files(stage):
-                    if not rel.endswith(".parquet"):
-                        continue
-                    # Spark writes a 0-row part for an empty output;
-                    # published, it would make the next compaction
-                    # rewrite it and a reopened store probe for state
-                    src = bk.spark_path(os.path.join(stage, rel))
-                    if pq.read_metadata(src).num_rows == 0:
-                        continue
-                    dst = os.path.join(self.base_dir, rel)
-                    if bk.exists(dst):
-                        # UUID part names make this structurally
-                        # impossible; clobbering a live file silently
-                        # would be acked-data loss, so fail loudly (a
-                        # RuntimeError, not assert — python -O must not
-                        # strip the guard)
-                        raise RuntimeError(
-                            f"compacted part name collides with a live "
-                            f"file: {dst}"
-                        )
-                    bk.finalize_data(os.path.join(stage, rel), dst)
-                    added.append(rel)
-                try:
-                    self._manifest_publish(
-                        add=added, remove=sorted(consumed), require_visible=True
-                    )
-                except PublishConflict:
-                    # never published → invisible to every reader: safe
-                    # to delete the staged-in files rather than leave
-                    # them as vacuum-aged orphans
-                    for rel in added:
-                        bk.delete(os.path.join(self.base_dir, rel))
-                    raise
-            finally:
-                bk.remove_tree(stage)
-            self._invalidate_records()
+            self._staged_commit(self._spark_write(df), consumed)
 
     def apply_trim_and_retention(
         self, drop_streams: list[tuple[str, str]] | None = None

@@ -177,22 +177,17 @@ def _file_tails(
 
 def _tails(
     path: str,
-    cache: dict[str, tuple[tuple, dict[str, int]]] | None = None,
+    cache: dict[str, dict[str, int]] | None = None,
     stats: dict | None = None,
     backend=None,
 ) -> dict[str, int]:
     """Per-stream next_seq for the whole store — footer statistics only
     (no data pages for single-stream row groups), incremental via
-    ``cache``: parquet files are immutable once written, so each trigger
-    pays only for files that appeared since the last one. Per-trigger
-    cost is O(new files), independent of total store size.
-
-    On a non-local backend the LOCAL ``path`` may not even exist on
-    this host, so only a local store short-cuts a missing directory to
-    an empty result."""
-    local = backend is None or getattr(backend, "is_local", False)
-    if local and not os.path.isdir(path):
-        return {}
+    ``cache``, keyed by the file's path: a visible path names an
+    immutable, UUID-named file (every commit refuses a part name that
+    is already live), so each trigger pays only for files that appeared
+    since the last one. Per-trigger cost is O(new files), independent
+    of total store size."""
     tails: dict[str, int] = {}
     pairs = _listed_pairs(path, backend)
     if cache is not None:
@@ -203,27 +198,15 @@ def _tails(
         for gone in [fp for fp in cache if fp not in live]:
             del cache[gone]
     for logical, fp in pairs:
-        try:
-            st = os.stat(fp)
-            key = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            if backend is None:
-                continue  # raced a local delete
-            # spark path not a local file (true remote store): key the
-            # cache on the object's backend timestamp instead
-            mt = backend.mtime_ms(logical)
-            if mt is None:
-                continue  # raced a backend delete
-            key = (mt, -1)
-        if cache is not None and fp in cache and cache[fp][0] == key:
-            file_tails = cache[fp][1]
+        if cache is not None and fp in cache:
+            file_tails = cache[fp]
         else:
             try:
                 file_tails = _file_tails(fp, stats, backend, logical)
             except (OSError, ValueError):
                 continue
             if cache is not None:
-                cache[fp] = (key, file_tails)
+                cache[fp] = file_tails
         for k, v in file_tails.items():
             if v > tails.get(k, 0):
                 tails[k] = v
@@ -475,7 +458,7 @@ class S2StreamReader(DataSourceStreamReader):
         self._bytes_cap: dict[str, int] = {}  # key -> resolved final cap
         # driver-side per-file tails cache: each trigger's latestOffset
         # only inspects files that appeared since the previous trigger
-        self._tails_cache: dict[str, tuple[tuple, dict[str, int]]] = {}
+        self._tails_cache: dict[str, dict[str, int]] = {}
         self.tails_stats: dict = {}
         # per-stream max tail observed WITHIN the current generation
         # (the monotone guard against transient tails-scan regressions)

@@ -33,6 +33,13 @@ from s2_spark.store import StreamStore
 B = "test-basin"
 
 
+_BULK_SCHEMA = (
+    "basin string, stream string, timestamp long, "
+    "headers array<struct<name binary, value binary>>, body binary, "
+    "ingest_order long"
+)
+
+
 def _mkstore(spark, tmp_path, clockbox=None, **kw):
     clock = (lambda: clockbox["ms"]) if clockbox else None
     cat = Catalog(spark, clock=clock)
@@ -395,7 +402,8 @@ def test_empty_store_rewrites_run_no_job_and_publish_nothing(
     """A rewrite consumes the generation snapshot its plan was built
     from, so on a store with no visible file, compaction, trim/retention
     and the deletion purge are no work: no Spark job and no generation.
-    A rewrite of a non-empty snapshot to no rows (a purge of the only
+    An empty ``bulk_append`` stops after its admission aggregation. A
+    rewrite of a non-empty snapshot to no rows (a purge of the only
     stream) publishes no file either. A published generation holding
     one 0-row file would make every later compaction rewrite it and
     every store reopened on the directory pay a recovery job on the
@@ -407,6 +415,8 @@ def test_empty_store_rewrites_run_no_job_and_publish_nothing(
     assert _job_count(spark, store.compact) == 0
     assert _job_count(spark, store.apply_trim_and_retention) == 0
     assert _job_count(spark, lambda: deletion_purge_sweep(store)) == 0
+    empty = spark.createDataFrame([], _BULK_SCHEMA)
+    assert _job_count(spark, lambda: store.bulk_append(empty)) == 1
     assert mf.fold(store.base_dir) == (0, set())
 
     def reopened():
@@ -424,6 +434,25 @@ def test_empty_store_rewrites_run_no_job_and_publish_nothing(
     assert _job_count(spark, store.compact) == 0
     assert mf.fold(store.base_dir) == (gen, set())
     assert not reopened()._probe_unknown_streams
+
+
+def test_append_part_name_collision_is_refused(spark, tmp_path, monkeypatch):
+    """Every commit refuses to move a staged part onto a live file: the
+    move would replace acked records. Pinning ``uuid.uuid4`` makes the
+    third append's part name that of the second append's file; the
+    append raises, publishes nothing and advances no state."""
+    store = _mkstore(spark, tmp_path)
+    store.append(B, "s1", [Record(body=b"a")])
+    fixed = uuid.uuid4()
+    monkeypatch.setattr(uuid, "uuid4", lambda: fixed)
+    store.append(B, "s1", [Record(body=b"b")])
+    gen = mf.fold(store.base_dir)
+    with pytest.raises(RuntimeError, match="collides with a live file"):
+        store.append(B, "s1", [Record(body=b"c")])
+    monkeypatch.undo()
+    assert mf.fold(store.base_dir) == gen
+    assert store.check_tail(B, "s1")[0] == 2
+    assert _rows(store) == [(0, b"a"), (1, b"b")]
 
 
 def test_manifest_write_gen_collision_returns_false_and_publish_retries(

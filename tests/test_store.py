@@ -144,6 +144,23 @@ def test_read_count_limit(store):
     assert [r.seq_num for r in rows] == [10, 11, 12, 13, 14]
 
 
+def test_read_huge_count_limit_plans_no_topk_queue(store):
+    """An ordered ``limit(k)`` planned as TakeOrderedAndProject
+    allocates 2k queue slots per task up front, so a count of 10**9
+    must plan a sort and a collect limit instead. Counts up to the
+    unary read cap keep the top-k plan."""
+    store.append(BASIN, STREAM, recs(2))
+
+    def plan(count):
+        df = store.read(BASIN, STREAM, limit=ReadLimit(count=count))
+        return df, df._jdf.queryExecution().executedPlan().toString()
+
+    assert "TakeOrderedAndProject" in plan(1000)[1]
+    df, huge = plan(10**9)
+    assert "TakeOrderedAndProject" not in huge
+    assert [r.seq_num for r in df.collect()] == [0, 1]
+
+
 def test_read_bytes_limit_exact_and_overflow(store):
     store.append(BASIN, STREAM, recs(10))  # each body "rec-N" = 5 bytes → metered 13
     per = 8 + len(b"rec-0")
