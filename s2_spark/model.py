@@ -41,24 +41,29 @@ RECORD_SCHEMA = T.StructType(
 
 
 @lru_cache(maxsize=None)
-def arrow_record_schema():
+def arrow_record_schema(nullable: bool = False):
     """``RECORD_SCHEMA`` as a ``pyarrow.Schema`` with the same
     nullability and the ``list<element: struct<name, value>>`` header
     layout Spark's parquet writer produces, so a record file written on
     the driver is indistinguishable from one a Spark job wrote (the
-    Spark row metadata rides along for schema-less Spark readers)."""
+    Spark row metadata rides along for schema-less Spark readers).
+
+    ``nullable=True`` makes every field nullable, nested ones included:
+    the schema of a file Spark rewrote from a scan (a file source reads
+    every column as nullable), and the one schema that every record
+    file in the store casts to."""
     import pyarrow as pa
 
     header = pa.struct(
-        [pa.field("name", pa.binary(), False), pa.field("value", pa.binary(), False)]
+        [pa.field("name", pa.binary(), nullable), pa.field("value", pa.binary(), nullable)]
     )
     return pa.schema(
         [
-            pa.field("basin", pa.string(), False),
-            pa.field("stream", pa.string(), False),
-            pa.field("seq_num", pa.int64(), False),
-            pa.field("timestamp", pa.int64(), False),
-            pa.field("headers", pa.list_(pa.field("element", header, True)), False),
+            pa.field("basin", pa.string(), nullable),
+            pa.field("stream", pa.string(), nullable),
+            pa.field("seq_num", pa.int64(), nullable),
+            pa.field("timestamp", pa.int64(), nullable),
+            pa.field("headers", pa.list_(pa.field("element", header, True)), nullable),
             pa.field("body", pa.binary(), True),
         ],
         metadata={"org.apache.spark.sql.parquet.row.metadata": RECORD_SCHEMA.json()},

@@ -190,6 +190,12 @@ _BucketedRecordRow = Row(*RECORD_SCHEMA.names, "bucket")
 #: in-memory follow broadcast (lite/src/backend/mod.rs:27)
 FOLLOWER_MAX_LAG = 25
 
+#: the largest snapshot, in uncompressed parquet bytes summed from the
+#: consumed files' row-group footers, that :meth:`StreamStore.compact`
+#: merges on the driver with pyarrow; a larger one runs the Spark plan,
+#: the only writer that can compact a store larger than driver memory
+DRIVER_COMPACT_MAX_BYTES = 64 * MAX_BATCH_METERED_BYTES
+
 
 @dataclass
 class _StreamState:
@@ -1060,9 +1066,10 @@ class StreamStore:
         its part files into ``base_dir``, then publish ONE generation
         that adds them and removes ``consumed`` (the snapshot a rewrite
         read; empty for an append). ``write(stage)`` produces the part
-        files under ``stage`` — a Spark job (:meth:`_spark_write`) or
-        one driver-side pyarrow file for a unary append
-        (:meth:`_write_batch_file`).
+        files under ``stage`` — a Spark job (:meth:`_spark_write`), or
+        driver-side pyarrow files: one for a unary append
+        (:meth:`_write_batch_file`), one per directory for a small
+        compaction (:meth:`_arrow_merge_write`).
 
         Each commit stages under its own ``_stage-{pid}-{uuid}``
         (``_compact-stage-…`` for a rewrite) dir beside the data
@@ -1974,27 +1981,92 @@ class StreamStore:
                 rows.append(r)
         return rows
 
-    def compact(self, files_per_partition_hint: int | None = None) -> None:
+    def compact(self) -> None:
         """Rewrite storage clustered by (basin, stream, seq_num) — the
         OPTIMIZE/compaction analogue of SlateDB's background compaction.
         Appends produce one small file per batch; compaction folds them
         into few files whose row-group (min, max) on the key columns are
-        disjoint, so range reads prune precisely."""
+        disjoint, so range reads prune precisely.
 
-        def build() -> tuple[DataFrame, frozenset]:
+        Two writers, chosen by the snapshot's size: one that fits
+        :data:`DRIVER_COMPACT_MAX_BYTES` is merged on the driver
+        (:meth:`_arrow_merge_write`, no Spark job — SlateDB likewise
+        merges L0 SSTs inside the server process); a larger one is a
+        Spark range-repartition + sort + write. Both commit through
+        :meth:`_rewrite` and produce the same records in the same
+        order."""
+
+        def build() -> tuple:
+            _, files = self._manifest_current()
+            if self._snapshot_fits_driver(files):
+                return self._arrow_merge_write(files), files
             df, files = self._records_snapshot()
-            n = files_per_partition_hint or max(
-                1, self.spark.sparkContext.defaultParallelism // 4
-            )
-            return df.repartitionByRange(
+            n = max(1, self.spark.sparkContext.defaultParallelism // 4)
+            # a partitioned write sorts each task by ``bucket`` unless
+            # the rows already are, and that sort does not keep the key
+            # order: lead with it so the write keeps this sort
+            lead = ["bucket"] if self.bucket_count else []
+            plan = df.repartitionByRange(
                 n, "basin", "stream", "seq_num"
-            ).sortWithinPartitions("basin", "stream", "seq_num"), files
+            ).sortWithinPartitions(*lead, "basin", "stream", "seq_num")
+            return self._spark_write(plan), files
 
         self._rewrite_replanned(build)
 
+    def _snapshot_fits_driver(self, files: frozenset) -> bool:
+        """True if the uncompressed size of ``files`` (row-group
+        ``total_byte_size`` from each footer, summed until it passes
+        the bound) is at most :data:`DRIVER_COMPACT_MAX_BYTES`."""
+        import pyarrow.parquet as pq
+
+        bk = self._mf_backend
+        total = 0
+        for rel in files:
+            md = pq.read_metadata(bk.spark_path(os.path.join(self.base_dir, rel)))
+            total += sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+            if total > DRIVER_COMPACT_MAX_BYTES:
+                return False
+        return True
+
+    def _arrow_merge_write(self, files: frozenset):
+        """The driver-side ``write(stage)`` of a compaction: per
+        directory (``""`` flat, ``bucket=N`` bucketed), read every
+        consumed file, sort the rows by (basin, stream, seq_num) — Arrow
+        orders strings by bytes, as Spark's sort does — and write them
+        as ONE snappy part file with the parquet schema of a Spark
+        rewrite (every field nullable)."""
+        import uuid
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        bk = self._mf_backend
+        by_dir: dict[str, list[str]] = defaultdict(list)
+        for rel in sorted(files):
+            by_dir[os.path.dirname(rel)].append(rel)
+        # Spark-written parts are all-nullable, driver-written ones keep
+        # RECORD_SCHEMA's non-null fields: both cast to the nullable form
+        schema = arrow_record_schema(nullable=True)
+        order = [("basin", "ascending"), ("stream", "ascending"), ("seq_num", "ascending")]
+
+        def write(stage: str) -> None:
+            for d, rels in by_dir.items():
+                table = pa.concat_tables(
+                    pq.read_table(bk.spark_path(os.path.join(self.base_dir, rel)), schema=schema)
+                    for rel in rels
+                ).sort_by(order)
+                path = bk.spark_path(
+                    os.path.join(stage, d, f"part-00000-{uuid.uuid4()}.c000.snappy.parquet")
+                )
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                pq.write_table(table, path, compression="snappy")
+
+        return write
+
     def _rewrite_replanned(self, build, attempts: int = 8) -> None:
-        """Run ``self._rewrite(*build())`` — ``build`` returns the plan
-        and the snapshot it reads — re-planning on
+        """Run ``self._rewrite(*build())`` — ``build`` returns the
+        ``write(stage)`` of :meth:`_staged_commit` and the snapshot it
+        reads — re-planning on
         :class:`~s2_spark.manifest.PublishConflict`: the conflict means
         a racing rewrite in ANOTHER process delisted files this plan
         consumed (in-process rewrites serialize on the rewrite latch),
@@ -2019,14 +2091,16 @@ class StreamStore:
                     raise
                 self.manifest_refresh()
 
-    def _rewrite(self, df: DataFrame, consumed: frozenset) -> None:
+    def _rewrite(self, write, consumed: frozenset) -> None:
         """Replace ``consumed`` — the visible relpaths of the generation
-        snapshot ``df`` was built from (:meth:`_records_snapshot`) —
-        with ``df``'s output, committed through :meth:`_staged_commit`:
-        one generation adds the output's parts (0-row parts dropped, so
-        a rewrite to no rows publishes a remove-only generation) and
-        removes exactly the snapshot it read. An empty snapshot is no
-        work: nothing is written and nothing published.
+        snapshot ``write`` reads — with ``write(stage)``'s output (a
+        Spark plan's :meth:`_spark_write` or the driver's
+        :meth:`_arrow_merge_write`), committed through
+        :meth:`_staged_commit`: one generation adds the output's parts
+        (0-row parts dropped, so a rewrite to no rows publishes a
+        remove-only generation) and removes exactly the snapshot it
+        read. An empty snapshot is no work: nothing is written and
+        nothing published.
 
         Consumed files stay on disk (in-flight readers pinned to older
         generations keep reading them) until :meth:`vacuum`. Concurrent
@@ -2039,7 +2113,7 @@ class StreamStore:
         if not consumed:
             return
         with self._rewrite_mu:
-            self._staged_commit(self._spark_write(df), consumed)
+            self._staged_commit(write, consumed)
 
     def apply_trim_and_retention(
         self, drop_streams: list[tuple[str, str]] | None = None
@@ -2064,8 +2138,9 @@ class StreamStore:
         purge path for DELETED streams, whose names must become
         recreatable as fresh streams starting at seq 0.
         """
-        def build() -> tuple[DataFrame, frozenset]:
-            return self._build_trim_retention_plan(drop_streams)
+        def build() -> tuple:
+            plan, files = self._build_trim_retention_plan(drop_streams)
+            return self._spark_write(plan), files
 
         self._rewrite_replanned(build)
         if drop_streams:

@@ -369,7 +369,7 @@ def test_compact_preserves_data_and_reduces_files(store, tmp_path):
         1 for _, _, fs in os.walk(store.base_dir) for f in fs if f.endswith(".parquet")
     )
     before = [(r.seq_num, bytes(r.body)) for r in store.read(BASIN, "s1").collect()]
-    store.compact(files_per_partition_hint=1)
+    store.compact()
     # delisted originals coexist with the compacted copy until vacuum;
     # the physical fold this test counts completes at GC
     store.vacuum(grace_ms=0)

@@ -26,6 +26,7 @@ import uuid
 import pytest
 
 from s2_spark import manifest as mf
+from s2_spark import store as store_mod
 from s2_spark.catalog import BasinConfig, Catalog
 from s2_spark.model import Record, trim_record
 from s2_spark.store import StreamStore
@@ -134,19 +135,39 @@ def test_manifest_append_during_compaction_survives(spark, tmp_path, monkeypatch
     assert _rows(store) == [(i, f"p{i}".encode()) for i in range(4)] + [(4, b"racer")]
 
 
+@pytest.mark.parametrize("writer", ["driver", "spark"])
 @pytest.mark.parametrize("crash_at", ["stage_write", "rename", "publish"])
 def test_manifest_compaction_crash_points_leave_store_intact(
-    spark, tmp_path, monkeypatch, crash_at
+    spark, tmp_path, monkeypatch, crash_at, writer
 ):
     """A crash ANYWHERE before the generation publish leaves only
     orphaned invisible files; the store (hot or cold-reopened) serves
-    exactly the pre-compaction rows, and vacuum sweeps the orphans."""
+    exactly the pre-compaction rows, and vacuum sweeps the orphans.
+    Run for both compaction writers: the driver-side pyarrow merge and
+    the Spark plan (forced by a zero driver bound)."""
+
+    def force_writer():
+        if writer == "spark":
+            monkeypatch.setattr(store_mod, "DRIVER_COMPACT_MAX_BYTES", 0)
+
+    force_writer()
     store = _mkstore(spark, tmp_path)
     for i in range(4):
         store.append(B, "s1", [Record(body=f"c{i}".encode())])
     want = [(i, f"c{i}".encode()) for i in range(4)]
 
-    if crash_at == "stage_write":
+    if crash_at == "stage_write" and writer == "driver":
+        import pyarrow.parquet as pq
+
+        real_write = pq.write_table
+
+        def boom(table, where, *a, **kw):
+            if "_compact-stage-" in str(where):
+                raise RuntimeError("injected stage-write crash")
+            return real_write(table, where, *a, **kw)
+
+        monkeypatch.setattr(pq, "write_table", boom)
+    elif crash_at == "stage_write":
         import pyspark.sql.readwriter as rw
 
         real = rw.DataFrameWriter.parquet
@@ -175,6 +196,7 @@ def test_manifest_compaction_crash_points_leave_store_intact(
     with pytest.raises(RuntimeError, match="injected"):
         store.compact()
     monkeypatch.undo()
+    force_writer()
     assert _rows(store) == want
     cold = StreamStore(spark, store.base_dir, catalog=store.catalog)
     assert _rows(cold) == want

@@ -46,7 +46,7 @@ def test_bucketed_recovery_and_compaction(bstore):
     for i in range(3):
         bstore.append(BASIN, f"s{i}", [Record(body=b"x")])
     bstore.fence(BASIN, "s0", "tok")
-    bstore.compact(1)
+    bstore.compact()
     bstore.recover_state()
     assert bstore.check_tail(BASIN, "s0")[0] == 2
     assert bstore._st(BASIN, "s0").fencing_token == "tok"

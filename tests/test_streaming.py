@@ -1016,7 +1016,7 @@ def test_tails_cache_evicts_compacted_files(spark, store):
     assert tails[f"{BASIN}{SEP}s1"] == 6
     assert len(cache) == len(_parquet_files(store.base_dir)) > 1
 
-    store.compact(files_per_partition_hint=1)
+    store.compact()
     tails2 = _tails(store.base_dir, cache)
     assert tails2[f"{BASIN}{SEP}s1"] == 6
     live = set(_parquet_files(store.base_dir))
