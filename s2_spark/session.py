@@ -13,6 +13,28 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# C2 inlining bound for the driver JVM: the largest bytecode size of a
+# hot method C2 inlines (JDK 17 default 325). Smaller inline trees make
+# each C2 compile cheaper, so the compile queue drains instead of running
+# behind for most of a short process. In -XX:+CITime runs of perfbench
+# `batch` (4 cores) C2 compiled for 30 s of the run's about 70 s of
+# process-tree CPU, and 2800-3500 methods ran tier-2 code while queued;
+# with the bound, 20 s and about 350. `batch` CPU per op fell and the
+# warm sf0.1 headline passes kept their wall time (CHANGES.md has the
+# pairs, and the levers tried and rejected).
+DRIVER_JAVA_OPTIONS = "-XX:FreqInlineSize=100"
+
+
+def default_driver_memory() -> str:
+    """Spark's ``spark.driver.memory`` unless ``SPARK_GRAFT_DRIVER_MEM``
+    is set: 16g, or half the host's physical memory when that is less,
+    so a default heap never outgrows the machine it runs on."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    half_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 2**20
+    return f"{min(16 * 1024, half_mib)}m"
+
 
 def get_spark(
     app_name: str = "s2_spark",
@@ -39,7 +61,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
+        # the launcher places a caller's spark.driver.extraJavaOptions
+        # after these, so both apply; only the driver JVM gets them (in
+        # local mode the executors run inside it)
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
         # fixtures write TIMESTAMP(NANOS) which Spark's vectorized reader

@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -42,6 +43,13 @@ _registered: dict[int, str] = {}
 # id(spark) to avoid one py4j round-trip per table load).
 _nanos_ready: set[int] = set()
 
+# Inferred schema of each fixture file, keyed by (path, st_mtime_ns,
+# st_size). Spark infers a parquet schema with a distributed footer job
+# on every spark.read.parquet(path); a load with the schema given runs
+# none (16 of the 74 jobs of one headline pass were such inferences). A
+# rewritten file has a new key and is inferred again.
+_schemas: dict[tuple[str, int, int], StructType] = {}
+
 
 def ensure_nanos_conf(spark: SparkSession) -> None:
     """Make ``spark`` able to read TIMESTAMP(NANOS) parquet.
@@ -60,6 +68,25 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
     _nanos_ready.add(key)
 
 
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the file's schema only the
+    first time this process loads that version of the file. A path the
+    local file system cannot stat (a remote URI, a missing file) is read
+    as given and not cached."""
+    ensure_nanos_conf(spark)
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _schemas[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame.
 
@@ -71,8 +98,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP_NTZ — passed through). Callers branch on the actual
     dtype, never on an assumed encoding.
     """
-    ensure_nanos_conf(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
 
@@ -85,8 +111,7 @@ def t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     that range-filter on time and want the predicate pushed down to the
     parquet scan (a filter on the raw i64 ns column prunes row groups;
     one on ``timestamp_micros(...)`` cannot)."""
-    ensure_nanos_conf(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_views(spark: SparkSession, sf_dir: str) -> None:
@@ -98,5 +123,5 @@ def load_views(spark: SparkSession, sf_dir: str) -> None:
     for name in TABLE_NAMES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
+            _read(spark, path).createOrReplaceTempView(name)
     _registered[key] = sf_dir
